@@ -11,7 +11,9 @@ shape (FIXTURES.md §5):
   a catalog is configured; parquet append-dir otherwise — identical module
   interface);
 - resume = ``left_anti`` join of the work list against units with
-  ``status='success'`` (the anti-membership filters of cloud.py:531-542);
+  ``status='success'`` (the anti-membership filters of cloud.py:531-542),
+  or the same unit ids collected to the driver (``completed_ids``) when the
+  caller filters its work list itself;
 - ``failed_permanent`` units are excluded from retries forever
   (cloud.py:608-610: a 404 is permanent);
 - metrics per stage = row-count aggregation over the same table (the
@@ -22,7 +24,6 @@ from __future__ import annotations
 
 import os
 import time
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -59,9 +60,7 @@ class CheckpointTable:
         )
         df.coalesce(1).write.mode("append").parquet(self.path)
 
-    def completed_units(self, stage: str) -> DataFrame:
-        """unit_ids already succeeded OR permanently failed — never re-run
-        (cloud.py:531-542)."""
+    def _completed(self, stage: str) -> DataFrame:
         return (
             self.read()
             .filter(
@@ -69,8 +68,19 @@ class CheckpointTable:
                 & F.col("status").isin(SUCCESS, FAILED_PERMANENT)
             )
             .select("unit_id")
-            .distinct()
         )
+
+    def completed_units(self, stage: str) -> DataFrame:
+        """unit_ids already succeeded OR permanently failed — never re-run
+        (cloud.py:531-542)."""
+        return self._completed(stage).distinct()
+
+    def completed_ids(self, stage: str) -> set[int]:
+        """:meth:`completed_units` collected to the driver: one small job
+        over the O(units) table, and none before the first :meth:`log`."""
+        if not os.path.exists(self.path):
+            return set()
+        return {r.unit_id for r in self._completed(stage).collect()}
 
     def pending(self, work: DataFrame, stage: str, unit_col: str) -> DataFrame:
         """Resume filter: anti-join the work list against completed units."""
@@ -87,33 +97,3 @@ class CheckpointTable:
             F.sum("rows_in").alias("rows_in"),
             F.sum("rows_out").alias("rows_out"),
         )
-
-
-def run_stage(
-    ckpt: CheckpointTable,
-    stage: str,
-    work: DataFrame,
-    unit_col: str,
-    process: "callable",
-    run_id: str | None = None,
-) -> DataFrame | None:
-    """Execute ``process(pending_work) -> (result_df, rows_in, rows_out)``
-    over not-yet-completed units, then log one success row per unit.
-
-    Returns the result DataFrame (None when nothing is pending — the
-    skip-existing fast path of cloud.py:510-516).
-    """
-    run_id = run_id or uuid.uuid4().hex[:12]
-    pending = ckpt.pending(work, stage, unit_col)
-    unit_rows = pending.groupBy(unit_col).count().collect()
-    if not unit_rows:
-        return None
-    result, per_unit_out = process(pending)
-    ckpt.log(
-        [
-            (run_id, stage, int(r[unit_col]), 0, int(r["count"]),
-             int(per_unit_out.get(r[unit_col], 0)), SUCCESS)
-            for r in unit_rows
-        ]
-    )
-    return result

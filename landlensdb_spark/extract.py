@@ -133,7 +133,9 @@ def extract_geotag_pa(s, with_text: bool = True) -> tuple:
         d, m = _num(sa, "d"), _num(sa, "m")
         num, den = _num(sa, "n"), _num(sa, "q")
         ref = f(sa, "r").to_numpy(zero_copy_only=False)
-        dec = d + m / 60.0 + (num / den) / 3600.0
+        # a 0/0 seconds fraction is NaN: the per-coordinate fallback below
+        with np.errstate(invalid="ignore"):
+            dec = d + m / 60.0 + (num / den) / 3600.0
         return np.round(np.where(ref == neg_ref, -dec, dec), 6)
 
     dms_lat, dms_lon = _dms(dlat, "S"), _dms(dlon, "W")

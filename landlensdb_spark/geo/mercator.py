@@ -56,7 +56,9 @@ def np_merc_x(lon: np.ndarray) -> np.ndarray:
 def np_merc_y(lat: np.ndarray) -> np.ndarray:
     """numpy twin of :func:`merc_y`."""
     lat = np.asarray(lat, dtype=np.float64)
-    return R * np.log(np.tan(math.pi / 4.0 + np.radians(lat) / 2.0))
+    # log(0) at the south pole is an intended -inf; callers clip it
+    with np.errstate(divide="ignore"):
+        return R * np.log(np.tan(math.pi / 4.0 + np.radians(lat) / 2.0))
 
 
 def np_inv_merc(x: np.ndarray, y: np.ndarray) -> tuple[np.ndarray, np.ndarray]:

@@ -8,22 +8,30 @@ status cache reloaded on start, done work skipped, per-batch persistence);
 here the unit of resume is an input *bucket* (a deterministic hash range of
 urls), so a re-run after a crash:
 
-1. reads the checkpoint table, anti-joins completed buckets (zero recompute),
+1. reads the completed unit ids from the checkpoint table (no Spark job
+   before the first checkpoint exists). When they cover every bucket,
+   nothing is pending and the pages are never scanned; otherwise one
+   ``groupBy(_bucket).count()`` over the pages of incomplete buckets gives
+   both the work list and each unit's ``rows_in``,
 2. processes only pending buckets through extract -> PIP -> tile,
 3. writes results partitioned BY BUCKET with dynamic partition overwrite
    (a re-run never duplicates rows: only this attempt's bucket directories
    are replaced, so even a bucket retried after a partial write + checkpoint
-   miss lands exactly once),
+   miss lands exactly once). Each bucket's ``rows_out`` is counted by an
+   ``observe`` metric inside the write's result stage, after the
+   repartition: Spark applies result-stage accumulator updates exactly
+   once, even when tasks are retried,
 4. logs (run_id, stage, unit, rows_in, rows_out) lineage per bucket.
 
 Scale shape: buckets are hash ranges, so the work split is deterministic and
-uniform; each attempt is one Spark job over only the pending fraction; the
-checkpoint table stays tiny (O(buckets)) and the anti-join broadcasts.
+uniform; a fresh attempt costs one counting scan over the pending pages plus
+one write job, with no re-read of the output; the checkpoint table stays
+tiny (O(buckets)) and is read on the driver as a set of unit ids.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from landlensdb_spark.checkpoint import SUCCESS, CheckpointTable
@@ -52,70 +60,78 @@ def run_geo_pipeline(
     resumed run produces the identical final table with no duplicate work.
     ``bucket_expr`` overrides the default xxhash64 url bucketing with any
     deterministic int Column in [0, n_buckets) — e.g. a SQL-reproducible
-    key for cross-engine lineage verification.
+    key for cross-engine lineage verification; a page whose bucket falls
+    outside that range (or is NULL) fails the work-list scan.
+
+    The returned dict carries ``scanned_pages`` (False when the checkpoint
+    already covered every bucket, so the pages were never read) and
+    ``processed_rows_out`` (tile rows written by this attempt).
     """
     import uuid
 
     run_id = run_id or uuid.uuid4().hex[:12]
     if bucket_expr is None:
         bucket_expr = F.pmod(F.xxhash64(F.col("url")), F.lit(n_buckets))
-    bucketed = pages.withColumn("_bucket", bucket_expr.cast("int"))
-    work = bucketed.select("_bucket").distinct().withColumnRenamed("_bucket", "unit")
-    pending = [r.unit for r in ckpt.pending(work, STAGE, "unit").collect()]
+    b = bucket_expr.cast("int")
+    bucket = F.when(b.between(0, n_buckets - 1), b).otherwise(
+        F.raise_error(
+            F.concat(
+                F.lit(f"run_geo_pipeline: bucket_expr must be in [0, {n_buckets}), got "),
+                F.coalesce(b.cast("string"), F.lit("NULL")),
+            )
+        )
+    )
+    bucketed = pages.withColumn("_bucket", bucket)
+    # a resume that finds every bucket complete never touches the pages:
+    # bucket_expr is documented to stay in [0, n_buckets)
+    complete = ckpt.completed_ids(STAGE)
+    scanned = not complete.issuperset(range(n_buckets))
+    rows_in: dict[int, int] = {}
+    if scanned:
+        open_pages = bucketed
+        if complete:
+            open_pages = bucketed.filter(~F.col("_bucket").isin(sorted(complete)))
+        # one scan gives the work list and each unit's rows_in
+        rows_in = {
+            r["_bucket"]: r["count"]
+            for r in open_pages.groupBy("_bucket").count().collect()
+        }
+    pending = sorted(rows_in)
+    # fail_buckets simulates a crash: this attempt only reaches the rest
+    todo = [u for u in pending if u not in (fail_buckets or ())]
     done: list[tuple] = []
-    processed_rows = 0
-    if pending:
-        todo = sorted(pending)
-        if fail_buckets:
-            # simulate a crash: this attempt only reaches the allowed prefix
-            todo = [b for b in todo if b not in fail_buckets]
-        if todo:
-            part = bucketed.filter(F.col("_bucket").isin([int(b) for b in todo]))
-            joined = extract_pip(
-                part, polygons, keep=["url", "lang", "_bucket"]
-            )
-            tiled = assign_tiles(joined, zoom=zoom)
-            # dynamic partition overwrite: only the bucket directories in
-            # THIS write are replaced, so a bucket retried after a partial
-            # write + checkpoint miss lands exactly once (idempotent retry)
-            (
-                tiled.repartition("_bucket")
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("_bucket")
-                .parquet(out_path)
-            )
-            # per-bucket lineage: rows_in (pages) and rows_out (tile rows)
-            rows_in = {
-                r["_bucket"]: r["count"]
-                for r in part.groupBy("_bucket").count().collect()
-            }
-            rows_out = {
-                r["_bucket"]: r["count"]
-                for r in spark.read.parquet(out_path)
-                .filter(F.col("_bucket").isin([int(b) for b in todo]))
-                .groupBy("_bucket")
-                .count()
-                .collect()
-            }
-            done = [
-                (
-                    run_id,
-                    STAGE,
-                    int(b),
-                    int(b),
-                    int(rows_in.get(b, 0)),
-                    int(rows_out.get(b, 0)),
-                    SUCCESS,
-                )
-                for b in todo
-            ]
-            ckpt.log(done)
-            processed_rows = sum(rows_in.values())
+    if todo:
+        part = bucketed.filter(F.col("_bucket").isin(todo))
+        joined = extract_pip(part, polygons, keep=["url", "lang", "_bucket"])
+        tiled = assign_tiles(joined, zoom=zoom)
+        # rows_out is observed after the repartition, i.e. in the write's
+        # result stage, where retried tasks cannot count twice
+        rows_out = Observation()
+        observed = tiled.repartition("_bucket").observe(
+            rows_out,
+            *[F.count_if(F.col("_bucket") == u).alias(f"b{u}") for u in todo],
+        )
+        # dynamic partition overwrite: only the bucket directories in
+        # THIS write are replaced, so a bucket retried after a partial
+        # write + checkpoint miss lands exactly once (idempotent retry)
+        (
+            observed.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("_bucket")
+            .parquet(out_path)
+        )
+        out = rows_out.get
+        done = [
+            (run_id, STAGE, u, u, rows_in[u], int(out[f"b{u}"]), SUCCESS)
+            for u in todo
+        ]
+        ckpt.log(done)
     return {
         "run_id": run_id,
         "pending_before": len(pending),
         "processed_units": len(done),
-        "processed_rows": processed_rows,
+        "processed_rows": sum(r[4] for r in done),
         "resumed": len(pending) < n_buckets,
+        "scanned_pages": scanned,
+        "processed_rows_out": sum(r[5] for r in done),
     }
