@@ -23,28 +23,13 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    DoubleType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql import DataFrame
 
 _TEXT_RE = r'<p data-text="1">(.*?)</p>'
 _META_LAT_RE = r'<meta property="place:location:latitude" content="([^"]+)"'
 _META_LON_RE = r'<meta property="place:location:longitude" content="([^"]+)"'
 _DMS_LAT_RE = r"GPSLatitude=\((\d+),(\d+),(\d+)/(\d+)\);GPSLatitudeRef=([NS])"
 _DMS_LON_RE = r"GPSLongitude=\((\d+),(\d+),(\d+)/(\d+)\);GPSLongitudeRef=([EW])"
-
-GEOTAG_STRUCT = StructType(
-    [
-        StructField("lat", DoubleType()),
-        StructField("lon", DoubleType()),
-        StructField("text", StringType()),
-    ]
-)
 
 
 def _dms_to_decimal(g: pd.DataFrame, neg_ref: str) -> pd.Series:
@@ -164,11 +149,6 @@ def extract_geotag_arrow(html: pd.Series, with_text: bool = True) -> pd.DataFram
     if with_text:
         out["text"] = text.to_pandas()
     return pd.DataFrame(out)
-
-
-@F.pandas_udf(GEOTAG_STRUCT)
-def geotag_udf(html: pd.Series) -> pd.DataFrame:
-    return extract_geotag_arrow(html)
 
 
 def extract_geotags(

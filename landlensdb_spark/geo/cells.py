@@ -67,11 +67,6 @@ def cell_y(cell: Column | str) -> Column:
     return cell % F.lit(1 << _X_SHIFT)
 
 
-def cell_res(cell: Column | str) -> Column:
-    cell = F.col(cell) if isinstance(cell, str) else cell
-    return F.shiftright(cell, _RES_SHIFT)
-
-
 def k_ring(cell: Column | str, k: int, res: int = CELL_RES) -> Column:
     """Array of the (2k+1)^2 cells within Chebyshev distance k.
 
@@ -175,20 +170,6 @@ def np_bbox_cover(
         | (gx.ravel() << _X_SHIFT)
         | gy.ravel()
     )
-
-
-def cover_res_for_bbox(
-    minx: float, miny: float, maxx: float, maxy: float,
-    max_cells: int = 64, res: int = CELL_RES,
-) -> int:
-    """Coarsen res until the bbox cover is <= max_cells (adaptive cover)."""
-    while res > 1:
-        x0, y1 = np_tile_xy(np.array([minx]), np.array([miny]), res)
-        x1, y0 = np_tile_xy(np.array([maxx]), np.array([maxy]), res)
-        if int(x1[0] - x0[0] + 1) * int(y1[0] - y0[0] + 1) <= max_cells:
-            return res
-        res -= 1
-    return res
 
 
 # ---------------------------------------------------------------------------

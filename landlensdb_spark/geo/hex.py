@@ -169,16 +169,6 @@ def hex_kring(cell: Column | str, k: int) -> Column:
     return F.array_compact(F.array(*out))
 
 
-def hex_center_xy(cell: Column | str, res: int = HEX_RES) -> tuple[Column, Column]:
-    """Hex center in EPSG:3857 meters (inverse of the axial mapping)."""
-    e = hex_edge_m(res)
-    q = hex_q(cell).cast("double")
-    r = hex_r(cell).cast("double")
-    x = F.lit(e) * (F.lit(SQRT3) * q + F.lit(SQRT3 / 2.0) * r)
-    y = F.lit(e) * (F.lit(1.5) * r)
-    return x, y
-
-
 # ---------------------------------------------------------------------------
 # numpy twins (identical formulas/packing, for pandas-UDF refinement stages)
 # ---------------------------------------------------------------------------

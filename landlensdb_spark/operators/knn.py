@@ -1,4 +1,4 @@
-"""kNN join: histogram-certified ring expansion -> single candidate join -> top-k.
+"""kNN join: density-picked grid -> certify-in-join at ring 1 -> top-k.
 
 Generalizes the reference's nearest-1 index probe
 (/root/reference/landlensdb/process/snap.py:34-53) to distributed k-nearest.
@@ -7,36 +7,35 @@ distance certificate holds — the Spark analog of the reference's
 grow-until-found bbox recursion, cloud.py:963-977). That loop launches a
 job-chain per round (join, window, split, isEmpty) whose fixed latency
 dominates at small-probe scale and *inverts* scaling: more cores = more tiny
-tasks per round. This version computes the certified ring radius per probe
-from a cell histogram instead, so the whole operator is ONE Spark action with
-no driver synchronization:
+tasks per round. This version picks the grid so that a constant ring
+certifies nearly every probe, and certifies inside the candidate join:
 
-1. Both sides get a mercator-grid cell id (pure column math,
-   :func:`landlensdb_spark.geo.cells.cell_encode`).
-2. **Histogram** ``H``: points per cell (map-side-combined groupBy).
-3. **Ring selection**: each probe explodes its (2R+1)^2 cell box tagged with
-   the Chebyshev ring index, joins ``H`` (probe side broadcast — the
-   histogram never shuffles), and a cumulative window picks
-   ``r1 = min r: points within box r >= k``.
-4. **Certificate**: every point in box ``r1`` is within
-   ``sqrt(2) * (r1+1) * cell`` meters; any point outside box ``r`` is at
-   least ``(r-1) * cell`` away (probe anywhere in its own cell). So scanning
-   box ``r2 = ceil(sqrt(2) * (r1+1))`` provably contains the exact top-k.
-5. **Candidate join**: probes explode box ``r2`` (per-probe, column-driven
-   ``sequence``), broadcast-join points on the cell long, and
+1. ``res`` comes from an HLL density probe over the point side (one job,
+   memoized per table) unless the caller passes it; both sides then get a
+   cell id on the square Morton grid
+   (:func:`landlensdb_spark.geo.cells.cell_encode`) or the hex index.
+2. **Candidate join at ring 1**: every probe explodes the constant box
+   ``r2 = grid.r2_int(1)`` tagged with each cell's ring index,
+   broadcast-joins points on the cell long, and drops candidates beyond
+   the certified distance bound before the exchange.
+3. **Certificate in the same window**: one sort feeds both
    ``row_number() OVER (PARTITION BY probe ORDER BY dist2, neighbor_id)``
-   keeps the top-k (the reference's sort + group-first argmin, snap.py:218-221,
-   generalized from 1 to k; deterministic tie-break by neighbor id).
-6. Probes with < k points inside box ``R`` (cap ``start_ring <<
-   (max_rounds-1)``, the old loop's reach) fall back to a broadcast
-   brute-force pass, so results are always exact.
+   (the reference's sort + group-first argmin, snap.py:218-221, generalized
+   from 1 to k; deterministic tie-break by neighbor id) and a
+   whole-partition count of candidates within ring 1. A probe with >= k of
+   them is provably exact (certificate geometry on ``_SquareGrid`` /
+   ``_HexGrid``).
+4. The certified top-k is checkpointed eagerly and the driver asks whether
+   any probe is left; normally none is and that is the result.
+5. **Escalation**: uncertified probes get one more certify-in-join pass at
+   ring 4.
+6. **Brute force**: probes ring 4 cannot certify cross-join the point
+   table, capped at ``max_fallback_probes`` probes (beyond it the job
+   raises), so results are always exact.
 
-At cluster scale the point side is never shuffled by a join; the only
-data-sized shuffle is the histogram's map-side-combined aggregation. The
-points lineage is evaluated up to three times in the single action
-(histogram, candidate join, fallback) — pass ``persist_points=True`` to
-cache it when the point side is an expensive scan rather than cheap
-column math. ``broadcast_probes=False`` pins the joins to SHUFFLE_HASH for
+With broadcast probes the point side is never shuffled by a join; the one
+data-sized shuffle is the window's exchange of the bound-filtered candidate
+rows. ``broadcast_probes=False`` pins the joins to SHUFFLE_HASH for
 large probe sets (self-kNN): merely leaving the strategy to AQE lets it
 re-broadcast the exploded probe-cells side under the byte threshold, whose
 driver-side hash-relation build is a probe-count-proportional serial term.
@@ -125,9 +124,6 @@ class _SquareGrid:
     def r2_int(self, r1: int) -> int:
         return math.ceil(math.sqrt(2.0) * (r1 + 1))
 
-    def r2_col(self, r1: Column) -> Column:
-        return F.ceil(F.sqrt(F.lit(2.0)) * (r1 + 1)).cast("int")
-
     def bound_m(self, r1: int) -> float:
         """Upper bound (meters) on the k-th neighbor distance of a probe
         whose box ``r1`` holds >= k points: every such point is within
@@ -179,11 +175,6 @@ class _HexGrid:
     def r2_int(self, r1: int) -> int:
         return math.ceil((SQRT3 * r1 + 4.0) / 1.5 - 1.0)
 
-    def r2_col(self, r1: Column) -> Column:
-        return F.ceil((F.lit(SQRT3) * r1 + F.lit(4.0)) / F.lit(1.5) - F.lit(1.0)).cast(
-            "int"
-        )
-
     def bound_m(self, r1: int) -> float:
         """k-th-distance bound for a probe whose ring ``r1`` holds >= k
         points: sqrt(3)*e*r1 + 2e (certificate geometry above)."""
@@ -191,23 +182,22 @@ class _HexGrid:
         return SQRT3 * e * r1 + 2.0 * e
 
 
-def _auto_res(points: DataFrame, lon: str, lat: str, k: int) -> int:
-    return _auto_res_info(points, lon, lat, k)[0]
-
-
 def _auto_res_info(points: DataFrame, lon: str, lat: str, k: int) -> tuple[int, bool]:
     """(res, met_target): pick the expansion grid from OBSERVED density — the finest resolution
-    whose average points per occupied cell is still >= k/2 (so the ring
-    search certifies at r1 <= ~1 and box r2 holds O(k) candidates). One
+    whose average points per occupied cell is still >= k/2 (so ring 1
+    certifies nearly every probe and box r2 holds O(k) candidates). One
     map-side HLL pass computes all candidate resolutions at once; hand-tuned
     ``res`` remains available for callers that want to skip the probe scan.
+    ``met_target`` is False when no candidate res met the target (the
+    coarsest one is returned); ring 1 then certifies fewer probes and more
+    of them reach the escalation and brute-force passes.
 
     Rationale for k/2 (measured, bench.py): cells at ~k points average make
     r2 boxes of ~(2*ceil(sqrt2*2)+1)^2/4 * k candidates; halving the cell
-    population roughly halves candidate rows at the cost of r1=1 more often
-    — the sweet spot the bench's hand-tuned res 20 sits on. A too-coarse
-    pick is the real failure mode (res 16 there = ~1300 pts/cell = ~60M
-    window rows), so ties err fine-side.
+    population roughly halves candidate rows while box 1 (9 cells) still
+    holds ~4.5*(k/2) points — the sweet spot the bench's hand-tuned res 20
+    sits on. A too-coarse pick is the real failure mode (res 16 there =
+    ~1300 pts/cell = ~60M window rows), so ties err fine-side.
     """
     from landlensdb_spark.geo.tiles import tile_x, tile_y
 
@@ -303,10 +293,10 @@ def _certify_join(pts, prb_sub, grid, r1c, k, maybe_bc, w):
     """Certify-in-join pass at constant box/ring radius ``r1c``: candidates
     come from radius ``r2c = grid.r2_int(r1c)``; a probe whose radius
     ``r1c`` holds >= k points is provably exact (the grid adapter's
-    certificate geometry — see _SquareGrid/_HexGrid docstrings). Needs no
-    histogram — certification reads the ring tag riding the exploded box,
-    sharing the candidate join's one shuffle. Returns the certified
-    (_pid, _nid, dist2, rank) rows only."""
+    certificate geometry — see _SquareGrid/_HexGrid docstrings).
+    Certification reads the ring tag riding the exploded box, sharing the
+    candidate join's one shuffle. Returns the certified (_pid, _nid, dist2,
+    rank) rows only."""
     r2c = grid.r2_int(r1c)
     probe_cells = (
         prb_sub.select(
@@ -381,10 +371,13 @@ def _guarded_bruteforce(unresolved, pts, k, w, max_fallback_probes):
     probe side is limited to ``max_fallback_probes + 1`` rows and a
     row_number + assert_true column raises a clear runtime error when the
     cap is exceeded — no driver-side count action, no aggregation node
-    (the fixed-ring path's zero-HashAggregate plan shape is preserved).
+    (the operator's zero-HashAggregate plan shape is preserved).
     Under the cap the limit is a no-op, so results stay exact."""
     sel = unresolved.select("_pid", "_px", "_py")
     if max_fallback_probes is not None:
+        # one-partition window on purpose: it numbers at most
+        # max_fallback_probes + 1 rows, which the limit has already
+        # gathered into a single partition
         wg = Window.partitionBy(F.lit(1)).orderBy("_pid")
         sel = (
             sel.limit(max_fallback_probes + 1)
@@ -398,9 +391,9 @@ def _guarded_bruteforce(unresolved, pts, k, w, max_fallback_probes):
                         f"{max_fallback_probes} probes fell through to the "
                         "brute-force fallback (each one cross-joins the "
                         "ENTIRE point table). The point field is too sparse "
-                        "for the grid: pass a coarser res, raise "
-                        "escalate_ring, or raise max_fallback_probes if the "
-                        "cross product is genuinely intended."
+                        "for the grid: pass a coarser res, or raise "
+                        "max_fallback_probes if the cross product is "
+                        "genuinely intended."
                     ),
                 ),
             )
@@ -425,12 +418,7 @@ def knn_join(
     lon: str = "lon",
     lat: str = "lat",
     res: int | None = None,
-    start_ring: int = 1,
-    max_rounds: int = 3,
     broadcast_probes: bool = True,
-    persist_points: bool = False,
-    fixed_ring: int | None = None,
-    escalate_ring: int | None = None,
     max_fallback_probes: int | None = 10_000,
     grid: str = "square",
 ) -> DataFrame:
@@ -438,22 +426,20 @@ def knn_join(
 
     Returns (probe_id, point_id, dist2, rank) with rank in 1..k. ``res`` is
     the expansion grid (cell side = 40,075 km / 2^res); default None derives
-    it from the observed cell-occupancy histogram (one extra HLL pass over
-    the point side) — pass it explicitly only to skip that probe scan.
+    it from the observed cell occupancy (see ``_auto_res_info``) — pass it
+    explicitly only to skip that probe scan.
 
     ``grid``: ``"square"`` (Chebyshev boxes on the Morton grid) or
     ``"hex"`` (isotropic rings on the hexagonal index, geo/hex.py) — the
     hex ring scans 3r(r+1)+1 cells where the square box scans (2r+1)^2
     for the same certified reach, and the hex metric bounds the re-rank
-    radius tighter (at the default certify ring 1: 37 cells vs 49, ~35%
-    fewer candidate rows after cell area is counted). Results are exact
-    and identical under either grid; only the candidate-generation
-    geometry changes. The density probe reuses the square-occupancy
-    histogram for both (a res-r hex cell has 0.866x the area of the res-r
-    square cell, so the same res errs slightly fine-side for hex — the
-    direction the probe's tie-break already prefers).
-    ``start_ring``/``max_rounds`` bound the histogram search to ring
-    ``start_ring << (max_rounds - 1)`` before brute-force fallback.
+    radius tighter (at certify ring 1: 37 cells vs 49, ~35% fewer
+    candidate rows after cell area is counted). Results are exact and
+    identical under either grid; only the candidate-generation geometry
+    changes. The density probe reuses the square-occupancy histogram for
+    both (a res-r hex cell has 0.866x the area of the res-r square cell, so
+    the same res errs slightly fine-side for hex — the direction the
+    probe's tie-break already prefers).
     ``broadcast_probes=False`` for probe sets too big to broadcast
     (e.g. self-kNN); the joins are then PINNED to shuffle_hash — both sides
     shuffle on the cell key and AQE only re-plans partition counts/skew,
@@ -461,35 +447,27 @@ def knn_join(
     exploded probe boxes (see the maybe_bc comment below for the measured
     cost).
 
-    ``fixed_ring``: skip the adaptive histogram/ring-selection stages and
-    certify every probe at the CONSTANT box radius ``fixed_ring`` instead —
-    the certificate moves into the candidate join itself (a probe whose
-    box ``fixed_ring`` holds >= k candidates is provably exact; the rest
-    brute-force). Cuts three stage boundaries (histogram shuffle, ring
-    groupBy, one broadcast build) at the cost of a somewhat larger constant
-    candidate box. Engaged AUTOMATICALLY (at ring 1) when ``res`` came from
-    the density probe and the probe met its >= k/2 points-per-cell target —
-    there, box 1 averages >= 4.5*(k/2) candidates, so nearly every probe
-    certifies. Pass an int to force it, or rely on ``res=...`` to keep the
-    adaptive path.
+    Every probe is certified at ring 1; probes that ring cannot certify get
+    ONE certify-in-join escalation at ring 4, and the residual brute-force
+    pass is capped at ``max_fallback_probes`` probes — beyond that the job
+    RAISES instead of detonating an |unresolved| x N cross product (None
+    disables the cap).
 
-    Probes the primary pass cannot certify get ONE wider certify-in-join
-    escalation at box ``escalate_ring`` (default: one more doubling,
-    ``max(2 * primary_reach, 4)``) before brute force, and the residual
-    brute-force pass is capped at ``max_fallback_probes`` probes — beyond
-    that the job RAISES instead of detonating an |unresolved| x N cross
-    product (None disables the cap). Both extra passes are lazy branches
-    of the same single action and see only the (normally empty) residual
-    probe set.
+    Spark work done here, before the caller's action:
+
+    - the density-probe job, unless ``res`` is given or memoized for this
+      point table;
+    - the certified top-k of the ring-1 pass, materialized by an eager
+      ``localCheckpoint`` (the candidate join, its exchange and window);
+    - one ``isEmpty()`` job asking whether any probe is left uncertified.
+
+    The escalation and brute-force passes, when needed, are lazy and run in
+    the caller's action.
     """
     if grid not in ("square", "hex"):
         raise ValueError(f"grid must be 'square' or 'hex', got {grid!r}")
-    met_target = False
     if res is None:
-        res, met_target = _auto_res_info(points, lon, lat, k)
-    if fixed_ring is None and met_target:
-        fixed_ring = 1
-    cap = start_ring << (max_rounds - 1)
+        res = _auto_res_info(points, lon, lat, k)[0]
     g = _HexGrid(res) if grid == "hex" else _SquareGrid(res)
 
     pts = _with_merc(points, lon, lat, "_nx", "_ny").select(
@@ -504,8 +482,6 @@ def knn_join(
         "_py",
         g.encode(lon, lat).alias("_pcell"),
     )
-    if persist_points:
-        pts = pts.persist()
     if broadcast_probes:
         maybe_bc = F.broadcast
     else:
@@ -523,145 +499,31 @@ def knn_join(
             return df.hint("shuffle_hash")
     w = Window.partitionBy("_pid").orderBy(F.col("dist2").asc(), F.col("_nid").asc())
 
-    if fixed_ring is not None:
-        # -- fixed-ring fast path: no histogram, no ring selection ----------
-        # Certify-in-join at constant box fixed_ring (_certify_join holds
-        # the certificate geometry); the within-r1c count rides the
-        # candidate join's one shuffle.
-        # topk feeds BOTH the result union and the unresolved anti-join's
-        # broadcast build; without a materialization point the candidate
-        # join + window pipeline executes twice inside the one action
-        # (measured ~2x the whole operator's wall at bench scale). The
-        # checkpoint is EAGER deliberately: under AQE a lazy checkpoint's
-        # toRdd already materializes every query stage at construct time
-        # (measured r08 — the "lazy" variant cost the same 0.6-0.7s here),
-        # and an eager one lets the driver ask the cheap question below.
-        topk = _certify_join(pts, prb, g, fixed_ring, k, maybe_bc, w)
-        topk = topk.localCheckpoint(eager=True)
-        unresolved = prb.join(maybe_bc(topk.select("_pid")), "_pid", "left_anti")
-        # driver short-circuit: when the primary pass certified EVERY probe
-        # (the overwhelmingly common case at a sane res — the density probe
-        # targets >= k/2 points/cell exactly so box 1 certifies), the
-        # escalation + brute-force branches are provably empty. Asking
-        # isEmpty() here is one probe-side job over the already-
-        # materialized checkpoint; skipping the two extra branches saves
-        # their Catalyst planning + AQE stage materialization (~0.8s fixed
-        # latency at bench shape) and a second full scan of the point side.
-        # When probes remain, the branches are built exactly as before.
-        if unresolved.isEmpty():
-            return topk.select(
-                F.col("_pid").alias(probe_id),
-                F.col("_nid").alias(point_id),
-                "dist2",
-                "rank",
-            )
-        esc_ring = escalate_ring if escalate_ring is not None else max(2 * fixed_ring, 4)
-        esc = _certify_join(pts, unresolved, g, esc_ring, k, maybe_bc, w)
+    # topk feeds BOTH the result union and the unresolved anti-join's
+    # broadcast build; without a materialization point the candidate join +
+    # window pipeline executes twice inside the one action (measured ~2x the
+    # whole operator's wall at bench scale). The checkpoint is EAGER
+    # deliberately: under AQE a lazy checkpoint's toRdd already materializes
+    # every query stage at construct time (measured r08 — the "lazy" variant
+    # cost the same 0.6-0.7s here), and an eager one lets the driver ask the
+    # cheap question below.
+    topk = _certify_join(pts, prb, g, 1, k, maybe_bc, w).localCheckpoint(eager=True)
+    unresolved = prb.join(maybe_bc(topk.select("_pid")), "_pid", "left_anti")
+    # driver short-circuit: when ring 1 certified EVERY probe (the
+    # overwhelmingly common case at a sane res — the density probe targets
+    # >= k/2 points/cell exactly so box 1 certifies), the escalation +
+    # brute-force branches are provably empty. Asking isEmpty() here is one
+    # probe-side job over the already-materialized checkpoint; skipping the
+    # two extra branches saves their Catalyst planning + AQE stage
+    # materialization (~0.8s fixed latency at bench shape) and a second
+    # full scan of the point side.
+    if not unresolved.isEmpty():
+        esc = _certify_join(pts, unresolved, g, 4, k, maybe_bc, w)
         esc = esc.localCheckpoint(eager=False)
-        residual = unresolved.join(
-            maybe_bc(esc.select("_pid")), "_pid", "left_anti"
-        )
+        residual = unresolved.join(maybe_bc(esc.select("_pid")), "_pid", "left_anti")
         fallback = _guarded_bruteforce(residual, pts, k, w, max_fallback_probes)
-        return topk.unionByName(esc).unionByName(fallback).select(
-            F.col("_pid").alias(probe_id),
-            F.col("_nid").alias(point_id),
-            "dist2",
-            "rank",
-        )
-
-    # -- histogram: points per cell (map-side combine keeps the shuffle tiny)
-    hist = pts.groupBy(F.col("_ncell").alias("_hc")).agg(F.count("*").alias("_hn"))
-
-    # -- ring selection: smallest box radius r1 holding >= k points ---------
-    boxed = (
-        prb.withColumn("_dx", F.explode(F.sequence(F.lit(-cap), F.lit(cap))))
-        .withColumn(
-            "_dy",
-            F.explode(
-                F.sequence(
-                    g.db_lo(F.lit(cap), F.col("_dx")),
-                    g.db_hi(F.lit(cap), F.col("_dx")),
-                )
-            ),
-        )
-        .withColumn("_ring", g.ring(F.col("_dx"), F.col("_dy")))
-        .withColumn("_jc", g.shift(F.col("_pcell"), F.col("_dx"), F.col("_dy")))
-        .filter(F.col("_jc").isNotNull())
-        .select("_pid", "_px", "_py", "_pcell", "_ring", "_jc")
-    )
-    # ONE aggregation computes r1 = min ring with cumulative count >= k: the
-    # per-probe (ring, cell-count) entries — at most (2*cap+1)^2 of them —
-    # are collected into an array, ring-sorted, and folded with a running
-    # sum. vs the groupBy(pid, ring) + cumulative window + groupBy(pid)
-    # formulation this is one shuffle instead of three stage boundaries,
-    # whose scheduling latency dominates at small probe counts. Crossing k
-    # mid-ring still yields that ring (entries are ring-sorted), so r1 is
-    # identical.
-    ring_arr = F.array_sort(F.collect_list(F.struct(F.col("_ring"), F.col("_hn"))))
-    fold = F.aggregate(
-        ring_arr,
-        F.struct(
-            F.lit(0).cast("long").alias("cum"), F.lit(-1).cast("int").alias("r1")
-        ),
-        lambda acc, x: F.struct(
-            (acc["cum"] + x["_hn"]).alias("cum"),
-            F.when(acc["r1"] >= 0, acc["r1"])
-            .when(acc["cum"] + x["_hn"] >= k, x["_ring"].cast("int"))
-            .otherwise(F.lit(-1))
-            .alias("r1"),
-        ),
-    )
-    # probe coords ride through the (tiny) boxed side so the resolved set
-    # needs no second join back to prb — one fewer broadcast-build stage in
-    # the action's critical path (stage latency dominates small-probe runs)
-    r1 = (
-        hist.join(maybe_bc(boxed), F.col("_hc") == F.col("_jc"), "inner")
-        .groupBy("_pid")
-        .agg(
-            fold["r1"].alias("_r1"),
-            F.first("_px").alias("_px"),
-            F.first("_py").alias("_py"),
-            F.first("_pcell").alias("_pcell"),
-        )
-        .filter(F.col("_r1") >= 0)
-    )
-
-    # -- certified candidate join at r2 = grid.r2_col(r1) -------------------
-    resolved = r1.withColumn("_r2", g.r2_col(F.col("_r1")))
-    probe_cells = (
-        resolved.withColumn("_dx", F.explode(F.sequence(-F.col("_r2"), F.col("_r2"))))
-        .withColumn(
-            "_dy",
-            F.explode(
-                F.sequence(
-                    g.db_lo(F.col("_r2"), F.col("_dx")),
-                    g.db_hi(F.col("_r2"), F.col("_dx")),
-                )
-            ),
-        )
-        .withColumn("_jc", g.shift(F.col("_pcell"), F.col("_dx"), F.col("_dy")))
-        .filter(F.col("_jc").isNotNull())
-        .select("_pid", "_px", "_py", "_jc")
-    )
-    topk = (
-        pts.join(maybe_bc(probe_cells), F.col("_ncell") == F.col("_jc"), "inner")
-        .withColumn("dist2", _dist2())
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("_pid", "_nid", "dist2", "rank")
-    )
-
-    # -- fallback: probes whose box `cap` holds < k points ------------------
-    # one wider certify-in-join escalation (no histogram needed) before the
-    # capped brute-force residual
-    unresolved = prb.join(maybe_bc(r1), "_pid", "left_anti")
-    esc_ring = escalate_ring if escalate_ring is not None else max(2 * cap, 4)
-    esc = _certify_join(pts, unresolved, g, esc_ring, k, maybe_bc, w)
-    esc = esc.localCheckpoint(eager=False)
-    residual = unresolved.join(maybe_bc(esc.select("_pid")), "_pid", "left_anti")
-    fallback = _guarded_bruteforce(residual, pts, k, w, max_fallback_probes)
-
-    return topk.unionByName(esc).unionByName(fallback).select(
+        topk = topk.unionByName(esc).unionByName(fallback)
+    return topk.select(
         F.col("_pid").alias(probe_id),
         F.col("_nid").alias(point_id),
         "dist2",

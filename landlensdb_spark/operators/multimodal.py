@@ -34,9 +34,6 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-META_SCHEMA = "width int, height int, n_frames int, codec string, ok boolean"
 
 #: |x| <= 2**53 survives an int64 -> float64 -> long round-trip exactly.
 _FLOAT64_EXACT_INT = float(1 << 53)
@@ -331,11 +328,6 @@ def frame_sample(
             yield out
 
     return df.mapInPandas(_fs, out_schema)
-
-
-def with_media_table(pages: DataFrame, html_col: str = "html") -> DataFrame:
-    """Treat the html payload as the opaque media column (schema adapter)."""
-    return pages.withColumn("media", F.col(html_col))
 
 
 _PHASH_BASIS = None

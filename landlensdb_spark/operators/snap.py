@@ -40,11 +40,6 @@ from landlensdb_spark.geo.mercator import R, np_inv_merc, np_merc_x, np_merc_y
 
 WORLD = 2.0 * math.pi * R  # mercator world width in meters
 
-SNAP_COLS = (
-    "(line_id bigint, snap_dist double, snapped_lon double, snapped_lat double, "
-    "snap_pos double, seg_bearing double)"
-)
-
 #: driver-side memo of prepared+broadcast networks, keyed on the network
 #: DataFrame identity + snap params (strong ref kept; bounded at 8 entries).
 _net_cache: dict[tuple, tuple] = {}

@@ -98,15 +98,6 @@ def mjpeg_frames(blob: bytes) -> list[bytes]:
     raise ValueError("AVI without a movi list")
 
 
-def decode_frames(blob: bytes, every_n: int = 1) -> list[np.ndarray]:
-    """Decode every ``every_n``-th MJPEG frame to pixels via the in-repo
-    JPEG codec (baseline or progressive, gray or color). A zero-length or
-    non-JPEG frame chunk raises loudly (never a silently-typed ``b''``)."""
-    from landlensdb_spark.operators.jpeg import decode_jpeg
-
-    return [decode_jpeg(f) for f in mjpeg_frames(blob)[::every_n]]
-
-
 def encode_mjpeg_avi(
     frames: list[np.ndarray], fps: float = 10.0, quality: int = 85
 ) -> bytes:

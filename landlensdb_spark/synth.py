@@ -83,15 +83,6 @@ def probe_lon_col(key: Column) -> Column:
     return F.lit(P_LON_BASE) + ((key * F.lit(P_LON_MUL)) % F.lit(P_MOD)) / F.lit(1_000_000.0)
 
 
-def merc_rounded_cols(lon: Column, lat: Column) -> tuple[Column, Column]:
-    """EPSG:3857 coords rounded to 1e-3 m — the drift-proof distance space."""
-    mx = F.round(F.radians(lon) * F.lit(MERC_R), 3)
-    my = F.round(
-        F.lit(MERC_R) * F.log(F.tan(F.lit(np.pi / 4.0) + F.radians(lat) / F.lit(2.0))), 3
-    )
-    return mx, my
-
-
 # ---------------------------------------------------------------------------
 # SQL text forms (DuckDB oracle) — same formulas, same constants
 # ---------------------------------------------------------------------------

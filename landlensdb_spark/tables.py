@@ -25,10 +25,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from landlensdb_spark import synth
 
-TPCH_TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
-
 PAGES_SCHEMA = "url string, warc_ts timestamp, html binary, text string, lang string"
 
 _LANGS = ["en", "ja", "de", "fr", "pt"]

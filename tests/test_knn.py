@@ -3,9 +3,10 @@
 from __future__ import annotations
 
 import numpy as np
+import pytest
 
 from landlensdb_spark import synth
-from landlensdb_spark.operators.knn import knn_join
+from landlensdb_spark.operators.knn import _auto_res_info, knn_join
 
 
 def _points(n, probe=False):
@@ -58,9 +59,11 @@ def test_knn_matches_brute_force(spark):
         assert np.allclose(rows["dist2"].to_numpy(), [d for _, d in want[pid]])
 
 
-def test_knn_sparse_fallback_still_exact(spark):
-    # 10 points scattered world-wide at a fine grid res -> rings stay empty,
-    # fallback brute-force path must fire and stay exact
+@pytest.mark.parametrize("res", [14, None])
+def test_knn_sparse_fallback_still_exact(spark, res):
+    # 10 points scattered world-wide -> rings stay empty, the fallback
+    # brute-force path must fire and stay exact. res=None: the density probe
+    # cannot meet its points-per-cell target on this field
     i = np.arange(10, dtype=np.int64)
     nlon, nlat = synth.np_lon(i * 101), synth.np_lat(i * 101)
     pts = spark.createDataFrame(
@@ -70,7 +73,9 @@ def test_knn_sparse_fallback_still_exact(spark):
     prb = spark.createDataFrame(
         [(0, 0.0, 0.0), (1, 100.0, -40.0)], "probe_id long, lon double, lat double"
     )
-    got = knn_join(prb, pts, k=3, res=14, max_rounds=2).orderBy("probe_id", "rank").toPandas()
+    if res is None:
+        assert _auto_res_info(pts, "lon", "lat", 3)[1] is False
+    got = knn_join(prb, pts, k=3, res=res).orderBy("probe_id", "rank").toPandas()
     want = brute_force_knn(
         np.array([0.0, 100.0]), np.array([0.0, -40.0]), nlon, nlat, 3
     )
@@ -153,9 +158,7 @@ def test_knn_auto_res_matches_manual(spark):
         got_ids = list(got[got["probe_id"] == pid]["point_id"])
         assert got_ids == [j for j, _ in want[pid]], f"probe {pid}"
 
-    from landlensdb_spark.operators.knn import _auto_res
-
-    r = _auto_res(pts, "lon", "lat", k)
+    r = _auto_res_info(pts, "lon", "lat", k)[0]
     # ~2000 points in a ~0.1-degree urban field: the density rule must land
     # in the fine-grid regime, not the coarse flood regime
     assert 16 <= r <= 24
@@ -165,10 +168,6 @@ def test_auto_res_cache_misses_on_table_rewrite(spark, tmp_path):
     """Rewriting a point table at the SAME path must re-run the density
     probe (res cache keys the concrete part files, not just the plan) —
     the round-2 stale-res perf cliff."""
-    import numpy as np
-
-    from landlensdb_spark.operators.knn import _auto_res
-
     path = str(tmp_path / "pts.parquet")
 
     def write(spread):
@@ -182,25 +181,23 @@ def test_auto_res_cache_misses_on_table_rewrite(spark, tmp_path):
         return spark.read.parquet(path)
 
     dense = write(0.05)        # ~2000 pts in 0.05 deg -> very fine grid
-    r_dense = _auto_res(dense, "lon", "lat", 5)
+    r_dense = _auto_res_info(dense, "lon", "lat", 5)[0]
     sparse = write(120.0)      # same path, now spread over 120 deg
-    r_sparse = _auto_res(sparse, "lon", "lat", 5)
+    r_sparse = _auto_res_info(sparse, "lon", "lat", 5)[0]
     assert r_sparse != r_dense, "stale res reused after rewrite"
     assert r_dense > r_sparse  # denser field -> finer grid
 
 
 def test_knn_escalation_resolves_without_cross_product(spark):
-    """A probe the primary fixed-ring pass cannot certify but the wider
-    escalation pass can must come back exact WITH BRUTE FORCE FORBIDDEN
+    """A probe the ring-1 pass cannot certify but the ring-4 escalation
+    pass can must come back exact WITH BRUTE FORCE FORBIDDEN
     (max_fallback_probes=0 raises on any residual probe) — proof the
     escalation branch, not the cartesian, resolved it."""
-    import numpy as np
-
     res = 14
     cell_deg = 360.0 / (1 << res)
     # 10 points inside one cell near the origin; probe ~3 cells east:
-    # box 1 around the probe is empty, box 4 (the default escalation for
-    # fixed_ring=1) contains all 10 points -> certified exact
+    # box 1 around the probe is empty, box 4 (the escalation ring) contains
+    # all 10 points -> certified exact
     nlon = 0.001 + np.arange(10) * 1e-5
     nlat = np.full(10, 0.001)
     pts = spark.createDataFrame(
@@ -211,9 +208,7 @@ def test_knn_escalation_resolves_without_cross_product(spark):
         [(0, 0.001 + 3 * cell_deg, 0.001)], "probe_id long, lon double, lat double"
     )
     got = (
-        knn_join(
-            prb, pts, k=3, res=res, fixed_ring=1, max_fallback_probes=0
-        )
+        knn_join(prb, pts, k=3, res=res, max_fallback_probes=0)
         .orderBy("rank")
         .toPandas()
     )
@@ -227,9 +222,6 @@ def test_knn_ocean_probes_hit_fallback_cap(spark):
     """An all-ocean probe batch (nothing within any ring) larger than
     max_fallback_probes must RAISE with the documented message instead of
     detonating an |unresolved| x N cross product."""
-    import numpy as np
-    import pytest
-
     i = np.arange(50, dtype=np.int64)
     nlon, nlat = synth.np_lon(i * 101), synth.np_lat(i * 101)
     pts = spark.createDataFrame(
@@ -243,15 +235,11 @@ def test_knn_ocean_probes_hit_fallback_cap(spark):
         "probe_id long, lon double, lat double",
     )
     with pytest.raises(Exception, match="max_fallback_probes|brute-force"):
-        knn_join(
-            prb, pts, k=3, res=24, max_rounds=2, max_fallback_probes=2
-        ).collect()
+        knn_join(prb, pts, k=3, res=24, max_fallback_probes=2).collect()
 
 
 def test_knn_ocean_probes_under_cap_stay_exact(spark):
     """The same all-ocean batch UNDER the cap still brute-forces exactly."""
-    import numpy as np
-
     i = np.arange(50, dtype=np.int64)
     nlon, nlat = synth.np_lon(i * 101), synth.np_lat(i * 101)
     pts = spark.createDataFrame(
@@ -265,7 +253,7 @@ def test_knn_ocean_probes_under_cap_stay_exact(spark):
         "probe_id long, lon double, lat double",
     )
     got = (
-        knn_join(prb, pts, k=3, res=24, max_rounds=2, max_fallback_probes=10)
+        knn_join(prb, pts, k=3, res=24, max_fallback_probes=10)
         .orderBy("probe_id", "rank")
         .toPandas()
     )
@@ -276,9 +264,12 @@ def test_knn_ocean_probes_under_cap_stay_exact(spark):
         ]
 
 
-def test_knn_hex_grid_matches_brute_force(spark):
+@pytest.mark.parametrize("res", [14, 20])
+def test_knn_hex_grid_matches_brute_force(spark, res):
     """grid="hex" (round-6 verdict #6): identical exact results via
-    isotropic hex rings — adaptive histogram path (explicit res)."""
+    isotropic hex rings. The hex certificate r2 = ceil((sqrt3*r1+4)/1.5 - 1)
+    must stay exact, including probes that fall through to escalation or
+    brute force."""
     n_pts, n_probes, k = 2000, 120, 5
     nlon, nlat = _points(n_pts)
     plon, plat = _points(n_probes, probe=True)
@@ -291,7 +282,7 @@ def test_knn_hex_grid_matches_brute_force(spark):
         "probe_id long, lon double, lat double",
     )
     got = (
-        knn_join(prb, pts, k=k, res=14, grid="hex")
+        knn_join(prb, pts, k=k, res=res, grid="hex")
         .orderBy("probe_id", "rank")
         .toPandas()
     )
@@ -301,33 +292,6 @@ def test_knn_hex_grid_matches_brute_force(spark):
         rows = got[got["probe_id"] == pid]
         assert list(rows["point_id"]) == [j for j, _ in want[pid]], f"probe {pid}"
         assert np.allclose(rows["dist2"].to_numpy(), [d for _, d in want[pid]])
-
-
-def test_knn_hex_fixed_ring_matches_brute_force(spark):
-    """grid="hex" through the certify-in-join fast path (fixed_ring=1):
-    the hex certificate r2 = ceil((sqrt3*r1+4)/1.5 - 1) must stay exact,
-    including probes that fall through to escalation/brute force."""
-    n_pts, n_probes, k = 2000, 120, 5
-    nlon, nlat = _points(n_pts)
-    plon, plat = _points(n_probes, probe=True)
-    pts = spark.createDataFrame(
-        [(int(i), float(a), float(b)) for i, (a, b) in enumerate(zip(nlon, nlat))],
-        "point_id long, lon double, lat double",
-    )
-    prb = spark.createDataFrame(
-        [(int(i), float(a), float(b)) for i, (a, b) in enumerate(zip(plon, plat))],
-        "probe_id long, lon double, lat double",
-    )
-    got = (
-        knn_join(prb, pts, k=k, res=20, grid="hex", fixed_ring=1)
-        .orderBy("probe_id", "rank")
-        .toPandas()
-    )
-    want = brute_force_knn(plon, plat, nlon, nlat, k)
-    assert len(got) == n_probes * k
-    for pid in range(n_probes):
-        rows = got[got["probe_id"] == pid]
-        assert list(rows["point_id"]) == [j for j, _ in want[pid]], f"probe {pid}"
 
 
 def test_knn_hex_seam_probes_stay_exact(spark):

@@ -189,9 +189,9 @@ def test_line_dedup_hot_side_not_force_broadcast(spark):
 
 
 def test_knn_fixed_ring_skips_histogram_stages(spark):
-    """The fixed-ring fast path must contain NO aggregation (histogram or
-    ring-selection groupBy) — certification rides the candidate join's own
-    window. Three stage boundaries fewer than the adaptive path."""
+    """kNN must contain NO aggregation (no histogram, no ring-selection
+    groupBy) — certification rides the candidate join's own window, at an
+    explicit res as well as a density-picked one."""
     from pyspark.sql import functions as F
 
     from landlensdb_spark import synth
@@ -208,10 +208,8 @@ def test_knn_fixed_ring_skips_histogram_stages(spark):
         synth.probe_lon_col(k * 7).alias("lon"),
         synth.probe_lat_col(k * 7).alias("lat"),
     )
-    fixed = _plan(knn_join(prb, pts, k=5, res=18, fixed_ring=1))
-    assert _n_nodes(fixed, "HashAggregate") == 0
-    adaptive = _plan(knn_join(prb, pts, k=5, res=18))
-    assert _n_nodes(adaptive, "HashAggregate") > 0  # histogram + ring groupBy
+    plan = _plan(knn_join(prb, pts, k=5, res=18))
+    assert _n_nodes(plan, "HashAggregate") == 0, plan
 
 
 def _broadcast_subtrees(tree: str) -> list[str]:

@@ -7,6 +7,11 @@ wall-time table: stages whose duration barely moves between ``--cpus 2``
 and ``--cpus 8`` (pin with taskset externally) are the serial term the
 mult-64 Amdahl decomposition (26.3s @2 vs 17.8s @8 => s ~ 15s) points at.
 
+The density probe (``knn._auto_res_info``) is timed as its own phase; its
+res is then passed to ``knn_join`` explicitly, so the timed calls run the
+same candidate path as bench.py without probing again. ``--res`` replaces
+the probed res with a fixed one.
+
 Usage:
     taskset -c 0-1 python tools/profile_knn.py --cpus 2 --mult 32
     taskset -c 0-7 python tools/profile_knn.py --cpus 8 --mult 32
@@ -37,7 +42,7 @@ def main() -> None:
     ap.add_argument("--sf-rows", type=int, default=600_000,
                     help="sf0.1 lineitem row count (n_pages = sf_rows * mult)")
     ap.add_argument("--res", type=int, default=None,
-                    help="skip the density probe with an explicit res")
+                    help="skip the density probe and run at this res")
     ap.add_argument("--repeat", type=int, default=1)
     args = ap.parse_args()
 
@@ -87,6 +92,8 @@ def main() -> None:
     else:
         res = args.res
 
+    # res is explicit from here on: knn_join runs its one candidate path
+    # without a second density probe inside the timed calls
     for i in range(args.repeat):
         t0 = time.time()
         out = knn_join(
