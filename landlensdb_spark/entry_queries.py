@@ -2960,8 +2960,9 @@ _SHARD_TOKENS = 2000
     """,
 )
 def q_token_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token-budget shard packing via the DISTRIBUTED prefix sum (range
-    shuffle + per-partition scan + broadcast offsets — never the single
+    """Token-budget shard packing via the DISTRIBUTED prefix sum (bucket
+    by literal key quantiles, per-bucket totals, one hash shuffle into a
+    per-bucket running sum plus literal offsets — never the single
     global-window task); the oracle computes the same global cumsum
     directly."""
     from landlensdb_spark.operators.shards import pack_token_shards
@@ -3383,24 +3384,17 @@ def corpus_prep_over(docs: DataFrame) -> DataFrame:
     (columns doc_id, text). Factored out of the registered ``corpus_prep``
     query so the scaling bench can run the identical pipeline over a
     multiplier-scaled documents table (round-6 verdict #2: every headline
-    bench query's input must grow with the scaling multiplier)."""
+    bench query's input must grow with the scaling multiplier).
+
+    Spark work run before this returns: the eager checkpoint job carrying
+    the doc_id quantile observation (plus the dedup shuffle's map job),
+    then one bounded collect of the per-bucket token totals."""
     from pyspark.sql import Window as W
 
     from landlensdb_spark.operators.pii import redact
     from landlensdb_spark.operators.shards import pack_token_shards
     from landlensdb_spark.operators.textstats import quality_score, token_count
 
-    # parallelize the (expensive) quality + redaction regexes when the input
-    # arrives in fewer splits than the cluster has slots — a small documents
-    # file otherwise runs the whole quality+redact+hash chain in ONE task
-    # (guide §2.5 input skew: repartition immediately after the read). No-op
-    # at scale (a big corpus always scans in >= slots splits); results are
-    # partitioning-invariant (dedup keys on md5(redacted), shard packing is
-    # a global prefix sum over doc_id).
-    spark = docs.sparkSession
-    slots = spark.sparkContext.defaultParallelism
-    if docs.rdd.getNumPartitions() < slots:
-        docs = docs.repartition(slots)
     gated = docs.select(
         "doc_id", "text", quality_score(F.col("text")).alias("quality")
     ).filter(F.col("quality") >= _PREP_QMIN)
@@ -3413,11 +3407,7 @@ def corpus_prep_over(docs: DataFrame) -> DataFrame:
     )
     toks = kept.select(
         "doc_id", "quality", token_count(F.col("redacted")).cast("long").alias("n_tokens")
-    ).localCheckpoint(eager=True)
-    # pack_token_shards runs 3 jobs (quantiles, totals, output); the eager
-    # materialization runs the regex+window upstream exactly once, and the
-    # blocks are released by the ContextCleaner when the result is GC'd
-    # (unlike persist, nothing lingers in the catalog cache registry)
+    )
     return pack_token_shards(toks, "n_tokens", "doc_id", _PREP_SHARD).select(
         "doc_id", "quality", "n_tokens", "shard_id"
     )

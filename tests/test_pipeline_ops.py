@@ -137,14 +137,33 @@ def test_stratified_sample_exact_counts_and_rank(spark):
 # shard packing
 # ---------------------------------------------------------------------------
 
-def test_pack_token_shards_matches_global_cumsum(spark):
+_SHARD_INPUTS = {
+    # checkpointed inputs: Catalyst must never copy the key-bucket filter
+    # onto a plan side without the key column
+    # (INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND). That copy showed only while the
+    # key held the first expression id of the Spark session, hence these
+    # cases first, over one shared frame.
+    "checkpointed": lambda df: df.localCheckpoint(eager=True),
+    "repartitioned_checkpointed": lambda df: df.repartition(4).localCheckpoint(eager=True),
+    "plain": lambda df: df,
+    "empty": lambda df: df.limit(0),
+}
+
+
+@pytest.fixture(scope="module")
+def shard_frame(spark):
+    return spark.range(5000).select(
+        F.col("id").alias("key"), (F.col("id") % 37 + 1).alias("toks")
+    )
+
+
+@pytest.mark.parametrize("shape", list(_SHARD_INPUTS))
+def test_pack_token_shards_matches_global_cumsum(shard_frame, shape):
     from pyspark.sql import Window
 
     from landlensdb_spark.operators.shards import pack_token_shards
 
-    df = spark.range(5000).select(
-        F.col("id").alias("key"), (F.col("id") % 37 + 1).alias("toks")
-    )
+    df = _SHARD_INPUTS[shape](shard_frame)
     got = {
         r["key"]: r["shard_id"]
         for r in pack_token_shards(df, "toks", "key", 500, num_partitions=8).collect()
@@ -157,6 +176,7 @@ def test_pack_token_shards_matches_global_cumsum(spark):
             F.floor((F.sum("toks").over(w) - F.col("toks")) / F.lit(500)),
         ).collect()
     }
+    assert len(want) == (0 if shape == "empty" else 5000)
     assert got == want
     # invariant to the partition count (the whole point of the 2-phase scan)
     got3 = {
@@ -177,6 +197,35 @@ def test_pack_token_shards_contiguous(spark):
     shard_ids = [r["shard_id"] for r in rows]
     assert shard_ids == sorted(shard_ids)  # monotone over key order
     assert shard_ids[0] == 0 and len(set(shard_ids)) > 1
+
+
+def _jobs_run(sc, group, fn):
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup(None, None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_corpus_prep_and_token_shards_job_counts(spark, sf_dir):
+    """Driver round trips are the fixed cost of small corpus runs: the
+    construction runs the eager checkpoint (carrying the key quantiles, plus
+    the dedup window's shuffle stage as its own AQE job) and one totals
+    collect (map stage + result), nothing else."""
+    from landlensdb_spark import tables
+    from landlensdb_spark.entry_queries import QUERIES, corpus_prep_over
+
+    sc = spark.sparkContext
+    docs = tables.load(spark, sf_dir, "documents")
+    out, n = _jobs_run(sc, "corpus_prep_construct", lambda: corpus_prep_over(docs))
+    assert n <= 4, f"corpus_prep_over construction ran {n} jobs"
+    _, n = _jobs_run(sc, "corpus_prep_count", out.count)
+    assert n <= 2, f"count() over corpus_prep_over ran {n} jobs"
+    _, n = _jobs_run(
+        sc, "token_shards_construct", lambda: QUERIES["token_shards"](spark, sf_dir)
+    )
+    assert n <= 4, f"token_shards construction ran {n} jobs"
 
 
 # ---------------------------------------------------------------------------

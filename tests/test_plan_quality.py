@@ -379,9 +379,10 @@ def test_apply_bpe_plan_depth_independent_of_merge_count(spark):
 
 def test_pack_token_shards_single_data_shuffle(spark):
     """The distributed prefix sum must shuffle the corpus exactly ONCE
-    (hash on the literal-quantile bucket id); the offsets side joins as a
-    broadcast. A second data-sized Exchange here doubles the dominant cost
-    of the 100TB sharding pass."""
+    (hash on the literal-quantile bucket id); the per-bucket offsets ride
+    the plan as a literal array, so there is no join at all. A second
+    data-sized Exchange here doubles the dominant cost of the 100TB
+    sharding pass."""
     from pyspark.sql import functions as F
 
     from landlensdb_spark.operators.shards import pack_token_shards
@@ -392,10 +393,12 @@ def test_pack_token_shards_single_data_shuffle(spark):
     out = pack_token_shards(df, "toks", "key", 100, num_partitions=8)
     plan = _plan(out)
     n_exchanges = _n_nodes(plan, "Exchange")
-    # one hash Exchange for the window; the broadcast side appears as
-    # BroadcastExchange (counted separately by its node name)
+    # one hash Exchange for the window (BroadcastExchange is counted
+    # separately by its node name)
     assert n_exchanges == 1, f"expected 1 shuffle Exchange, got {n_exchanges}\n{plan}"
-    assert _n_nodes(plan, "BroadcastExchange") == 1
+    assert _n_nodes(plan, "BroadcastExchange") == 0, plan
+    assert _n_nodes(plan, "BroadcastHashJoin") == 0, plan
+    assert _n_nodes(plan, "SortMergeJoin") == 0, plan
 
 
 def test_hex_distance_pairs_driver_query_plan(spark, sf_dir):
