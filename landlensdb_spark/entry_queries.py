@@ -21,6 +21,7 @@ from landlensdb_spark import oracles, synth, tables
 from landlensdb_spark.extract import extract_geotags
 from landlensdb_spark.geo import tiles as T
 from landlensdb_spark.operators.fused import extract_pip
+from landlensdb_spark.operators.multimodal import map_rows
 from landlensdb_spark.operators.mvt import coverage_features, coverage_ingest
 from landlensdb_spark.operators.knn import knn_join
 from landlensdb_spark.operators.pip_join import pip_join
@@ -3447,41 +3448,26 @@ def q_jpeg_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     DC-only and the Annex-K DC quantizer at q85 keeps the reconstruction
     within 0.32 of the source value, so the round-trip is EXACT — any
     huffman/bitstream/DCT bug breaks the hash."""
-    from collections.abc import Iterator
-
     import numpy as np
-    import pandas as pd
+
+    from landlensdb_spark.operators.jpeg import decode_jpeg_gray, encode_jpeg_gray
 
     o = tables.load(spark, sf_dir, "orders")
     keys = o.filter(F.col("o_orderkey") < 1000).select(
         F.col("o_orderkey").alias("key")
     )
 
-    def _rt(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from landlensdb_spark.operators.jpeg import decode_jpeg_gray, encode_jpeg_gray
+    def _rt(k: int) -> tuple:
+        side = 8 * (1 + k % 3)
+        img = np.full((side, side), k % 256, dtype=np.uint8)
+        out = decode_jpeg_gray(encode_jpeg_gray(img, quality=85))
+        if not (out == out[0, 0]).all():  # not assert: python -O silently
+            # removes asserts, and this exactness claim IS the oracle's
+            # premise
+            raise ValueError(f"flat block round-trip not exact for key={k}")
+        return (out.shape[1], out.shape[0], int(out[0, 0]))
 
-        for pdf in batches:
-            ks, ws, hs, vs = [], [], [], []
-            for k in pdf["key"]:
-                k = int(k)
-                side = 8 * (1 + k % 3)
-                img = np.full((side, side), k % 256, dtype=np.uint8)
-                out = decode_jpeg_gray(encode_jpeg_gray(img, quality=85))
-                if not (out == out[0, 0]).all():  # not assert: python -O
-                    # silently removes asserts, and this exactness claim IS
-                    # the oracle's premise
-                    raise ValueError(
-                        f"flat block round-trip not exact for key={k}"
-                    )
-                ks.append(k)
-                hs.append(out.shape[0])
-                ws.append(out.shape[1])
-                vs.append(int(out[0, 0]))
-            yield pd.DataFrame(
-                {"key": ks, "width": ws, "height": hs, "intensity": vs}
-            )
-
-    return keys.mapInPandas(_rt, "key long, width int, height int, intensity int")
+    return map_rows(keys, "key", _rt, "width int, height int, intensity int")
 
 
 @query(
@@ -3510,49 +3496,37 @@ def q_media_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     Arrow stage, and report (width, height, n_frames, codec, ok). Junk
     must come back ok=false with zero dims/frames — the honest-decode
     contract (round-3 VERDICT #4). The oracle states the arithmetic."""
-    from collections.abc import Iterator
-
     import numpy as np
-    import pandas as pd
 
+    from landlensdb_spark.operators.jpeg import encode_jpeg_color
     from landlensdb_spark.operators.multimodal import decode_media
+    from landlensdb_spark.operators.raster import encode_png_gray
+    from landlensdb_spark.operators.video import encode_mjpeg_avi
 
     o = tables.load(spark, sf_dir, "orders")
     keys = o.filter(F.col("o_orderkey") < 1500).select(
         F.col("o_orderkey").alias("key")
     )
 
-    def _mk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from landlensdb_spark.operators.jpeg import encode_jpeg_color
-        from landlensdb_spark.operators.raster import encode_png_gray
-        from landlensdb_spark.operators.video import encode_mjpeg_avi
+    def _mk(k: int) -> tuple:
+        w, h = 10 + k % 23, 10 + (k * 3) % 17
+        cls = k % 4
+        if cls == 0:
+            return (encode_png_gray(np.full((h, w), k % 256, dtype=np.uint8)),)
+        if cls == 1:
+            img = np.full((h, w, 3), (k % 200, 30, 60), dtype=np.uint8)
+            return (encode_jpeg_color(img, quality=85),)
+        if cls == 2:
+            nf = 2 + (k * 7) % 4
+            return (
+                encode_mjpeg_avi(
+                    [np.full((h, w), (k + i) % 256, dtype=np.uint8) for i in range(nf)],
+                    fps=10,
+                ),
+            )
+        return (bytes([k % 251]) * 16,)  # undecodable junk
 
-        for pdf in batches:
-            ks, blobs = [], []
-            for k in pdf["key"]:
-                k = int(k)
-                w, h = 10 + k % 23, 10 + (k * 3) % 17
-                cls = k % 4
-                if cls == 0:
-                    img = np.full((h, w), k % 256, dtype=np.uint8)
-                    b = encode_png_gray(img)
-                elif cls == 1:
-                    img = np.full((h, w, 3), (k % 200, 30, 60), dtype=np.uint8)
-                    b = encode_jpeg_color(img, quality=85)
-                elif cls == 2:
-                    nf = 2 + (k * 7) % 4
-                    b = encode_mjpeg_avi(
-                        [np.full((h, w), (k + i) % 256, dtype=np.uint8) for i in range(nf)],
-                        fps=10,
-                    )
-                else:
-                    b = bytes([k % 251]) * 16  # undecodable junk
-                ks.append(k)
-                blobs.append(b)
-            yield pd.DataFrame({"key": ks, "media": blobs})
-
-    media = keys.mapInPandas(_mk, "key long, media binary")
-    meta = decode_media(media)
+    meta = decode_media(map_rows(keys, "key", _mk, "media binary"))
     # zero dims/frames for the junk class per the oracle's arithmetic
     return meta.select("key", "width", "height", "n_frames", "codec", "ok")
 
@@ -3592,83 +3566,56 @@ def q_media_meta_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     content-determined and codec-invariant; -1 (not claimed) for the
     lossy classes and junk. The oracle states the arithmetic.
 
-    Gotcha pinned here on purpose: ``exp_phash`` must ride through the
-    ``decode_media``/``media_phash`` Arrow hops NULL-FREE (0 sentinel for
-    the non-claiming classes, selected by ``codec`` downstream). Arrow ->
-    pandas inside mapInPandas turns a nullable long column into float64
-    (NaN-backed), silently rounding |x| > 2^53 — a 64-bit hash loses its
-    low bits and every Hamming distance lands at 3-9 instead of 0."""
-    from collections.abc import Iterator
-
+    ``exp_phash`` is 0 for the non-claiming classes (selected out by
+    ``codec`` downstream), as the oracle defines it. It rides through the
+    ``decode_media``/``media_phash`` hops as an Arrow column, so a 64-bit
+    hash arrives with every bit intact; a pandas round-trip of a nullable
+    long would round |x| > 2^53 and put every Hamming distance at 3-9
+    instead of 0."""
     import numpy as np
-    import pandas as pd
 
-    from landlensdb_spark.operators.multimodal import decode_media, media_phash
+    from landlensdb_spark.operators.gif import encode_gif_gray
+    from landlensdb_spark.operators.jpeg import encode_jpeg_color
+    from landlensdb_spark.operators.multimodal import (
+        decode_media,
+        media_phash,
+        phash64,
+    )
+    from landlensdb_spark.operators.raster import encode_png_gray
+    from landlensdb_spark.operators.tiff import encode_tiff_gray
+    from landlensdb_spark.operators.video import encode_mjpeg_avi
 
     o = tables.load(spark, sf_dir, "orders")
     keys = o.filter(F.col("o_orderkey") < 1500).select(
         F.col("o_orderkey").alias("key")
     )
 
-    def _mk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from landlensdb_spark.operators.gif import encode_gif_gray
-        from landlensdb_spark.operators.jpeg import encode_jpeg_color
-        from landlensdb_spark.operators.multimodal import phash64
-        from landlensdb_spark.operators.raster import encode_png_gray
-        from landlensdb_spark.operators.tiff import encode_tiff_gray
-        from landlensdb_spark.operators.video import encode_mjpeg_avi
+    def _mk(k: int) -> tuple:
+        w, h = 10 + k % 23, 10 + (k * 3) % 17
+        base = (
+            (np.arange(h)[:, None] * 7 + np.arange(w)[None, :] * 5 + k) % 256
+        ).astype(np.uint8)
+        cls = k % 6
+        if cls == 0:
+            return (encode_png_gray(base), phash64(base))
+        if cls == 1:
+            img = np.full((h, w, 3), (k % 200, 30, 60), dtype=np.uint8)
+            return (encode_jpeg_color(img, quality=85), 0)
+        if cls == 2:
+            nf = 2 + (k * 7) % 4
+            frames = [((base + i) % 256).astype(np.uint8) for i in range(nf)]
+            return (encode_mjpeg_avi(frames, fps=10), 0)
+        if cls == 3:
+            nf = 1 + k % 3
+            frames = [((base + i) % 256).astype(np.uint8) for i in range(nf)]
+            return (encode_gif_gray(frames), phash64(base))
+        if cls == 4:
+            nf = 1 + k % 2
+            frames = [((base + i) % 256).astype(np.uint8) for i in range(nf)]
+            return (encode_tiff_gray(frames), phash64(base))
+        return (bytes([k % 251]) * 16, 0)  # undecodable junk
 
-        for pdf in batches:
-            ks, blobs, exps = [], [], []
-            for k in pdf["key"]:
-                k = int(k)
-                w, h = 10 + k % 23, 10 + (k * 3) % 17
-                base = (
-                    (np.arange(h)[:, None] * 7 + np.arange(w)[None, :] * 5 + k)
-                    % 256
-                ).astype(np.uint8)
-                cls = k % 6
-                exp = 0
-                if cls == 0:
-                    b = encode_png_gray(base)
-                    exp = phash64(base)
-                elif cls == 1:
-                    b = encode_jpeg_color(
-                        np.full((h, w, 3), (k % 200, 30, 60), dtype=np.uint8),
-                        quality=85,
-                    )
-                elif cls == 2:
-                    nf = 2 + (k * 7) % 4
-                    b = encode_mjpeg_avi(
-                        [((base + i) % 256).astype(np.uint8) for i in range(nf)],
-                        fps=10,
-                    )
-                elif cls == 3:
-                    nf = 1 + k % 3
-                    b = encode_gif_gray(
-                        [((base + i) % 256).astype(np.uint8) for i in range(nf)]
-                    )
-                    exp = phash64(base)
-                elif cls == 4:
-                    nf = 1 + k % 2
-                    b = encode_tiff_gray(
-                        [((base + i) % 256).astype(np.uint8) for i in range(nf)]
-                    )
-                    exp = phash64(base)
-                else:
-                    b = bytes([k % 251]) * 16  # undecodable junk
-                ks.append(k)
-                blobs.append(b)
-                exps.append(exp)
-            yield pd.DataFrame(
-                {
-                    "key": ks,
-                    "media": blobs,
-                    "exp_phash": np.asarray(exps, dtype=np.int64),
-                }
-            )
-
-    media = keys.mapInPandas(_mk, "key long, media binary, exp_phash long")
+    media = map_rows(keys, "key", _mk, "media binary, exp_phash long")
     meta = media_phash(decode_media(media))
     return meta.select(
         "key",
@@ -3712,110 +3659,90 @@ def q_media_frame_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     same in-repo codecs (decoded frames for the lossy MJPEG class, source
     pixels for the lossless GIF/TIFF classes), so both booleans are exact.
     """
-    from collections.abc import Iterator
-
     import numpy as np
-    import pandas as pd
 
-    from landlensdb_spark.operators.multimodal import decode_media, media_phash
+    from landlensdb_spark.operators.gif import encode_gif_gray
+    from landlensdb_spark.operators.jpeg import decode_jpeg
+    from landlensdb_spark.operators.multimodal import (
+        decode_media,
+        media_phash,
+        phash64,
+    )
+    from landlensdb_spark.operators.tiff import encode_tiff_gray
+    from landlensdb_spark.operators.video import encode_mjpeg_avi, mjpeg_frames
 
     o = tables.load(spark, sf_dir, "orders")
     keys = o.filter(F.col("o_orderkey") < 900).select(
         F.col("o_orderkey").alias("key")
     )
 
-    def _mk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from landlensdb_spark.operators.gif import encode_gif_gray
-        from landlensdb_spark.operators.jpeg import decode_jpeg
-        from landlensdb_spark.operators.multimodal import phash64
-        from landlensdb_spark.operators.tiff import encode_tiff_gray
-        from landlensdb_spark.operators.video import encode_mjpeg_avi, mjpeg_frames
+    def _pat(i: int, h: int, w: int, k: int) -> "np.ndarray":
+        # orientation- and frequency-distinct stripe fields: even i =
+        # vertical stripes, odd i = horizontal, width grows with i —
+        # far apart in DCT space, unlike same-orientation gradients
+        # whose pHash sign patterns can collide
+        width = 1 + i // 2
+        if i % 2 == 0:
+            v = (np.arange(w)[None, :] // width) % 2
+            img = np.broadcast_to(v * (200 + k % 56), (h, w))
+        else:
+            v = (np.arange(h)[:, None] // width) % 2
+            img = np.broadcast_to(v * (200 + k % 56), (h, w))
+        return np.ascontiguousarray(img).astype(np.uint8)
 
-        def _pat(i: int, h: int, w: int, k: int) -> "np.ndarray":
-            # orientation- and frequency-distinct stripe fields: even i =
-            # vertical stripes, odd i = horizontal, width grows with i —
-            # far apart in DCT space, unlike same-orientation gradients
-            # whose pHash sign patterns can collide
-            width = 1 + i // 2
-            if i % 2 == 0:
-                v = (np.arange(w)[None, :] // width) % 2
-                img = np.broadcast_to(v * (200 + k % 56), (h, w))
+    def _distinct(frames: list, h0: int) -> list:
+        # deterministic collision repair: any later frame whose pHash
+        # equals frame 0's gets inverted, then rolled, until distinct
+        # (bounded; the synth is deterministic so one green oracle run
+        # proves it forever)
+        out = [frames[0]]
+        for f in frames[1:]:
+            for _ in range(8):
+                if phash64(f) != h0:
+                    break
+                f = (255 - f).astype(np.uint8)
+                if phash64(f) == h0:
+                    f = np.roll(f, 1 + _ , axis=_ % 2)
             else:
-                v = (np.arange(h)[:, None] // width) % 2
-                img = np.broadcast_to(v * (200 + k % 56), (h, w))
-            return np.ascontiguousarray(img).astype(np.uint8)
+                raise ValueError("media_frame_sampling: could not build "
+                                 "a later frame with a distinct pHash")
+            out.append(f)
+        return out
 
-        def _distinct(frames: list, h0: int) -> list:
-            # deterministic collision repair: any later frame whose pHash
-            # equals frame 0's gets inverted, then rolled, until distinct
-            # (bounded; the synth is deterministic so one green oracle run
-            # proves it forever)
-            out = [frames[0]]
-            for f in frames[1:]:
-                for _ in range(8):
-                    if phash64(f) != h0:
-                        break
-                    f = (255 - f).astype(np.uint8)
-                    if phash64(f) == h0:
-                        f = np.roll(f, 1 + _ , axis=_ % 2)
-                else:
-                    raise ValueError("media_frame_sampling: could not build "
-                                     "a later frame with a distinct pHash")
-                out.append(f)
-            return out
+    def _mk(k: int) -> tuple:
+        w, h = 10 + k % 23, 10 + (k * 3) % 17
+        cls = k % 3
+        nf = (2 + k % 3, 2 + k % 2, 2 + (k * 7) % 4)[cls]
+        frames = [_pat(i, h, w, k) for i in range(nf)]
+        frames = _distinct(frames, phash64(frames[0]))
+        if cls == 0:
+            b = encode_gif_gray(frames)
+            hashes = [phash64(f) for f in frames]
+        elif cls == 1:
+            b = encode_tiff_gray(frames)
+            hashes = [phash64(f) for f in frames]
+        else:
+            # lossy: the engine hashes the DECODED frame, so the
+            # expectation decodes through the same codec; repair
+            # collisions in DECODED space by mutating the source
+            # frame and re-encoding (bounded, deterministic)
+            for _try in range(8):
+                b = encode_mjpeg_avi(frames, fps=10)
+                hashes = [phash64(decode_jpeg(fb)) for fb in mjpeg_frames(b)]
+                coll = [j for j in range(1, nf) if hashes[j] == hashes[0]]
+                if not coll:
+                    break
+                for j in coll:
+                    frames[j] = (255 - frames[j]).astype(np.uint8)
+            else:
+                raise ValueError(
+                    "media_frame_sampling: mjpeg frames would not "
+                    "separate in pHash space"
+                )
+        return (b, hashes[0], hashes[1:])
 
-        for pdf in batches:
-            ks, blobs, e0s, laters = [], [], [], []
-            for k in pdf["key"]:
-                k = int(k)
-                w, h = 10 + k % 23, 10 + (k * 3) % 17
-                cls = k % 3
-                nf = (2 + k % 3, 2 + k % 2, 2 + (k * 7) % 4)[cls]
-                frames = [_pat(i, h, w, k) for i in range(nf)]
-                frames = _distinct(frames, phash64(frames[0]))
-                if cls == 0:
-                    b = encode_gif_gray(frames)
-                    hashes = [phash64(f) for f in frames]
-                elif cls == 1:
-                    b = encode_tiff_gray(frames)
-                    hashes = [phash64(f) for f in frames]
-                else:
-                    # lossy: the engine hashes the DECODED frame, so the
-                    # expectation decodes through the same codec; repair
-                    # collisions in DECODED space by mutating the source
-                    # frame and re-encoding (bounded, deterministic)
-                    for _try in range(8):
-                        b = encode_mjpeg_avi(frames, fps=10)
-                        hashes = [
-                            phash64(decode_jpeg(fb)) for fb in mjpeg_frames(b)
-                        ]
-                        coll = [
-                            j for j in range(1, nf) if hashes[j] == hashes[0]
-                        ]
-                        if not coll:
-                            break
-                        for j in coll:
-                            frames[j] = (255 - frames[j]).astype(np.uint8)
-                    else:
-                        raise ValueError(
-                            "media_frame_sampling: mjpeg frames would not "
-                            "separate in pHash space"
-                        )
-                ks.append(k)
-                blobs.append(b)
-                e0s.append(hashes[0])
-                laters.append(hashes[1:])
-            yield pd.DataFrame(
-                {
-                    "key": ks,
-                    "media": blobs,
-                    "exp0": np.asarray(e0s, dtype=np.int64),
-                    "exp_later": laters,
-                }
-            )
-
-    media = keys.mapInPandas(
-        _mk, "key long, media binary, exp0 long, exp_later array<long>"
+    media = map_rows(
+        keys, "key", _mk, "media binary, exp0 long, exp_later array<long>"
     )
     meta = media_phash(decode_media(media))
     return meta.select(
@@ -3866,89 +3793,78 @@ def q_gif_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     floor(w * min(8/w, 8/h, 1)) both sides). Closes the GIF slice of the
     F25 media seam (reference handlers/image.py:95-138 thumbnails anything
     PIL decodes); parity target reference landlensdb/handlers/image.py."""
-    from collections.abc import Iterator
-
     import numpy as np
-    import pandas as pd
+
+    from landlensdb_spark.operators.gif import (
+        decode_gif,
+        decode_gif_indexed,
+        encode_gif_gray,
+        encode_gif_indexed,
+        gif_dims,
+        gif_thumbnail,
+    )
+    from landlensdb_spark.operators.multimodal import default_decode
 
     o = tables.load(spark, sf_dir, "orders")
     keys = o.filter(F.col("o_orderkey") < 1200).select(
         F.col("o_orderkey").alias("key")
     )
 
-    def _rt(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from landlensdb_spark.operators.gif import (
-            decode_gif,
-            decode_gif_indexed,
-            encode_gif_gray,
-            encode_gif_indexed,
-            gif_dims,
-            gif_thumbnail,
-        )
-        from landlensdb_spark.operators.multimodal import default_decode
-
-        for pdf in batches:
-            rows = []
-            for k in pdf["key"]:
-                k = int(k)
-                w, h = 10 + k % 23, 10 + (k * 3) % 17
-                nf = 1 + k % 3
-                interlace = bool(k % 2)
-                rgb = k % 5 == 0
-                # row-gradient frames: non-flat so interlace reordering and
-                # real LZW runs are actually exercised by the exactness check
-                if rgb:
-                    pal = np.array(
-                        [
-                            ((k + 37 * c) % 256, (k * 3 + 11 * c) % 256, (k * 7 + 5 * c) % 256)
-                            for c in range(7)
-                        ],
-                        dtype=np.uint8,
-                    )
-                    pal[0] = (k % 256, (k * 3) % 256, (k * 7) % 256)
-                    frames = [
-                        (np.arange(h, dtype=np.int64)[:, None] + i) % 7
-                        * np.ones((1, w), dtype=np.int64)
-                        for i in range(nf)
-                    ]
-                    frames = [f.astype(np.uint8) for f in frames]
-                    blob = encode_gif_indexed(frames, pal, interlace=interlace)
-                else:
-                    frames = [
-                        ((np.arange(h, dtype=np.int64)[:, None] + k + i) % 256
-                         * np.ones((1, w), dtype=np.int64)).astype(np.uint8)
-                        for i in range(nf)
-                    ]
-                    blob = encode_gif_gray(frames, interlace=interlace)
-                mw, mh, mf, codec, ok = default_decode(blob)
-                img = decode_gif(blob)
-                if rgb:
-                    idx0, dpal = decode_gif_indexed(blob)
-                    expect = dpal[(np.arange(h)[:, None] % 7) * np.ones((1, w), dtype=np.int64)]
-                    if img.ndim != 3 or not (img == expect).all():
-                        raise ValueError(f"gif rgb round-trip not exact for key={k}")
-                    intensity = int(img[0, 0, 0])
-                else:
-                    expect = (
-                        (np.arange(h, dtype=np.int64)[:, None] + k) % 256
-                        * np.ones((1, w), dtype=np.int64)
-                    ).astype(np.uint8)
-                    if img.ndim != 2 or not (img == expect).all():
-                        raise ValueError(f"gif gray round-trip not exact for key={k}")
-                    intensity = int(img[0, 0])
-                tdims = gif_dims(gif_thumbnail(blob, 8, 8))
-                rows.append((k, mw, mh, mf, codec, ok, "rgb" if rgb else "gray",
-                             intensity, tdims[0], tdims[1]))
-            yield pd.DataFrame(
-                rows,
-                columns=["key", "width", "height", "n_frames", "codec", "ok",
-                         "mode", "intensity", "thumb_w", "thumb_h"],
+    def _rt(k: int) -> tuple:
+        w, h = 10 + k % 23, 10 + (k * 3) % 17
+        nf = 1 + k % 3
+        interlace = bool(k % 2)
+        rgb = k % 5 == 0
+        # row-gradient frames: non-flat so interlace reordering and real
+        # LZW runs are actually exercised by the exactness check
+        if rgb:
+            pal = np.array(
+                [
+                    ((k + 37 * c) % 256, (k * 3 + 11 * c) % 256, (k * 7 + 5 * c) % 256)
+                    for c in range(7)
+                ],
+                dtype=np.uint8,
             )
+            pal[0] = (k % 256, (k * 3) % 256, (k * 7) % 256)
+            frames = [
+                (np.arange(h, dtype=np.int64)[:, None] + i) % 7
+                * np.ones((1, w), dtype=np.int64)
+                for i in range(nf)
+            ]
+            frames = [f.astype(np.uint8) for f in frames]
+            blob = encode_gif_indexed(frames, pal, interlace=interlace)
+        else:
+            frames = [
+                ((np.arange(h, dtype=np.int64)[:, None] + k + i) % 256
+                 * np.ones((1, w), dtype=np.int64)).astype(np.uint8)
+                for i in range(nf)
+            ]
+            blob = encode_gif_gray(frames, interlace=interlace)
+        meta = default_decode(blob)
+        img = decode_gif(blob)
+        if rgb:
+            _, dpal = decode_gif_indexed(blob)
+            expect = dpal[(np.arange(h)[:, None] % 7) * np.ones((1, w), dtype=np.int64)]
+            if img.ndim != 3 or not (img == expect).all():
+                raise ValueError(f"gif rgb round-trip not exact for key={k}")
+            intensity = int(img[0, 0, 0])
+        else:
+            expect = (
+                (np.arange(h, dtype=np.int64)[:, None] + k) % 256
+                * np.ones((1, w), dtype=np.int64)
+            ).astype(np.uint8)
+            if img.ndim != 2 or not (img == expect).all():
+                raise ValueError(f"gif gray round-trip not exact for key={k}")
+            intensity = int(img[0, 0])
+        tdims = gif_dims(gif_thumbnail(blob, 8, 8))
+        return (*meta, "rgb" if rgb else "gray", intensity, *tdims)
 
-    return keys.mapInPandas(
+    return map_rows(
+        keys,
+        "key",
         _rt,
-        "key long, width int, height int, n_frames int, codec string, "
-        "ok boolean, mode string, intensity int, thumb_w int, thumb_h int",
+        "width int, height int, n_frames int, codec string, ok boolean, "
+        "mode string, intensity int, thumb_w int, thumb_h int",
     )
 
 
@@ -3995,58 +3911,50 @@ def q_gif_anim_render(spark: SparkSession, sf_dir: str) -> DataFrame:
     animations the same way before thumbnailing); closes the round-6
     delta-frame compositing limitation as a FEATURE rather than a
     documented gap."""
-    from collections.abc import Iterator
-
     import numpy as np
-    import pandas as pd
+
+    from landlensdb_spark.operators.gif import encode_gif_anim, render_gif
 
     docs = tables.load(spark, sf_dir, "documents")
     keys = docs.filter(F.col("doc_id") % 7 == 0).select("doc_id")
+    W, H = 24, 16
+    ramp = np.repeat(np.arange(256, dtype=np.uint8), 3).reshape(256, 3)
 
-    def _render(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from landlensdb_spark.operators.gif import encode_gif_anim, render_gif
+    def _render(d: int) -> tuple:
+        v0 = d % 256
+        v1 = (v0 + 1 + (d // 7) % 255) % 256
+        t = (v1 + 1) % 256
+        bg = (d * 3 + 5) % 256
+        v2 = (d * 5 + 11) % 256
+        l1, t1 = d % 4, (d // 4) % 5
+        w1, h1 = 4 + (d // 11) % 5, 3 + (d // 13) % 4
+        l2, t2 = 12 + (d // 3) % 4, (d // 5) % 6
+        w2, h2 = 3 + (d // 17) % 5, 4 + (d // 19) % 5
+        b1 = np.full((h1, w1), v1, dtype=np.uint8)
+        b1[1:-1, 1:-1] = t
+        blocks = [
+            {"idx": np.full((H, W), v0, dtype=np.uint8), "disposal": 1},
+            {"idx": b1, "left": l1, "top": t1, "transparent": t,
+             "disposal": 2, "delay_cs": 4},
+            {"idx": np.full((h2, w2), v2, dtype=np.uint8),
+             "left": l2, "top": t2},
+        ]
+        blob = encode_gif_anim(blocks, ramp, size=(W, H), bg_index=bg)
+        frames = render_gif(blob)
+        ok = len(frames) == 3 and all(
+            f.shape == (H, W, 3)
+            and (f[:, :, 0] == f[:, :, 1]).all()
+            and (f[:, :, 1] == f[:, :, 2]).all()
+            for f in frames
+        )
+        s = [int(f[:, :, 0].sum(dtype=np.int64)) for f in frames]
+        return (len(frames), s[0], s[1], s[2], bool(ok))
 
-        W, H = 24, 16
-        ramp = np.repeat(np.arange(256, dtype=np.uint8), 3).reshape(256, 3)
-        for pdf in batches:
-            rows = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                v0 = d % 256
-                v1 = (v0 + 1 + (d // 7) % 255) % 256
-                t = (v1 + 1) % 256
-                bg = (d * 3 + 5) % 256
-                v2 = (d * 5 + 11) % 256
-                l1, t1 = d % 4, (d // 4) % 5
-                w1, h1 = 4 + (d // 11) % 5, 3 + (d // 13) % 4
-                l2, t2 = 12 + (d // 3) % 4, (d // 5) % 6
-                w2, h2 = 3 + (d // 17) % 5, 4 + (d // 19) % 5
-                b1 = np.full((h1, w1), v1, dtype=np.uint8)
-                b1[1:-1, 1:-1] = t
-                blocks = [
-                    {"idx": np.full((H, W), v0, dtype=np.uint8), "disposal": 1},
-                    {"idx": b1, "left": l1, "top": t1, "transparent": t,
-                     "disposal": 2, "delay_cs": 4},
-                    {"idx": np.full((h2, w2), v2, dtype=np.uint8),
-                     "left": l2, "top": t2},
-                ]
-                blob = encode_gif_anim(blocks, ramp, size=(W, H), bg_index=bg)
-                frames = render_gif(blob)
-                ok = len(frames) == 3 and all(
-                    f.shape == (H, W, 3)
-                    and (f[:, :, 0] == f[:, :, 1]).all()
-                    and (f[:, :, 1] == f[:, :, 2]).all()
-                    for f in frames
-                )
-                s = [int(f[:, :, 0].sum(dtype=np.int64)) for f in frames]
-                rows.append((d, len(frames), s[0], s[1], s[2], bool(ok)))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "n_frames", "s0", "s1", "s2", "ok"]
-            )
-
-    return keys.mapInPandas(
+    return map_rows(
+        keys,
+        "doc_id",
         _render,
-        "doc_id long, n_frames int, s0 long, s1 long, s2 long, ok boolean",
+        "n_frames int, s0 long, s1 long, s2 long, ok boolean",
     )
 
 
@@ -4091,86 +3999,71 @@ def q_webp_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     handlers/image.py:95-138 thumbnails anything PIL decodes, and PIL
     reads WebP) with the WebP-lossless slice of the round-6 remaining-
     codecs gap; parity target reference landlensdb/handlers/image.py."""
-    from collections.abc import Iterator
-
     import numpy as np
-    import pandas as pd
+
+    from landlensdb_spark.operators.multimodal import default_decode
+    from landlensdb_spark.operators.webp import (
+        decode_webp,
+        encode_webp,
+        webp_dims,
+        webp_thumbnail,
+    )
 
     o = tables.load(spark, sf_dir, "orders")
     keys = o.filter(F.col("o_orderkey") < 600).select(
         F.col("o_orderkey").alias("key")
     )
 
-    def _rt(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from landlensdb_spark.operators.multimodal import default_decode
-        from landlensdb_spark.operators.webp import (
-            decode_webp,
-            encode_webp,
-            webp_dims,
-            webp_thumbnail,
-        )
-
-        for pdf in batches:
-            rows = []
-            for k in pdf["key"]:
-                k = int(k)
-                w, h = 8 + k % 21, 8 + (k * 5) % 19
-                variant = k % 3
-                if variant == 0:
-                    n = 2 + k % 15
-                    pal = np.zeros((n, 4), dtype=np.uint8)
-                    for i in range(n):
-                        pal[i] = (
-                            (k * 11 + i * 29) % 256,
-                            (k * 3 + i * 7) % 256,
-                            (k * 5 + i * 13) % 256,
-                            255,
-                        )
-                    idx = (
-                        np.arange(h, dtype=np.int64)[:, None]
-                        + np.arange(w, dtype=np.int64)[None, :]
-                        + k
-                    ) % n
-                    img = pal[idx]
-                    blob = encode_webp(img, use_palette=True)
-                    mode = "palette"
-                else:
-                    rr = (
-                        np.arange(h, dtype=np.int64)[:, None] * 7
-                        + np.arange(w, dtype=np.int64)[None, :] * 13
-                        + k
-                    )
-                    img = np.stack(
-                        [rr % 256, (rr * 3 + 1) % 256, (rr * 5 + 2) % 256,
-                         np.full((h, w), 255, dtype=np.int64)],
-                        axis=-1,
-                    ).astype(np.uint8)
-                    if variant == 1:
-                        blob = encode_webp(
-                            img, use_palette=False, subtract_green=True
-                        )
-                        mode = "subtract_green"
-                    else:
-                        blob = encode_webp(img, use_palette=False, cache_bits=6)
-                        mode = "color_cache"
-                mw, mh, _nf, codec, ok = default_decode(blob)
-                back = decode_webp(blob)
-                if not (back == img).all():
-                    raise ValueError(f"webp round-trip not exact for key={k}")
-                tdims = webp_dims(webp_thumbnail(blob, 8, 8))
-                rows.append(
-                    (k, mw, mh, codec, ok, mode, int(back[0, 0, 0]),
-                     tdims[0], tdims[1])
+    def _rt(k: int) -> tuple:
+        w, h = 8 + k % 21, 8 + (k * 5) % 19
+        variant = k % 3
+        if variant == 0:
+            n = 2 + k % 15
+            pal = np.zeros((n, 4), dtype=np.uint8)
+            for i in range(n):
+                pal[i] = (
+                    (k * 11 + i * 29) % 256,
+                    (k * 3 + i * 7) % 256,
+                    (k * 5 + i * 13) % 256,
+                    255,
                 )
-            yield pd.DataFrame(
-                rows,
-                columns=["key", "width", "height", "codec", "ok", "mode",
-                         "intensity", "thumb_w", "thumb_h"],
+            idx = (
+                np.arange(h, dtype=np.int64)[:, None]
+                + np.arange(w, dtype=np.int64)[None, :]
+                + k
+            ) % n
+            img = pal[idx]
+            blob = encode_webp(img, use_palette=True)
+            mode = "palette"
+        else:
+            rr = (
+                np.arange(h, dtype=np.int64)[:, None] * 7
+                + np.arange(w, dtype=np.int64)[None, :] * 13
+                + k
             )
+            img = np.stack(
+                [rr % 256, (rr * 3 + 1) % 256, (rr * 5 + 2) % 256,
+                 np.full((h, w), 255, dtype=np.int64)],
+                axis=-1,
+            ).astype(np.uint8)
+            if variant == 1:
+                blob = encode_webp(img, use_palette=False, subtract_green=True)
+                mode = "subtract_green"
+            else:
+                blob = encode_webp(img, use_palette=False, cache_bits=6)
+                mode = "color_cache"
+        mw, mh, _nf, codec, ok = default_decode(blob)
+        back = decode_webp(blob)
+        if not (back == img).all():
+            raise ValueError(f"webp round-trip not exact for key={k}")
+        tdims = webp_dims(webp_thumbnail(blob, 8, 8))
+        return (mw, mh, codec, ok, mode, int(back[0, 0, 0]), *tdims)
 
-    return keys.mapInPandas(
+    return map_rows(
+        keys,
+        "key",
         _rt,
-        "key long, width int, height int, codec string, ok boolean, "
+        "width int, height int, codec string, ok boolean, "
         "mode string, intensity int, thumb_w int, thumb_h int",
     )
 
@@ -4210,68 +4103,53 @@ def q_tiff_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     sides). Closes the TIFF slice of the F25 media seam (reference
     handlers/image.py:95-138 thumbnails anything PIL decodes); parity
     target reference landlensdb/handlers/image.py."""
-    from collections.abc import Iterator
-
     import numpy as np
-    import pandas as pd
+
+    from landlensdb_spark.operators.multimodal import default_decode
+    from landlensdb_spark.operators.tiff import (
+        decode_tiff,
+        encode_tiff_gray,
+        encode_tiff_rgb,
+        tiff_dims,
+        tiff_thumbnail,
+    )
 
     o = tables.load(spark, sf_dir, "orders")
     keys = o.filter(F.col("o_orderkey") < 1200).select(
         F.col("o_orderkey").alias("key")
     )
 
-    def _rt(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from landlensdb_spark.operators.multimodal import default_decode
-        from landlensdb_spark.operators.tiff import (
-            decode_tiff,
-            encode_tiff_gray,
-            encode_tiff_rgb,
-            tiff_dims,
-            tiff_thumbnail,
-        )
+    def _rt(k: int) -> tuple:
+        w, h = 10 + k % 19, 10 + (k * 5) % 13
+        npages = 1 + k % 3
+        rgb = bool(k % 2)
+        ramp = np.arange(h, dtype=np.int64)[:, None] * np.ones((1, w), dtype=np.int64)
+        if rgb:
+            pages = [
+                np.stack(
+                    [(ramp + k + p) % 256, (ramp * 2 + k) % 256, (ramp * 3 + p) % 256],
+                    axis=-1,
+                ).astype(np.uint8)
+                for p in range(npages)
+            ]
+            blob = encode_tiff_rgb(pages)
+        else:
+            pages = [((ramp + k + p) % 256).astype(np.uint8) for p in range(npages)]
+            blob = encode_tiff_gray(pages)
+        meta = default_decode(blob)
+        out = decode_tiff(blob)
+        if not (out == pages[0]).all() or out.ndim != (3 if rgb else 2):
+            raise ValueError(f"tiff round-trip not exact for key={k}")
+        intensity = int(out[0, 0, 0] if rgb else out[0, 0])
+        tdims = tiff_dims(tiff_thumbnail(blob, 8, 8))
+        return (*meta, "rgb" if rgb else "gray", intensity, *tdims)
 
-        for pdf in batches:
-            rows = []
-            for k in pdf["key"]:
-                k = int(k)
-                w, h = 10 + k % 19, 10 + (k * 5) % 13
-                npages = 1 + k % 3
-                rgb = bool(k % 2)
-                ramp = np.arange(h, dtype=np.int64)[:, None] * np.ones(
-                    (1, w), dtype=np.int64
-                )
-                if rgb:
-                    pages = [
-                        np.stack(
-                            [(ramp + k + p) % 256, (ramp * 2 + k) % 256,
-                             (ramp * 3 + p) % 256],
-                            axis=-1,
-                        ).astype(np.uint8)
-                        for p in range(npages)
-                    ]
-                    blob = encode_tiff_rgb(pages)
-                else:
-                    pages = [((ramp + k + p) % 256).astype(np.uint8)
-                             for p in range(npages)]
-                    blob = encode_tiff_gray(pages)
-                mw, mh, mp, codec, ok = default_decode(blob)
-                out = decode_tiff(blob)
-                if not (out == pages[0]).all() or out.ndim != (3 if rgb else 2):
-                    raise ValueError(f"tiff round-trip not exact for key={k}")
-                intensity = int(out[0, 0, 0] if rgb else out[0, 0])
-                tdims = tiff_dims(tiff_thumbnail(blob, 8, 8))
-                rows.append((k, mw, mh, mp, codec, ok, "rgb" if rgb else "gray",
-                             intensity, tdims[0], tdims[1]))
-            yield pd.DataFrame(
-                rows,
-                columns=["key", "width", "height", "n_pages", "codec", "ok",
-                         "mode", "intensity", "thumb_w", "thumb_h"],
-            )
-
-    return keys.mapInPandas(
+    return map_rows(
+        keys,
+        "key",
         _rt,
-        "key long, width int, height int, n_pages int, codec string, "
-        "ok boolean, mode string, intensity int, thumb_w int, thumb_h int",
+        "width int, height int, n_pages int, codec string, ok boolean, "
+        "mode string, intensity int, thumb_w int, thumb_h int",
     )
 
 
@@ -5624,10 +5502,9 @@ def q_jpeg_color_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     recovered RGB. The palette round-trips bit-exactly (flat DC-only
     planes; verified exhaustively in pytest), so any YCbCr-matrix /
     chroma-table / interleaved-MCU / upsample bug breaks the hash."""
-    from collections.abc import Iterator
-
     import numpy as np
-    import pandas as pd
+
+    from landlensdb_spark.operators.jpeg import decode_jpeg, encode_jpeg_color
 
     o = tables.load(spark, sf_dir, "orders")
     keys = o.filter(F.col("o_orderkey") < 1000).select(
@@ -5635,38 +5512,20 @@ def q_jpeg_color_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     palette = list(_JPEG_PALETTE)
 
-    def _rt(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from landlensdb_spark.operators.jpeg import decode_jpeg, encode_jpeg_color
+    def _rt(k: int) -> tuple:
+        w, h = 10 + k % 23, 10 + (k * 7) % 19
+        color = palette[k % 8]
+        img = np.zeros((h, w, 3), dtype=np.uint8)
+        img[...] = color
+        sub = "420" if k % 2 == 0 else "444"
+        out = decode_jpeg(encode_jpeg_color(img, quality=85, subsample=sub))
+        if out.shape != (h, w, 3) or not np.array_equal(out, img):
+            # not assert: python -O removes asserts, and exactness IS the
+            # oracle's premise
+            raise ValueError(f"color round-trip not exact for key={k} color={color}")
+        return (w, h, *color)
 
-        for pdf in batches:
-            ks, ws, hs, rs, gs, bs = [], [], [], [], [], []
-            for k in pdf["key"]:
-                k = int(k)
-                w, h = 10 + k % 23, 10 + (k * 7) % 19
-                color = palette[k % 8]
-                img = np.zeros((h, w, 3), dtype=np.uint8)
-                img[...] = color
-                sub = "420" if k % 2 == 0 else "444"
-                out = decode_jpeg(encode_jpeg_color(img, quality=85, subsample=sub))
-                if out.shape != (h, w, 3) or not np.array_equal(out, img):
-                    # not assert: python -O removes asserts, and exactness
-                    # IS the oracle's premise
-                    raise ValueError(
-                        f"color round-trip not exact for key={k} color={color}"
-                    )
-                ks.append(k)
-                ws.append(w)
-                hs.append(h)
-                rs.append(color[0])
-                gs.append(color[1])
-                bs.append(color[2])
-            yield pd.DataFrame(
-                {"key": ks, "width": ws, "height": hs, "r": rs, "g": gs, "b": bs}
-            )
-
-    return keys.mapInPandas(
-        _rt, "key long, width int, height int, r int, g int, b int"
-    )
+    return map_rows(keys, "key", _rt, "width int, height int, r int, g int, b int")
 
 
 @query(
@@ -5688,10 +5547,9 @@ def q_jpeg_progressive_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     the progressive path stages exactly the baseline coefficients, so the
     palette's bit-exact round-trip carries over; any DC/AC refine or
     EOB-run bug breaks the hash."""
-    from collections.abc import Iterator
-
     import numpy as np
-    import pandas as pd
+
+    from landlensdb_spark.operators.jpeg import decode_jpeg, encode_jpeg_progressive
 
     o = tables.load(spark, sf_dir, "orders")
     keys = o.filter(F.col("o_orderkey") < 1000).select(
@@ -5699,41 +5557,20 @@ def q_jpeg_progressive_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     palette = list(_JPEG_PALETTE)
 
-    def _rt(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from landlensdb_spark.operators.jpeg import (
-            decode_jpeg,
-            encode_jpeg_progressive,
-        )
-
-        for pdf in batches:
-            ks, ws, hs, rs, gs, bs = [], [], [], [], [], []
-            for k in pdf["key"]:
-                k = int(k)
-                w, h = 9 + k % 21, 9 + (k * 11) % 23
-                color = palette[k % 8]
-                img = np.zeros((h, w, 3), dtype=np.uint8)
-                img[...] = color
-                sub = "420" if k % 2 == 0 else "444"
-                out = decode_jpeg(
-                    encode_jpeg_progressive(img, quality=85, subsample=sub)
-                )
-                if out.shape != (h, w, 3) or not np.array_equal(out, img):
-                    raise ValueError(
-                        f"progressive round-trip not exact for key={k} color={color}"
-                    )
-                ks.append(k)
-                ws.append(w)
-                hs.append(h)
-                rs.append(color[0])
-                gs.append(color[1])
-                bs.append(color[2])
-            yield pd.DataFrame(
-                {"key": ks, "width": ws, "height": hs, "r": rs, "g": gs, "b": bs}
+    def _rt(k: int) -> tuple:
+        w, h = 9 + k % 21, 9 + (k * 11) % 23
+        color = palette[k % 8]
+        img = np.zeros((h, w, 3), dtype=np.uint8)
+        img[...] = color
+        sub = "420" if k % 2 == 0 else "444"
+        out = decode_jpeg(encode_jpeg_progressive(img, quality=85, subsample=sub))
+        if out.shape != (h, w, 3) or not np.array_equal(out, img):
+            raise ValueError(
+                f"progressive round-trip not exact for key={k} color={color}"
             )
+        return (w, h, *color)
 
-    return keys.mapInPandas(
-        _rt, "key long, width int, height int, r int, g int, b int"
-    )
+    return map_rows(keys, "key", _rt, "width int, height int, r int, g int, b int")
 
 
 # ---------------------------------------------------------------------------

@@ -16,20 +16,22 @@ self-encoded fixtures:
   (image.py:140-163: d + m/60 + s/3600, S/W negation);
 - :func:`encode_jpeg_exif` — minimal valid JPEG writer (SOI, APP1, SOS
   stub, EOI) for deterministic fixtures, in either byte order;
-- :func:`extract_exif` — the Spark operator: ONE ``mapInPandas`` pass over
-  a binary image column. Byte-format walking is inherently per-record
-  branchy logic, so each Arrow batch runs a tight python loop over its rows
-  (like the MVT decoder) — the engine-level contract (no shuffle, binary
-  column never leaves the scan task, Arrow-batched transfer) is unchanged.
+- :func:`extract_exif` — the Spark operator: ONE ``mapInArrow`` pass
+  (``multimodal.map_rows``) over a binary image column. Byte-format walking
+  is inherently per-record branchy logic, so :func:`exif_row` runs once per
+  row of each Arrow batch (like the MVT decoder) — the engine-level
+  contract (no shuffle, binary column never leaves the scan task,
+  Arrow-batched transfer) is unchanged.
 """
 
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+
+from landlensdb_spark.operators.multimodal import map_rows
 
 # TIFF value types we decode (public spec numbering)
 _T_BYTE, _T_ASCII, _T_SHORT, _T_LONG, _T_RATIONAL = 1, 2, 3, 4, 5
@@ -254,44 +256,27 @@ def encode_jpeg_exif(
 # Spark operator
 # ---------------------------------------------------------------------------
 
-def extract_exif_pdf(images: pd.Series) -> pd.DataFrame:
-    """Batch kernel: Series of JPEG bytes -> (lat, lon, focal_mm,
-    camera_model, exif_dt); NaN/None where absent."""
-    lats, lons, focals, models, dts = [], [], [], [], []
-    for b in images:
-        tags = parse_exif_bytes(b)
-        lat = lon = focal = None
-        model = dt = None
-        if tags:
-            dms_lat = tags.get(0x10000 + GPS_LAT)
-            dms_lon = tags.get(0x10000 + GPS_LON)
-            if dms_lat and dms_lon:
-                lat = gps_to_decimal(dms_lat, tags.get(0x10000 + GPS_LAT_REF, "N"), "S")
-                lon = gps_to_decimal(dms_lon, tags.get(0x10000 + GPS_LON_REF, "E"), "W")
-                if lat is None or lon is None:
-                    # one corrupt axis (0-denominator rational) -> the whole
-                    # coordinate is untagged, never a dangling half-point
-                    lat = lon = None
-            fr = tags.get(TAG_FOCAL_LENGTH)
-            if fr:
-                num, den = fr[0]
-                focal = num / den if den else None
-            model = tags.get(TAG_MODEL)
-            dt = tags.get(TAG_DATETIME_ORIGINAL)
-        lats.append(lat)
-        lons.append(lon)
-        focals.append(focal)
-        models.append(model)
-        dts.append(dt)
-    return pd.DataFrame(
-        {
-            "lat": pd.array(lats, dtype="float64"),
-            "lon": pd.array(lons, dtype="float64"),
-            "focal_mm": pd.array(focals, dtype="float64"),
-            "camera_model": models,
-            "exif_dt": dts,
-        }
-    )
+def exif_row(b: bytes | None) -> tuple:
+    """Row kernel: JPEG bytes -> (lat, lon, focal_mm, camera_model,
+    exif_dt); None where absent."""
+    tags = parse_exif_bytes(b)
+    if not tags:
+        return (None, None, None, None, None)
+    lat = lon = focal = None
+    dms_lat = tags.get(0x10000 + GPS_LAT)
+    dms_lon = tags.get(0x10000 + GPS_LON)
+    if dms_lat and dms_lon:
+        lat = gps_to_decimal(dms_lat, tags.get(0x10000 + GPS_LAT_REF, "N"), "S")
+        lon = gps_to_decimal(dms_lon, tags.get(0x10000 + GPS_LON_REF, "E"), "W")
+        if lat is None or lon is None:
+            # one corrupt axis (0-denominator rational) -> the whole
+            # coordinate is untagged, never a dangling half-point
+            lat = lon = None
+    fr = tags.get(TAG_FOCAL_LENGTH)
+    if fr:
+        num, den = fr[0]
+        focal = num / den if den else None
+    return (lat, lon, focal, tags.get(TAG_MODEL), tags.get(TAG_DATETIME_ORIGINAL))
 
 
 def extract_exif(
@@ -300,23 +285,12 @@ def extract_exif(
     drop_untagged: bool = True,
     drop_bytes: bool = True,
 ) -> DataFrame:
-    """Attach EXIF columns decoded from real JPEG bytes (one mapInPandas
+    """Attach EXIF columns decoded from real JPEG bytes (one mapInArrow
     pass, binary column dropped before anything shuffles — the byte-level
-    twin of extract_geotags' html path)."""
-    keep = [f for f in df.schema.fields if not (drop_bytes and f.name == image_col)]
-    out_schema = ", ".join(
-        [f"{f.name} {f.dataType.simpleString()}" for f in keep] + [EXIF_COLS]
-    )
-    keep_names = [f.name for f in keep]
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ext = extract_exif_pdf(pdf[image_col])
-            out = pdf[keep_names].copy()
-            for c in ext.columns:
-                out[c] = ext[c].to_numpy() if ext[c].dtype.kind == "f" else ext[c]
-            if drop_untagged:
-                out = out[out["lat"].notna() & out["lon"].notna()]
-            yield out
-
-    return df.mapInPandas(_run, out_schema)
+    twin of extract_geotags' html path). The untagged-row filter runs
+    after the map, which is a plan barrier: the decode runs once."""
+    keep = [c for c in df.columns if not (drop_bytes and c == image_col)]
+    out = map_rows(df, image_col, exif_row, EXIF_COLS, keep=keep)
+    if drop_untagged:
+        out = out.filter(F.col("lat").isNotNull() & F.col("lon").isNotNull())
+    return out

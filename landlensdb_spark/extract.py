@@ -3,8 +3,8 @@
 The web-scale analog of the reference's EXIF loader
 (/root/reference/landlensdb/handlers/image.py:294-415): where the reference
 walks a directory and calls PIL per image, we scan the pages table and run
-one Arrow-batched pandas UDF per partition — pandas C-level ``.str`` regex
-ops, no per-row Python.
+one ``mapInArrow`` pass per partition — RE2 regex over the whole Arrow
+column (``pyarrow.compute``), no per-row Python.
 
 Extraction semantics re-expressed from the reference:
 - geo-microdata ``<meta property="place:location:latitude" content=...>``
@@ -76,11 +76,13 @@ def extract_geotag_pa(s, with_text: bool = True) -> tuple:
 
     Returns ``(lat, lon, text)`` — lat/lon as float64 numpy arrays (NaN for
     untagged rows), ``text`` an Arrow string array (None when
-    ``with_text=False``). Shared by the pandas-facing
-    :func:`extract_geotag_arrow` and the ``mapInArrow`` operators
+    ``with_text=False``). Shared by the ``mapInArrow`` operators
     (:func:`extract_geotags`, ``operators.fused.extract_pip``), which hand
     the Spark-delivered Arrow column straight here — no pandas
     materialization of the (dominant) html payload on the input side.
+    Arrow's ``extract_regex`` runs RE2 over the whole column in C++, where
+    pandas ``.str.extract`` (:func:`extract_geotag_pdf`, the test oracle)
+    loops Python's ``re`` per row.
     """
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -129,28 +131,6 @@ def extract_geotag_pa(s, with_text: bool = True) -> tuple:
     return lat, lon, text
 
 
-def extract_geotag_arrow(html: pd.Series, with_text: bool = True) -> pd.DataFrame:
-    """RE2-vectorized extraction kernel (pyarrow.compute) — same contract as
-    :func:`extract_geotag_pdf` (the pytest oracle asserts identical output).
-
-    pandas ``.str.extract`` loops Python's ``re`` per row; Arrow's
-    ``extract_regex`` runs RE2 over the whole column in C++, and the
-    binary->string cast replaces the per-row ``bytes.decode`` lambda. This is
-    the hot path at 100 TB: the UDF budget is regex over every page.
-    ``with_text=False`` skips the text regex pass entirely (geo-only
-    pipelines: one fewer full-column RE2 scan and no string payload back).
-    """
-    import pyarrow as pa
-
-    arr = pa.array(html.values, type=pa.binary())
-    s = arr.cast(pa.string())
-    lat, lon, text = extract_geotag_pa(s, with_text=with_text)
-    out = {"lat": lat, "lon": lon}
-    if with_text:
-        out["text"] = text.to_pandas()
-    return pd.DataFrame(out)
-
-
 def extract_geotags(
     df: DataFrame,
     html: str = "html",
@@ -174,11 +154,11 @@ def extract_geotags(
     pandas round-trip alone cost ~0.16s/600k rows on 8 cores). ``drop_html=True`` drops the heavy binary column on output so
     downstream shuffles never carry it. ``with_text=False`` omits
     ``text_extracted`` — geo-only pipelines skip one full-column regex pass
-    AND the (dominant) Python->JVM string transfer; mapInPandas is a plan
+    AND the (dominant) Python->JVM string transfer; mapInArrow is a plan
     barrier, so Catalyst cannot column-prune through it and the caller must
     ask for the narrow output explicitly.
 
-    ``keep`` restricts the pass-through columns: mapInPandas serializes
+    ``keep`` restricts the pass-through columns: mapInArrow serializes
     every INPUT column across the Arrow boundary, so narrow pipelines
     (e.g. url-only tiling) should name just what they need — the heavy
     ``text`` column otherwise rides the transfer both ways for nothing.

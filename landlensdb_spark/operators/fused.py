@@ -141,7 +141,7 @@ def extract_pip(
         return _worker_cache[key]
 
     # ship ONLY the needed columns through the Arrow boundary: the python
-    # stage reads `html` + the kept columns, but mapInPandas serializes
+    # stage reads `html` + the kept columns, but mapInArrow serializes
     # every input column — on the bench pages table the unused `text`
     # column alone is ~1/3 of the transferred bytes
     pages = pages.select(*keep_names, html) if html not in keep_names else (

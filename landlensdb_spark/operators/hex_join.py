@@ -97,11 +97,13 @@ def hex_distance_join(
         )
         return df.withColumn(px, mx).withColumn(py, my)
 
-    p = _merc(probes, "_px", "_py").select(
-        F.col(probe_id),
-        "_px",
-        "_py",
-        F.explode(hex_kring(hex_encode(lon, lat, res), k)).alias("_cell"),
+    # the cell gets its own projection: hex_kring reads its cell five
+    # times per ring cell, so an inline hex_encode would be copied into
+    # the plan ~5 * (3k(k+1)+1) times (megabytes of expression at k=3)
+    p = (
+        _merc(probes, "_px", "_py")
+        .select(F.col(probe_id), "_px", "_py", hex_encode(lon, lat, res).alias("_hc"))
+        .select(probe_id, "_px", "_py", F.explode(hex_kring("_hc", k)).alias("_cell"))
     )
     s = _merc(sites, "_sx", "_sy").select(
         F.col(site_id), "_sx", "_sy", hex_encode(lon, lat, res).alias("_cell")

@@ -20,48 +20,62 @@ Contract per modality:
 - ``frame_sample``: binary -> array<binary> (video frame sampling)
 - ``feature``: binary -> array<float> (embedding extraction)
 
-Batch shape: ``mapInPandas`` so one Arrow batch of N binaries is decoded in
-one vectorized call; memory per task = batch_rows x max_payload, which is
-why media tables should set ``spark.sql.execution.arrow.maxRecordsPerBatch``
-small (512) and ``maxPartitionBytes`` large.
+Batch shape: one ``mapInArrow`` pass per stage through :func:`map_rows`.
+Each Arrow batch of N binaries is decoded row by row (codec walks are
+per-record branchy logic); the pass-through columns stay Arrow arrays and
+are never converted to pandas. Memory per task = batch_rows x
+max_payload, which is why media tables should set
+``spark.sql.execution.arrow.maxRecordsPerBatch`` small (512) and
+``maxPartitionBytes`` large.
 """
 
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
+from collections.abc import Callable
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
-#: |x| <= 2**53 survives an int64 -> float64 -> long round-trip exactly.
-_FLOAT64_EXACT_INT = float(1 << 53)
 
+def map_rows(
+    df: DataFrame,
+    col: str,
+    fn: Callable[[object], tuple],
+    out: str,
+    keep: list[str] | None = None,
+) -> DataFrame:
+    """One ``mapInArrow`` pass: ``fn`` runs on each value of ``df[col]``
+    (``None`` for NULL) and its returned tuple is appended as the typed
+    ``out`` columns (DDL, e.g. ``"width int, thumb binary"``).
 
-def _guard_long_precision(pdf: pd.DataFrame, long_cols: list[str]) -> None:
-    """Fail LOUDLY on the Arrow->pandas nullable-long precision trap.
+    The ``keep`` columns (default: all) come back as an Arrow ``select`` of
+    the input batch, never converted to pandas, so a nullable long rides
+    through exactly. Only ``keep`` and ``col`` cross the boundary."""
+    from pyspark.sql.pandas.types import to_arrow_type
+    from pyspark.sql.types import StructType
 
-    Spark's Arrow->pandas conversion inside mapInPandas turns a long
-    column that contains NULLs in the batch into float64 (NaN-backed).
-    Values with |x| > 2**53 then silently lose their low bits — a 64-bit
-    hash riding through a media pass-through operator comes out a few
-    Hamming bits off with no error anywhere. Smaller magnitudes round-trip
-    exactly and are passed through unharmed, so this guard only rejects
-    batches that have ALREADY been corrupted beyond recovery; callers
-    should null-fill (sentinel) such columns or re-join them after the
-    media stage instead."""
-    for c in long_cols:
-        s = pdf[c]
-        if s.dtype == np.float64:
-            bad = s.abs().max()  # NaN-safe: max skips NaN
-            if bad == bad and bad > _FLOAT64_EXACT_INT:
-                raise ValueError(
-                    f"column '{c}' is a nullable long with |values| > 2^53: "
-                    "Arrow->pandas upcast it to float64 and its low bits are "
-                    "already lost. Null-fill it with a sentinel before the "
-                    "media stage, or join it back afterwards."
-                )
+    fields = {f.name: f for f in df.schema.fields}
+    keep = list(fields) if keep is None else list(keep)
+    new = StructType.fromDDL(out).fields
+    types = [to_arrow_type(f.dataType) for f in new]
+    names = keep + [f.name for f in new]
+
+    def _run(batches):
+        import pyarrow as pa
+
+        for b in batches:
+            rows = [fn(v) for v in b.column(col).to_pylist()]
+            cols = list(zip(*rows)) if rows else [()] * len(types)
+            yield pa.RecordBatch.from_arrays(
+                b.select(keep).columns
+                + [pa.array(c, type=t) for c, t in zip(cols, types)],
+                names=names,
+            )
+
+    return df.select(*dict.fromkeys(keep + [col])).mapInArrow(
+        _run, StructType([fields[c] for c in keep] + new)
+    )
 
 
 def default_decode(payload: bytes) -> tuple[int, int, int, str, bool]:
@@ -198,29 +212,16 @@ DECODERS = {"decode": default_decode, "thumbnail": _default_thumbnail}
 
 
 def decode_media(df: DataFrame, media_col: str = "media") -> DataFrame:
-    """Attach a media_meta struct column via one Arrow-batched pass."""
-    keep = [f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields]
-    out_schema = ", ".join(
-        keep + ["width int", "height int", "n_frames int", "codec string", "ok boolean"]
-    )
-    names = [f.name for f in df.schema.fields]
-
+    """Attach (width, height, n_frames, codec, ok) via one Arrow-batched
+    pass."""
     # capture at plan-build time: python workers re-import this module, so
     # a DECODERS swap made on the driver must travel inside the closure
-    dec = DECODERS["decode"]
-    long_cols = [f.name for f in df.schema.fields if f.dataType.simpleString() == "bigint"]
-
-    def _dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            _guard_long_precision(pdf, long_cols)
-            metas = [dec(b) for b in pdf[media_col]]
-            out = pdf[names].copy()
-            cols = list(zip(*metas)) if metas else [[], [], [], [], []]
-            for i, c in enumerate(("width", "height", "n_frames", "codec", "ok")):
-                out[c] = list(cols[i]) if metas else []
-            yield out
-
-    return df.mapInPandas(_dec, out_schema)
+    return map_rows(
+        df,
+        media_col,
+        DECODERS["decode"],
+        "width int, height int, n_frames int, codec string, ok boolean",
+    )
 
 
 def media_thumbnail(
@@ -228,38 +229,20 @@ def media_thumbnail(
 ) -> DataFrame:
     """Attach (thumb binary, thumb_w int, thumb_h int) via one Arrow-batched
     pass — the reference's thumbnail op
-    (/root/reference/landlensdb/handlers/image.py:95-138) as a mapInPandas
+    (/root/reference/landlensdb/handlers/image.py:95-138) as a row-map
     stage. PNG payloads produce real thumbnails (in-repo codec, shrink-only
     aspect-preserving box filter); undecodable payloads yield nulls."""
-    keep = [f.name for f in df.schema.fields]
-    out_schema = ", ".join(
-        [f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields]
-        + ["thumb binary", "thumb_w int", "thumb_h int"]
-    )
+    from landlensdb_spark.operators.jpeg import jpeg_dims
+    from landlensdb_spark.operators.raster import png_dims
 
-    thumbnail = DECODERS["thumbnail"]  # captured at plan-build time (see _dec)
-    long_cols = [f.name for f in df.schema.fields if f.dataType.simpleString() == "bigint"]
+    thumbnail = DECODERS["thumbnail"]  # captured at plan-build time
 
-    def _thumb(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from landlensdb_spark.operators.jpeg import jpeg_dims
-        from landlensdb_spark.operators.raster import png_dims
+    def _thumb(b: bytes | None) -> tuple:
+        t = thumbnail(b, max_w, max_h) if b else None
+        d = (png_dims(t) or jpeg_dims(t)) if t is not None else None
+        return (t, *(d or (None, None)))
 
-        for pdf in batches:
-            _guard_long_precision(pdf, long_cols)
-            out = pdf[keep].copy()
-            thumbs, ws, hs = [], [], []
-            for b in pdf[media_col]:
-                t = None if b is None or len(b) == 0 else thumbnail(b, max_w, max_h)
-                d = (png_dims(t) or jpeg_dims(t)) if t is not None else None
-                thumbs.append(t)
-                ws.append(d[0] if d else None)
-                hs.append(d[1] if d else None)
-            out["thumb"] = thumbs
-            out["thumb_w"] = pd.array(ws, dtype="Int32")
-            out["thumb_h"] = pd.array(hs, dtype="Int32")
-            yield out
-
-    return df.mapInPandas(_thumb, out_schema)
+    return map_rows(df, media_col, _thumb, "thumb binary, thumb_w int, thumb_h int")
 
 
 def media_features(
@@ -267,22 +250,14 @@ def media_features(
 ) -> DataFrame:
     """binary -> deterministic feature vector (stub: md5-seeded; production:
     a real vision/audio encoder). Output: (id, feature array<float>)."""
-    out_schema = f"{id_col} string, feature array<float>"
 
-    def _feat(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = []
-            for b in pdf[media_col]:
-                if b is None or len(b) == 0:
-                    feats.append(np.zeros(dim, dtype=np.float32))
-                    continue
-                seed = int.from_bytes(hashlib.md5(b).digest()[:8], "big") % (2**32)
-                feats.append(
-                    np.random.default_rng(seed).standard_normal(dim).astype(np.float32)
-                )
-            yield pd.DataFrame({id_col: pdf[id_col].to_numpy(), "feature": feats})
+    def _feat(b: bytes | None) -> tuple:
+        if not b:
+            return (np.zeros(dim, dtype=np.float32),)
+        seed = int.from_bytes(hashlib.md5(b).digest()[:8], "big") % (2**32)
+        return (np.random.default_rng(seed).standard_normal(dim).astype(np.float32),)
 
-    return df.mapInPandas(_feat, out_schema)
+    return map_rows(df, media_col, _feat, "feature array<float>", keep=[id_col])
 
 
 def frame_sample(
@@ -294,40 +269,20 @@ def frame_sample(
     multi-image GIFs (block re-wrap via operators/gif.py; each element is
     a standalone single-image GIF); other payloads yield an empty array
     honestly — no synthetic slicing in the production path."""
-    keep = [f.name for f in df.schema.fields]
-    out_schema = ", ".join(
-        [f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields]
-        + ["frames array<binary>"]
-    )
-    long_cols = [f.name for f in df.schema.fields if f.dataType.simpleString() == "bigint"]
+    from landlensdb_spark.operators.gif import gif_frames
+    from landlensdb_spark.operators.video import mjpeg_frames
 
-    def _fs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from landlensdb_spark.operators.gif import gif_frames
-        from landlensdb_spark.operators.video import mjpeg_frames
+    def _fs(b: bytes | None) -> tuple:
+        if not b:
+            return ([],)
+        grab = gif_frames if b[:6] in (b"GIF87a", b"GIF89a") else mjpeg_frames
+        try:  # one parse: unknown AND corrupt/truncated payloads both
+            # degrade to an empty list per row, never a failed task
+            return (grab(b)[::every_n],)
+        except ValueError:
+            return ([],)
 
-        def _grab(b: bytes) -> list[bytes]:
-            if b[:6] in (b"GIF87a", b"GIF89a"):
-                return gif_frames(b)
-            return mjpeg_frames(b)
-
-        for pdf in batches:
-            _guard_long_precision(pdf, long_cols)
-            out = pdf[keep].copy()
-            frames = []
-            for b in pdf[media_col]:
-                if b is None or len(b) == 0:
-                    frames.append([])
-                    continue
-                try:  # one parse: unknown AND corrupt/truncated payloads
-                    # both degrade to an empty list per row, never a
-                    # failed task
-                    frames.append(_grab(bytes(b))[::every_n])
-                except ValueError:
-                    frames.append([])
-            out["frames"] = frames
-            yield out
-
-    return df.mapInPandas(_fs, out_schema)
+    return map_rows(df, media_col, _fs, "frames array<binary>")
 
 
 _PHASH_BASIS = None
@@ -371,79 +326,50 @@ def phash64(img) -> int:
     return out - (1 << 64) if out >= (1 << 63) else out
 
 
+def _luma(b: bytes):
+    """Grayscale pixels of the first image in ``b`` — PNG, JPEG, WebP, GIF,
+    TIFF, or the FIRST frame of an MJPEG-AVI (the video identity key) —
+    or None when no in-repo codec decodes it. pHash is defined on BT.601
+    luma."""
+    import struct
+    import zlib
+
+    from landlensdb_spark.operators.gif import decode_gif
+    from landlensdb_spark.operators.jpeg import decode_jpeg, rgb_luma
+    from landlensdb_spark.operators.raster import decode_png_gray
+    from landlensdb_spark.operators.tiff import decode_tiff
+    from landlensdb_spark.operators.video import mjpeg_frames
+    from landlensdb_spark.operators.webp import decode_webp
+
+    def _first_frame(v: bytes):
+        frames = mjpeg_frames(v)
+        if not frames:
+            raise ValueError("empty video")
+        return decode_jpeg(frames[0])
+
+    for dec in (
+        decode_png_gray,
+        decode_jpeg,
+        lambda v: decode_webp(v)[:, :, :3],
+        decode_gif,
+        decode_tiff,
+        _first_frame,
+    ):
+        try:
+            img = dec(b)
+        except (ValueError, zlib.error, struct.error):
+            continue
+        return rgb_luma(img) if img.ndim == 3 else img
+    return None
+
+
 def media_phash(df: DataFrame, media_col: str = "media") -> DataFrame:
     """Attach a ``phash long`` column (null for undecodable payloads) in
     one Arrow-batched pass — the image near-dup key: exact-match or
     banded grouping on it is the image analog of text simhash dedup."""
-    keep = [f.name for f in df.schema.fields]
-    out_schema = ", ".join(
-        [f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields]
-        + ["phash long"]
-    )
 
-    long_cols = [f.name for f in df.schema.fields if f.dataType.simpleString() == "bigint"]
+    def _ph(b: bytes | None) -> tuple:
+        img = _luma(b) if b else None
+        return (phash64(img) if img is not None else None,)
 
-    def _ph(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct as _struct
-        import zlib as _zlib
-
-        from landlensdb_spark.operators.jpeg import decode_jpeg, rgb_luma
-        from landlensdb_spark.operators.raster import decode_png_gray
-
-        def _jpeg_luma(b: bytes):
-            img = decode_jpeg(b)
-            if img.ndim == 3:  # BT.601 luma — pHash is defined on grayscale
-                img = rgb_luma(img)
-            return img
-
-        def _video_luma(b: bytes):
-            # video identity key = pHash of the FIRST frame
-            from landlensdb_spark.operators.video import mjpeg_frames
-
-            frames = mjpeg_frames(b)
-            if not frames:
-                raise ValueError("empty video")
-            return _jpeg_luma(frames[0])
-
-        def _gif_luma(b: bytes):
-            from landlensdb_spark.operators.gif import decode_gif
-
-            img = decode_gif(b)
-            return rgb_luma(img) if img.ndim == 3 else img
-
-        def _tiff_luma(b: bytes):
-            from landlensdb_spark.operators.tiff import decode_tiff
-
-            img = decode_tiff(b)
-            return rgb_luma(img) if img.ndim == 3 else img
-
-        def _webp_luma(b: bytes):
-            from landlensdb_spark.operators.webp import decode_webp
-
-            return rgb_luma(decode_webp(b)[:, :, :3])
-
-        for pdf in batches:
-            _guard_long_precision(pdf, long_cols)
-            out = pdf[keep].copy()
-            hashes = []
-            for b in pdf[media_col]:
-                img = None
-                if b is not None and len(b):
-                    for dec in (
-                        decode_png_gray,
-                        _jpeg_luma,
-                        _webp_luma,
-                        _gif_luma,
-                        _tiff_luma,
-                        _video_luma,
-                    ):
-                        try:
-                            img = dec(bytes(b))
-                            break
-                        except (ValueError, _zlib.error, _struct.error):
-                            continue
-                hashes.append(phash64(img) if img is not None else None)
-            out["phash"] = pd.array(hashes, dtype="Int64")
-            yield out
-
-    return df.mapInPandas(_ph, out_schema)
+    return map_rows(df, media_col, _ph, "phash long")

@@ -35,8 +35,9 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from landlensdb_spark.geo.geometry import align_heading, bearing, point_segment_t
+from landlensdb_spark.geo.geometry import bearing, point_segment_t
 from landlensdb_spark.geo.mercator import R, np_inv_merc, np_merc_x, np_merc_y
+from landlensdb_spark.geo.sphere import align_heading_col
 
 WORLD = 2.0 * math.pi * R  # mercator world width in meters
 
@@ -166,7 +167,6 @@ def snap_to_network(
     else:
         bc, token = hit[1], hit[2]
 
-    in_cols = points.columns
     out_schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in points.schema)
     out_schema += (
         ", line_id bigint, snap_dist double, snapped_lon double, snapped_lat double,"
@@ -260,15 +260,8 @@ def snap_to_network(
     if compass is not None:
         # realignment: forward or reverse segment bearing, whichever is
         # angularly closer to the compass angle (snap.py:147-153)
-        b, a = F.col("seg_bearing"), F.col(compass)
-        rev = (b + F.lit(180.0)) % F.lit(360.0)
-        d_fwd = F.abs(((b - a + F.lit(180.0)) % F.lit(360.0)) - F.lit(180.0))
-        d_rev = F.abs(((rev - a + F.lit(180.0)) % F.lit(360.0)) - F.lit(180.0))
         result = result.withColumn(
             "snapped_angle",
-            F.when(F.col("seg_bearing").isNull(), F.lit(None).cast("double"))
-            .when(d_fwd <= d_rev, b)
-            .otherwise(rev),
+            align_heading_col(F.col("seg_bearing"), F.col(compass)),
         )
-    _ = in_cols, align_heading  # numpy twin used in tests
     return result

@@ -10,8 +10,8 @@ from landlensdb_spark.exif import (
     TAG_FOCAL_LENGTH,
     TAG_MODEL,
     encode_jpeg_exif,
+    exif_row,
     extract_exif,
-    extract_exif_pdf,
     gps_to_decimal,
     parse_exif_bytes,
 )
@@ -55,21 +55,20 @@ def test_no_gps_and_corrupt_inputs():
 
 
 def test_batch_kernel_matches_generator():
-    import pandas as pd
-
     ids = list(range(40))
-    rows = [tables.build_photo_row(i) for i in ids]
-    out = extract_exif_pdf(pd.Series([r[1] for r in rows]))
+    out = [exif_row(tables.build_photo_row(i)[1]) for i in ids]
     i = np.array(ids, dtype=np.int64)
     want_lat = np.round(synth.np_lat(i), 6)
     want_lon = np.round(synth.np_lon(i), 6)
     for j in ids:
+        lat, lon, focal, model, _dt = out[j]
         if j % 7 == 0:
-            assert np.isnan(out["lat"][j])
+            assert lat is None and lon is None
         else:
-            assert out["lat"][j] == want_lat[j] and out["lon"][j] == want_lon[j]
-        assert out["focal_mm"][j] == (((j * 37) % 5000) + 150) / 100.0
-        assert out["camera_model"][j] == f"CAM{j % 4}"
+            assert lat == want_lat[j] and lon == want_lon[j]
+        assert focal == (((j * 37) % 5000) + 150) / 100.0
+        assert model == f"CAM{j % 4}"
+    assert exif_row(None) == (None,) * 5
 
 
 def test_spark_operator_end_to_end(spark):

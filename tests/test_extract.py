@@ -70,12 +70,14 @@ def test_arrow_kernel_matches_pandas_oracle():
     """The RE2/Arrow hot-path kernel must agree with the pandas reference
     kernel row-for-row (incl. NaN placement and text bytes)."""
     import pandas as pd
+    import pyarrow as pa
 
-    from landlensdb_spark.extract import extract_geotag_arrow, extract_geotag_pdf
+    from landlensdb_spark.extract import extract_geotag_pa, extract_geotag_pdf
 
     html = pd.Series([tables.build_page_row(i, clustered=True)[2] for i in range(5000)])
     a = extract_geotag_pdf(html).reset_index(drop=True)
-    b = extract_geotag_arrow(html)
+    lat, lon, text = extract_geotag_pa(pa.array(html.values, pa.binary()).cast(pa.string()))
+    b = pd.DataFrame({"lat": lat, "lon": lon, "text": text.to_pandas()})
     assert (a["lat"].fillna(-999).round(6) == b["lat"].fillna(-999).round(6)).all()
     assert (a["lon"].fillna(-999).round(6) == b["lon"].fillna(-999).round(6)).all()
     assert (a["text"].fillna("") == b["text"].fillna("")).all()

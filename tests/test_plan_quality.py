@@ -93,6 +93,20 @@ def test_tile_assignment_is_pure_codegen(spark, pages_parquet):
     assert "codegen id" in plan
 
 
+def test_media_stages_cross_as_arrow(spark):
+    """decode_media, media_phash and extract_exif are one mapInArrow row
+    map each: the pass-through columns never round-trip through pandas."""
+    from landlensdb_spark.exif import extract_exif
+    from landlensdb_spark.operators.multimodal import decode_media, media_phash
+
+    media = spark.createDataFrame([(1, b"x")], "key long, media binary")
+    photos = media.withColumnRenamed("media", "image_bytes")
+    for out in (decode_media(media), media_phash(media), extract_exif(photos)):
+        plan = _plan(out)
+        assert _n_nodes(plan, "MapInArrow") == 1, plan
+        assert _n_nodes(plan, "MapInPandas") == 0, plan
+
+
 def test_snap_is_map_only(spark):
     probes = spark.range(100).select(
         F.col("id").alias("key"),

@@ -90,8 +90,16 @@ def test_snap_tie_break_prefers_lower_line_id(spark):
 
 def test_snap_realign_compass(spark):
     # avenue runs east-west (bearing ~90); compass 100 -> keep ~90, compass 260 -> flip ~270
+    # the zigzag's first segment (bearing ~62) vs compass 350: 72 degrees
+    # forward, 108 reversed -> keep ~62 (a sign-keeping % flips it); a NULL
+    # compass has no heading to align -> NULL
     pts = spark.createDataFrame(
-        [(0, -74.0, 40.6951, 100.0), (1, -74.0, 40.6951, 260.0)],
+        [
+            (0, -74.0, 40.6951, 100.0),
+            (1, -74.0, 40.6951, 260.0),
+            (2, -74.0075, 40.7011, 350.0),
+            (3, -74.0, 40.6951, None),
+        ],
         "id long, lon double, lat double, compass_angle double",
     )
     net = spark.createDataFrame(LINES, "line_id long, coords array<array<double>>")
@@ -100,9 +108,15 @@ def test_snap_realign_compass(spark):
         .orderBy("id")
         .toPandas()
     )
-    b = bearing(np.array([-74.012]), np.array([40.695]), np.array([-73.990]), np.array([40.695]))[0]
-    want = align_heading(np.array([b, b]), np.array([100.0, 260.0]))
-    assert np.allclose(got["snapped_angle"].to_numpy(), want, atol=1e-9)
+    assert list(got["line_id"]) == [1, 1, 0, 1]
+    b = bearing(
+        np.array([-74.012, -74.010]), np.array([40.695, 40.700]),
+        np.array([-73.990, -74.005]), np.array([40.695, 40.702]),
+    )
+    want = align_heading(b[[0, 0, 1]], np.array([100.0, 260.0, 350.0]))
+    assert np.allclose(got["snapped_angle"].to_numpy()[:3], want, atol=1e-9)
+    assert abs(want[2] - b[1]) < 1e-9
+    assert pd.isna(got["snapped_angle"].iloc[3])
 
 
 def test_snap_passthrough_columns_and_nulls(spark):
