@@ -12,8 +12,9 @@ Five strategies, each a standard large-scale dedup building block:
   bucket are candidates, then exact-Jaccard verified.
 - ``simhash``: 64-bit sign-aggregated shingle hashes (Arrow UDF); near-dups
   = identical simhash (or small Hamming distance via band rotation).
-- ``embedding_near_dup``: cosine >= threshold pairs via the similarity
-  module's LSH/brute-force scorer (see similarity.py).
+- ``embedding_near_dup``: cosine >= threshold pairs, exact, via
+  ``similarity.embedding_near_dup_exact`` (IVF cells + triangle-inequality
+  cell-pair pruning, then the Catalyst cosine).
 
 All shuffles key on hash-uniform values, so no skew handling is needed
 beyond AQE; shingle explosion multiplies rows ~n_tokens x which at 100 TB

@@ -20,7 +20,8 @@ Contract per modality:
 - ``frame_sample``: binary -> array<binary> (video frame sampling)
 - ``feature``: binary -> array<float> (embedding extraction)
 
-Batch shape: one ``mapInArrow`` pass per stage through :func:`map_rows`.
+Batch shape: one ``mapInArrow`` pass per stage through :func:`map_rows`
+(the row-function form of :func:`map_batches`).
 Each Arrow batch of N binaries is decoded row by row (codec walks are
 per-record branchy logic); the pass-through columns stay Arrow arrays and
 are never converted to pandas. Memory per task = batch_rows x
@@ -38,20 +39,22 @@ import numpy as np
 from pyspark.sql import DataFrame
 
 
-def map_rows(
+def map_batches(
     df: DataFrame,
-    col: str,
-    fn: Callable[[object], tuple],
+    cols: list[str],
+    kernel: Callable[..., list],
     out: str,
     keep: list[str] | None = None,
 ) -> DataFrame:
-    """One ``mapInArrow`` pass: ``fn`` runs on each value of ``df[col]``
-    (``None`` for NULL) and its returned tuple is appended as the typed
-    ``out`` columns (DDL, e.g. ``"width int, thumb binary"``).
+    """One ``mapInArrow`` pass: ``kernel`` gets the batch's ``cols`` as
+    Arrow arrays and returns one array per typed ``out`` column (DDL, e.g.
+    ``"width int, thumb binary"``). A returned array may be Arrow, numpy
+    (a masked array's mask marks NULLs) or a sequence (``None`` is NULL); a
+    float NaN stays NaN. Empty batches skip the kernel.
 
     The ``keep`` columns (default: all) come back as an Arrow ``select`` of
     the input batch, never converted to pandas, so a nullable long rides
-    through exactly. Only ``keep`` and ``col`` cross the boundary."""
+    through exactly. Only ``keep`` and ``cols`` cross the boundary."""
     from pyspark.sql.pandas.types import to_arrow_type
     from pyspark.sql.types import StructType
 
@@ -65,16 +68,30 @@ def map_rows(
         import pyarrow as pa
 
         for b in batches:
-            rows = [fn(v) for v in b.column(col).to_pylist()]
-            cols = list(zip(*rows)) if rows else [()] * len(types)
+            res = kernel(*(b.column(c) for c in cols)) if len(b) else [[]] * len(types)
             yield pa.RecordBatch.from_arrays(
                 b.select(keep).columns
-                + [pa.array(c, type=t) for c, t in zip(cols, types)],
+                + [pa.array(r, type=t) for r, t in zip(res, types)],
                 names=names,
             )
 
-    return df.select(*dict.fromkeys(keep + [col])).mapInArrow(
+    return df.select(*dict.fromkeys(keep + list(cols))).mapInArrow(
         _run, StructType([fields[c] for c in keep] + new)
+    )
+
+
+def map_rows(
+    df: DataFrame,
+    col: str,
+    fn: Callable[[object], tuple],
+    out: str,
+    keep: list[str] | None = None,
+) -> DataFrame:
+    """:func:`map_batches` with a row function: ``fn`` runs on each value
+    of ``df[col]`` (``None`` for NULL) and its returned tuple fills the
+    ``out`` columns."""
+    return map_batches(
+        df, [col], lambda v: list(zip(*map(fn, v.to_pylist()))), out, keep
     )
 
 
@@ -231,16 +248,15 @@ def media_thumbnail(
     pass — the reference's thumbnail op
     (/root/reference/landlensdb/handlers/image.py:95-138) as a row-map
     stage. PNG payloads produce real thumbnails (in-repo codec, shrink-only
-    aspect-preserving box filter); undecodable payloads yield nulls."""
-    from landlensdb_spark.operators.jpeg import jpeg_dims
-    from landlensdb_spark.operators.raster import png_dims
-
-    thumbnail = DECODERS["thumbnail"]  # captured at plan-build time
+    aspect-preserving box filter); undecodable payloads yield nulls. The
+    thumbnail's dims come from the metadata decoder, which knows every
+    in-scope format."""
+    thumbnail, decode = DECODERS["thumbnail"], DECODERS["decode"]  # plan-build time
 
     def _thumb(b: bytes | None) -> tuple:
         t = thumbnail(b, max_w, max_h) if b else None
-        d = (png_dims(t) or jpeg_dims(t)) if t is not None else None
-        return (t, *(d or (None, None)))
+        w, h, _, _, ok = decode(t)
+        return (t, w, h) if ok else (t, None, None)
 
     return map_rows(df, media_col, _thumb, "thumb binary, thumb_w int, thumb_h int")
 

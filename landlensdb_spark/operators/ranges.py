@@ -70,7 +70,12 @@ def sfc_ranges(
     same bbox into ~2x fewer ranges than Morton (measured,
     ARCHITECTURE.md) — Morton is offered because Z-order keys are
     cheaper to compute (pure codegen, no kernel) and some stores
-    already sort by them."""
+    already sort by them.
+
+    Spark work run before this returns: one ``collect`` of the per-bucket
+    key counts (at most ~2^10 tiny rows), which evaluates the whole cover
+    — the bounds scan, the ``max_cells`` guard and the key kernel — to
+    build the bucket offsets. The range grouping itself is lazy."""
     if order not in ("hilbert", "morton"):
         raise ValueError(f"order must be 'hilbert' or 'morton', got {order!r}")
     n = (F.col("x1") - F.col("x0") + 1) * (F.col("y1") - F.col("y0") + 1)

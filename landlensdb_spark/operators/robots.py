@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from landlensdb_spark.operators.multimodal import map_rows
+
 RULE_SCHEMA = "array<struct<prefix:string,allow:boolean>>"
 
 
@@ -80,25 +82,15 @@ def robots_rules_df(
     agent: str = "*",
 ) -> DataFrame:
     """(host, rules array<struct<prefix,allow>>, crawl_delay) — one parse
-    per host via a vectorized batch pass."""
-    from collections.abc import Iterator
+    per host via an Arrow row-map pass."""
 
-    import pandas as pd
+    def _parse(t: str | None) -> tuple:
+        rules, delay = parse_robots(t, agent)
+        return ([{"prefix": p, "allow": a} for p, a in rules], delay)
 
-    out_schema = f"{host} string, rules {RULE_SCHEMA}, crawl_delay double"
-
-    def _parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rules, delays = [], []
-            for t in pdf[text]:
-                r, d = parse_robots(t, agent)
-                rules.append([{"prefix": p, "allow": a} for p, a in r])
-                delays.append(d)
-            yield pd.DataFrame(
-                {host: pdf[host], "rules": rules, "crawl_delay": delays}
-            )
-
-    return robots.mapInPandas(_parse, out_schema)
+    return map_rows(
+        robots, text, _parse, f"rules {RULE_SCHEMA}, crawl_delay double", keep=[host]
+    )
 
 
 def allowed_expr(path: Column, rules: Column) -> Column:

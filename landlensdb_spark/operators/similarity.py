@@ -6,13 +6,18 @@ the 10^12-scale path (bucket equi-join bounds candidates per probe, same
 shape as the H3 k-ring expansion).
 
 Float parity note: dot products are accumulated **sequentially over
-dimensions** (vectorized across rows, scalar loop over the ≤few-hundred
-dims) in float64 — bit-identical to a SQL engine's left-to-right
-``list_dot_product`` on DOUBLE lists, so oracle comparisons are exact.
+dimensions** in float64 — bit-identical to a SQL engine's left-to-right
+``list_dot_product`` on DOUBLE lists, so oracle comparisons are exact. The
+numpy kernels vectorize across rows with a scalar loop over the
+≤few-hundred dims; the pair re-rank of the candidate-join paths (LSH, IVF,
+exact near-dup) is one Catalyst expression (:func:`_cosine`:
+``aggregate`` over ``zip_with``) computing the same sums in the same order,
+so no pair crosses into Python.
 
-Scale pattern for top-k: each Arrow batch emits only its LOCAL top-k per
-probe (numpy argpartition), then one global window merge — rows through the
-shuffle are O(batches * probes * k), never n_points * n_probes.
+Scale pattern for top-k: each Arrow batch of the brute-force path emits
+only its LOCAL top-k per probe (numpy argpartition); every path then ends
+in the same window merge (:func:`_topk`) — rows through the shuffle are
+O(batches * probes * k), never n_points * n_probes.
 """
 
 from __future__ import annotations
@@ -22,7 +27,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -45,6 +50,48 @@ def _seq_gram(pts: np.ndarray, probes: np.ndarray) -> np.ndarray:
 
 def _norm(a: np.ndarray) -> np.ndarray:
     return np.sqrt(_seq_dot(a, a))
+
+
+def _dot(a: Column, b: Column) -> Column:
+    """Sequential per-dim float64 dot of two array columns, in Catalyst."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
+    )
+
+
+def _cosine(a: str, b: str) -> Column:
+    """Pair cosine of two array columns, bit-identical to
+    ``_seq_dot(a, b) / (_norm(a) * _norm(b))``. NULL where that ratio is
+    undefined (a zero-norm vector), so the pair ranks last and passes no
+    threshold — Spark orders NaN above every number. ``try_divide``
+    because ANSI mode raises on a bare ``/ 0.0``."""
+    va, vb = F.col(a), F.col(b)
+    cos = F.try_divide(_dot(va, vb), F.sqrt(_dot(va, va)) * F.sqrt(_dot(vb, vb)))
+    return F.nanvl(cos, F.lit(None).cast("double"))
+
+
+def _rerank(cand: DataFrame, probe_id: str, point_id: str, vec_col: str) -> DataFrame:
+    """Exact cosine of each (probe ``_pvec``, point ``vec_col``) candidate."""
+    return cand.select(
+        F.col(probe_id).cast("long"),
+        F.col(point_id).cast("long"),
+        _cosine("_pvec", vec_col).alias("score"),
+    )
+
+
+def _topk(scored: DataFrame, k: int, probe_id: str, point_id: str) -> DataFrame:
+    """The window merge every top-k path ends in: best ``k`` per probe by
+    (score desc, point id asc), with ``rank`` and the score at 6 digits."""
+    w = Window.partitionBy(probe_id).orderBy(
+        F.col("score").desc(), F.col(point_id).asc()
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .withColumn("score", F.round("score", 6))
+    )
 
 
 def cosine_topk(
@@ -93,15 +140,7 @@ def cosine_topk(
             }
             yield pd.DataFrame(rows)
 
-    local = points.mapInPandas(_score, out_schema)
-    w = Window.partitionBy(probe_id).orderBy(
-        F.col("score").desc(), F.col(point_id).asc()
-    )
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .withColumn("score", F.round("score", 6))
-    )
+    return _topk(points.mapInPandas(_score, out_schema), k, probe_id, point_id)
 
 
 def lsh_bucket(vec_col: str, planes: np.ndarray):
@@ -149,81 +188,7 @@ def lsh_cosine_topk(
     cand = prb.select(
         F.col(probe_id), F.col(vec_col).alias("_pvec"), "_bucket"
     ).join(pts.select(F.col(point_id), vec_col, "_bucket"), "_bucket")
-
-    out_schema = f"{probe_id} long, {point_id} long, score double"
-
-    def _exact(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            a = np.array(list(pdf["_pvec"]), dtype=np.float64)
-            b = np.array(list(pdf[vec_col]), dtype=np.float64)
-            cos = _seq_dot(a, b) / (_norm(a) * _norm(b))
-            yield pd.DataFrame(
-                {
-                    probe_id: pdf[probe_id].to_numpy(),
-                    point_id: pdf[point_id].to_numpy(),
-                    "score": cos,
-                }
-            )
-
-    scored = cand.mapInPandas(_exact, out_schema)
-    w = Window.partitionBy(probe_id).orderBy(
-        F.col("score").desc(), F.col(point_id).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .withColumn("score", F.round("score", 6))
-    )
-
-
-def embedding_near_dup_pairs(
-    vectors: DataFrame,
-    threshold: float = 0.95,
-    point_id: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int = 6,
-) -> DataFrame:
-    """(id_a, id_b, score) pairs with cosine >= threshold, LSH-bucketed
-    candidates (same-bucket only) + exact verify. For near-dup detection a
-    high threshold means near-identical vectors land in the same bucket with
-    high probability."""
-    first = vectors.select(F.size(vec_col)).limit(1).first()
-    dim = int(first[0])
-    planes = make_planes(dim, n_planes)
-    bucket = lsh_bucket(vec_col, planes)
-    v = vectors.withColumn("_bucket", bucket(F.col(vec_col)))
-    a = v.alias("a")
-    b = v.alias("b")
-    cand = a.join(
-        b,
-        (F.col("a._bucket") == F.col("b._bucket"))
-        & (F.col(f"a.{point_id}") < F.col(f"b.{point_id}")),
-    ).select(
-        F.col(f"a.{point_id}").alias("id_a"),
-        F.col(f"b.{point_id}").alias("id_b"),
-        F.col(f"a.{vec_col}").alias("_va"),
-        F.col(f"b.{vec_col}").alias("_vb"),
-    )
-
-    def _exact(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            va = np.array(list(pdf["_va"]), dtype=np.float64)
-            vb = np.array(list(pdf["_vb"]), dtype=np.float64)
-            cos = _seq_dot(va, vb) / (_norm(va) * _norm(vb))
-            out = pd.DataFrame(
-                {
-                    "id_a": pdf["id_a"].to_numpy(),
-                    "id_b": pdf["id_b"].to_numpy(),
-                    "score": np.round(cos, 6),
-                }
-            )
-            yield out[out["score"] >= threshold]
-
-    return cand.mapInPandas(_exact, "id_a long, id_b long, score double")
+    return _topk(_rerank(cand, probe_id, point_id, vec_col), k, probe_id, point_id)
 
 
 def embedding_near_dup_exact(
@@ -237,7 +202,7 @@ def embedding_near_dup_exact(
 ) -> DataFrame:
     """EXACT (id_a, id_b, score) pairs with cosine >= threshold, distributed.
 
-    The scalable-and-still-exact shape (vs the recall<1 LSH variant above):
+    The scalable-and-still-exact shape:
 
     1. every vector joins its nearest k-means cell (IVF assignment);
     2. one tiny agg computes each cell's angular radius r_c = max angle
@@ -260,10 +225,8 @@ def embedding_near_dup_exact(
     spark = vectors.sparkSession
     if centroids is None:
         centroids = train_centroids(vectors, n_centroids, vec_col, id_col=point_id)
-    vd = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    norm2 = F.aggregate(vd, F.lit(0.0), lambda a, x: a + x * x)
     v = (
-        vectors.filter(norm2 > 0)
+        vectors.filter(_dot(F.col(vec_col), F.col(vec_col)) > 0)
         .withColumn(
             "_cent",
             F.element_at(_centroid_assign_udf(vec_col, centroids, 1)(F.col(vec_col)), 1),
@@ -315,25 +278,14 @@ def embedding_near_dup_exact(
         .filter((F.col("c1") != F.col("c2")) | (F.col("id_a") < F.col("id_b")))
     )
 
-    def _exact(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            va = np.array(list(pdf["_va"]), dtype=np.float64)
-            vb = np.array(list(pdf["_vb"]), dtype=np.float64)
-            cos = np.round(_seq_dot(va, vb) / (_norm(va) * _norm(vb)), 6)
-            ia = pdf["id_a"].to_numpy()
-            ib = pdf["id_b"].to_numpy()
-            out = pd.DataFrame(
-                {
-                    "id_a": np.minimum(ia, ib),
-                    "id_b": np.maximum(ia, ib),
-                    "score": cos,
-                }
-            )
-            yield out[out["score"] >= threshold]
-
-    return cand.mapInPandas(_exact, "id_a long, id_b long, score double")
+    # 6-digit rounding as np.round does it (x * 1e6, round half to even,
+    # / 1e6): F.round rounds HALF_UP and could flip a pair at the threshold
+    score = F.rint(_cosine("_va", "_vb") * 1e6) / 1e6
+    return cand.select(
+        F.least("id_a", "id_b").cast("long").alias("id_a"),
+        F.greatest("id_a", "id_b").cast("long").alias("id_b"),
+        score.alias("score"),
+    ).filter(F.col("score") >= threshold)
 
 
 # ---------------------------------------------------------------------------
@@ -435,30 +387,4 @@ def ivf_cosine_topk(
     cand = prb.select(
         F.col(probe_id), F.col(vec_col).alias("_pvec"), "_cent"
     ).join(pts.select(F.col(point_id), vec_col, "_cent"), "_cent")
-
-    out_schema = f"{probe_id} long, {point_id} long, score double"
-
-    def _exact(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            a = np.array(list(pdf["_pvec"]), dtype=np.float64)
-            b = np.array(list(pdf[vec_col]), dtype=np.float64)
-            cos = _seq_dot(a, b) / (_norm(a) * _norm(b))
-            yield pd.DataFrame(
-                {
-                    probe_id: pdf[probe_id].to_numpy(),
-                    point_id: pdf[point_id].to_numpy(),
-                    "score": cos,
-                }
-            )
-
-    scored = cand.mapInPandas(_exact, out_schema)
-    w = Window.partitionBy(probe_id).orderBy(
-        F.col("score").desc(), F.col(point_id).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .withColumn("score", F.round("score", 6))
-    )
+    return _topk(_rerank(cand, probe_id, point_id, vec_col), k, probe_id, point_id)

@@ -17,27 +17,28 @@ fully-vectorized operator:
 
 Spark shape: the (small) network is flattened driver-side into plain numpy
 segment arrays and broadcast; each executor lazily builds a mercator-grid
-bucket table over segment bboxes (the R-tree stand-in, snap.py:19-31). The
-point side is processed in one ``mapInPandas`` pass — candidate pairs come
-from a vectorized pandas hash-merge of point-cells vs bucket-cells (the
-np.repeat/np.concatenate pair expansion of snap.py:206-211, but C-speed), and
-ALL pair distances are computed in one vectorized call. No shuffle at all:
-the job is scan -> mapInPandas -> sink.
+bucket table over segment bboxes (the R-tree stand-in, snap.py:19-31), kept
+sorted by cell key. The point side is processed in one Arrow pass
+(``multimodal.map_batches``): each point finds its cell's bucket range with
+a ``searchsorted`` probe, the candidate pairs expand with ``np.repeat`` (the
+pair expansion of snap.py:206-211, but C-speed), and ALL pair distances are
+computed in one vectorized call. The input columns ride through as Arrow
+arrays, never pandas. No shuffle at all: the job is scan -> mapInArrow ->
+sink.
 """
 
 from __future__ import annotations
 
 import math
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from landlensdb_spark.geo.geometry import bearing, point_segment_t
 from landlensdb_spark.geo.mercator import R, np_inv_merc, np_merc_x, np_merc_y
 from landlensdb_spark.geo.sphere import align_heading_col
+from landlensdb_spark.operators.multimodal import map_batches
 
 WORLD = 2.0 * math.pi * R  # mercator world width in meters
 
@@ -87,10 +88,14 @@ def _grid_res_for_tolerance(tolerance_m: float) -> int:
     return max(1, min(res, 28))
 
 
-def _bucket_segments(net: dict[str, np.ndarray], res: int, tol: float) -> pd.DataFrame:
-    """Bucket table (cell_key, seg_idx) of segment bboxes, fully vectorized
-    (no per-segment Python loop — this runs once per executor worker and its
-    cost is pure fixed overhead, so it must be O(total cells) C-speed)."""
+def _bucket_segments(
+    net: dict[str, np.ndarray], res: int, tol: float
+) -> tuple[np.ndarray, np.ndarray]:
+    """Bucket table ``(cell_key, seg_idx)`` of segment bboxes, stable-sorted
+    by ``cell_key`` (so ``seg_idx`` ascends within a cell) for the
+    ``searchsorted`` probe. Fully vectorized (no per-segment Python loop —
+    this runs once per executor worker and its cost is pure fixed
+    overhead)."""
     cell = WORLD / (1 << res)
     minx = np.minimum(net["x0"], net["x1"]) - tol
     maxx = np.maximum(net["x0"], net["x1"]) + tol
@@ -110,7 +115,9 @@ def _bucket_segments(net: dict[str, np.ndarray], res: int, tol: float) -> pd.Dat
     local = np.arange(total, dtype=np.int64) - np.repeat(starts, counts)
     gx = cx0[seg_idx] + local % nx[seg_idx]
     gy = cy0[seg_idx] + local // nx[seg_idx]
-    return pd.DataFrame({"cell_key": (gx << 28) | gy, "seg_idx": seg_idx})
+    cell_key = (gx << 28) | gy
+    order = np.argsort(cell_key, kind="stable")
+    return cell_key[order], seg_idx[order]
 
 
 def snap_to_network(
@@ -167,12 +174,6 @@ def snap_to_network(
     else:
         bc, token = hit[1], hit[2]
 
-    out_schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in points.schema)
-    out_schema += (
-        ", line_id bigint, snap_dist double, snapped_lon double, snapped_lat double,"
-        " snap_pos double, seg_bearing double"
-    )
-
     # executor-local cache: bucket table built once per python worker. Keyed
     # on the driver-generated per-prep token (NOT id(bc): each task unpickles
     # a fresh Broadcast proxy, so id() would miss every task; and NOT the
@@ -189,74 +190,66 @@ def snap_to_network(
                     seg[kk] = np.round(seg[kk], rm)
             if len(_worker_cache) >= 8:
                 _worker_cache.pop(next(iter(_worker_cache)))
-            _worker_cache[key] = (seg, _bucket_segments(seg, res_, tol_), res_, tol_, rm)
+            _worker_cache[key] = (seg, *_bucket_segments(seg, res_, tol_), res_, tol_, rm)
         return _worker_cache[key]
 
-    def _snap(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        seg, buckets, res_, tol_, rm = _get_index()
+    def _snap(lon_a, lat_a) -> list[np.ndarray]:
+        seg, cell_key, seg_idx, res_, tol_, rm = _get_index()
+        n = len(lon_a)
+        px = np_merc_x(lon_a.to_numpy(zero_copy_only=False).astype(np.float64))
+        py = np_merc_y(lat_a.to_numpy(zero_copy_only=False).astype(np.float64))
+        if rm is not None:
+            px, py = np.round(px, rm), np.round(py, rm)
         cellsz = WORLD / (1 << res_)
-        for pdf in batches:
-            n = len(pdf)
-            out = pdf.reset_index(drop=True).copy()
-            for c in ("line_id",):
-                out[c] = pd.array([None] * n, dtype="Int64")
-            for c in ("snap_dist", "snapped_lon", "snapped_lat", "snap_pos", "seg_bearing"):
-                out[c] = np.nan
-            if n == 0 or len(seg["x0"]) == 0:
-                yield out
-                continue
-            px = np_merc_x(pdf[lon].to_numpy(dtype=np.float64))
-            py = np_merc_y(pdf[lat].to_numpy(dtype=np.float64))
-            if rm is not None:
-                px, py = np.round(px, rm), np.round(py, rm)
-            pcx = np.floor((px + WORLD / 2) / cellsz).astype(np.int64)
-            pcy = np.floor((py + WORLD / 2) / cellsz).astype(np.int64)
-            pt_keys = pd.DataFrame(
-                {
-                    "pt_idx": np.arange(n, dtype=np.int64),
-                    "cell_key": (pcx << 28) | pcy,
-                }
-            )
-            pairs = pt_keys.merge(buckets, on="cell_key", how="inner")
-            if len(pairs) == 0:
-                yield out
-                continue
-            pi = pairs["pt_idx"].to_numpy()
-            si = pairs["seg_idx"].to_numpy()
-            # vectorized distance over ALL candidate pairs at once
-            dx0, dy0 = seg["x0"][si], seg["y0"][si]
-            dx1, dy1 = seg["x1"][si], seg["y1"][si]
-            t = point_segment_t(px[pi], py[pi], dx0, dy0, dx1, dy1)
-            nx = dx0 + t * (dx1 - dx0)
-            ny = dy0 + t * (dy1 - dy0)
-            dist = np.sqrt((px[pi] - nx) ** 2 + (py[pi] - ny) ** 2)
-            ok = dist <= tol_
-            if not ok.any():
-                yield out
-                continue
-            pi, si, t, nx, ny, dist = pi[ok], si[ok], t[ok], nx[ok], ny[ok], dist[ok]
-            lid = seg["line_id"][si]
-            # argmin per point with stable (dist, line_id) tie-break
-            order = np.lexsort((lid, dist, pi))
-            pi_s = pi[order]
-            first = np.ones(len(pi_s), dtype=bool)
-            first[1:] = pi_s[1:] != pi_s[:-1]
-            sel = order[first]
-            bi, bs = pi[sel], si[sel]
-            seg_len = np.sqrt(
-                (seg["x1"][bs] - seg["x0"][bs]) ** 2 + (seg["y1"][bs] - seg["y0"][bs]) ** 2
-            )
-            s_lon, s_lat = np_inv_merc(nx[sel], ny[sel])
-            brg = bearing(seg["lon0"][bs], seg["lat0"][bs], seg["lon1"][bs], seg["lat1"][bs])
-            out.loc[bi,"line_id"] = seg["line_id"][bs]
-            out.loc[bi,"snap_dist"] = dist[sel]
-            out.loc[bi,"snapped_lon"] = s_lon
-            out.loc[bi,"snapped_lat"] = s_lat
-            out.loc[bi,"snap_pos"] = seg["cum0"][bs] + t[sel] * seg_len
-            out.loc[bi,"seg_bearing"] = brg
-            yield out
+        pcx = np.floor((px + WORLD / 2) / cellsz).astype(np.int64)
+        pcy = np.floor((py + WORLD / 2) / cellsz).astype(np.int64)
+        pkey = (pcx << 28) | pcy
+        # each point's bucket range, expanded into (point, segment) pairs
+        lo = np.searchsorted(cell_key, pkey, "left")
+        cnt = np.searchsorted(cell_key, pkey, "right") - lo
+        pi = np.repeat(np.arange(n, dtype=np.int64), cnt)
+        si = seg_idx[np.repeat(lo - (np.cumsum(cnt) - cnt), cnt) + np.arange(len(pi))]
+        # vectorized distance over ALL candidate pairs at once
+        dx0, dy0 = seg["x0"][si], seg["y0"][si]
+        dx1, dy1 = seg["x1"][si], seg["y1"][si]
+        t = point_segment_t(px[pi], py[pi], dx0, dy0, dx1, dy1)
+        nx = dx0 + t * (dx1 - dx0)
+        ny = dy0 + t * (dy1 - dy0)
+        dist = np.sqrt((px[pi] - nx) ** 2 + (py[pi] - ny) ** 2)
+        ok = dist <= tol_
+        pi, si, t, nx, ny, dist = pi[ok], si[ok], t[ok], nx[ok], ny[ok], dist[ok]
+        lid = seg["line_id"][si]
+        # argmin per point with stable (dist, line_id, seg_idx) tie-break
+        order = np.lexsort((si, lid, dist, pi))
+        pi_s = pi[order]
+        first = np.ones(len(pi_s), dtype=bool)
+        first[1:] = pi_s[1:] != pi_s[:-1]
+        sel = order[first]
+        bi, bs = pi[sel], si[sel]
+        seg_len = np.sqrt(
+            (seg["x1"][bs] - seg["x0"][bs]) ** 2 + (seg["y1"][bs] - seg["y0"][bs]) ** 2
+        )
+        s_lon, s_lat = np_inv_merc(nx[sel], ny[sel])
+        brg = bearing(seg["lon0"][bs], seg["lat0"][bs], seg["lon1"][bs], seg["lat1"][bs])
+        found = (
+            seg["line_id"][bs], dist[sel], s_lon, s_lat,
+            seg["cum0"][bs] + t[sel] * seg_len, brg,
+        )
+        # unmatched points keep NULL snap columns
+        miss = np.ones(n, dtype=bool)
+        miss[bi] = False
+        cols = [np.zeros(n, dtype=v.dtype) for v in found]
+        for c, v in zip(cols, found):
+            c[bi] = v
+        return [np.ma.masked_array(c, mask=miss) for c in cols]
 
-    result = points.mapInPandas(_snap, out_schema)
+    result = map_batches(
+        points,
+        [lon, lat],
+        _snap,
+        "line_id bigint, snap_dist double, snapped_lon double, snapped_lat double,"
+        " snap_pos double, seg_bearing double",
+    )
     if compass is not None:
         # realignment: forward or reverse segment bearing, whichever is
         # angularly closer to the compass angle (snap.py:147-153)

@@ -126,7 +126,7 @@ def test_lsh_topk_recall(spark):
 
 def test_embedding_near_dup(spark):
     df, vecs = _vec_table(spark)
-    got = similarity.embedding_near_dup_pairs(df, threshold=0.999).toPandas()
+    got = similarity.embedding_near_dup_exact(df, threshold=0.999).toPandas()
     pairs = {(int(a), int(b)) for a, b in zip(got["id_a"], got["id_b"])}
     assert (0, 10) in pairs and (0, 11) in pairs
 

@@ -133,7 +133,7 @@ def test_plan_is_pure_column_math(spark):
     )
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-    assert "mapInPandas" not in plan.lower()
+    assert "mapinpandas" not in plan.lower()
 
 
 def test_res_validation():

@@ -116,6 +116,9 @@ def test_snap_is_map_only(spark):
     snapped = snap_to_network(probes, synth.road_network(spark), tolerance_m=100.0)
     plan = _plan(snapped)
     assert "Exchange" not in plan, plan
+    # one Arrow pass; no pandas copy of the pass-through columns
+    assert _n_nodes(plan, "MapInArrow") == 1, plan
+    assert _n_nodes(plan, "MapInPandas") == 0, plan
 
 
 def test_knn_candidate_join_is_broadcast(spark):

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import numpy as np
+import pytest
 
 from landlensdb_spark.geo.tiles import np_tile_xy
 from landlensdb_spark.operators.raster import (
@@ -182,6 +183,31 @@ def test_media_thumbnail_operator(spark):
     assert got["png"]["thumb"] is not None
     assert got["jpeg"]["thumb"] is None and got["jpeg"]["thumb_w"] is None
     assert got["empty"]["thumb"] is None
+
+
+@pytest.mark.parametrize("fmt", ["png", "jpeg", "gif", "tiff", "webp"])
+def test_media_thumbnail_dims_every_format(spark, fmt):
+    """A 60x40 image at max 16x16 comes back with its thumbnail dims in
+    every in-scope format, not only the PNG/JPEG ones."""
+    from landlensdb_spark.operators.gif import encode_gif_gray
+    from landlensdb_spark.operators.jpeg import encode_jpeg_gray
+    from landlensdb_spark.operators.multimodal import media_thumbnail
+    from landlensdb_spark.operators.raster import encode_png_gray
+    from landlensdb_spark.operators.tiff import encode_tiff_gray
+    from landlensdb_spark.operators.webp import encode_webp
+
+    img = (np.add.outer(np.arange(40), np.arange(60)) * 3 % 256).astype(np.uint8)
+    encode = {
+        "png": encode_png_gray,
+        "jpeg": encode_jpeg_gray,
+        "gif": encode_gif_gray,
+        "tiff": encode_tiff_gray,
+        "webp": encode_webp,
+    }[fmt]
+    df = spark.createDataFrame([(bytearray(encode(img)),)], "media binary")
+    r = media_thumbnail(df, max_w=16, max_h=16).collect()[0]
+    assert r["thumb"] is not None
+    assert (r["thumb_w"], r["thumb_h"]) == (16, 10)
 
 
 def test_zonal_stats_operator(spark):

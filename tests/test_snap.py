@@ -120,13 +120,16 @@ def test_snap_realign_compass(spark):
 
 
 def test_snap_passthrough_columns_and_nulls(spark):
+    # 2^53 + 1 has no float64 twin: a pandas round trip of a nullable long
+    # that shares its batch (coalesce(1)) with a NULL would return 2^53
+    big = 2**53 + 1
     pts = spark.createDataFrame(
-        [(0, -74.0, 40.6951, "a"), (1, 10.0, 50.0, "b")],
-        "id long, lon double, lat double, tag string",
-    )
+        [(0, -74.0, 40.6951, "a", big), (1, 10.0, 50.0, "b", None)],
+        "id long, lon double, lat double, tag string, v long",
+    ).coalesce(1)
     net = spark.createDataFrame(LINES, "line_id long, coords array<array<double>>")
-    got = snap_to_network(pts, net, tolerance_m=100.0).orderBy("id").toPandas()
-    assert list(got["tag"]) == ["a", "b"]
-    assert not pd.isna(got.iloc[0]["line_id"])
-    assert pd.isna(got.iloc[1]["line_id"])
-    assert pd.isna(got.iloc[1]["snapped_lon"])
+    got = snap_to_network(pts, net, tolerance_m=100.0).orderBy("id").collect()
+    assert [r["tag"] for r in got] == ["a", "b"]
+    assert [r["v"] for r in got] == [big, None]
+    assert got[0]["line_id"] is not None
+    assert got[1]["line_id"] is None and got[1]["snapped_lon"] is None
