@@ -5249,7 +5249,9 @@ _SPATIAL_CC_ITERS = 12  # max component hop-diameter is 9 on this field
 def _spatial_clusters_oracle() -> str:
     # MATERIALIZED: the unrolled iteration references `e` 12 times; without
     # the hint DuckDB inlines the whole chain down to the parquet scan per
-    # reference and runs out of file descriptors
+    # reference and runs out of file descriptors. Each l{t+1} reads l{t}
+    # twice (directly and through m{t}), so an inlined label chain would
+    # copy itself 2^iterations times and spill past any disk
     ctes = [
         f"""p AS MATERIALIZED (
       SELECT o_orderkey AS id,
@@ -5263,7 +5265,8 @@ def _spatial_clusters_oracle() -> str:
           <= {_SPATIAL_EPS ** 2!r})""",
         "e AS MATERIALIZED (SELECT id_a AS s, id_b AS d FROM prs"
         " UNION ALL SELECT id_b AS s, id_a AS d FROM prs)",
-        "l0 AS (SELECT node, node AS label FROM (SELECT DISTINCT s AS node FROM e))",
+        "l0 AS MATERIALIZED (SELECT node, node AS label"
+        " FROM (SELECT DISTINCT s AS node FROM e))",
     ]
     for t in range(_SPATIAL_CC_ITERS):
         ctes.append(
@@ -5271,7 +5274,7 @@ def _spatial_clusters_oracle() -> str:
             f" FROM e JOIN l{t} l ON e.s = l.node GROUP BY e.d)"
         )
         ctes.append(
-            f"l{t + 1} AS (SELECT l.node,"
+            f"l{t + 1} AS MATERIALIZED (SELECT l.node,"
             f" least(l.label, coalesce(m.nl, l.label)) AS label"
             f" FROM l{t} l LEFT JOIN m{t} m USING (node))"
         )

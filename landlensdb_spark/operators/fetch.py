@@ -147,6 +147,9 @@ def fetch_batched(
                 )
                 yield out
 
+    # the package's one mapInPandas, on purpose: ``batch_size`` bounds the
+    # fetched content held per yielded frame, while map_batches yields one
+    # output batch per Arrow input batch and so cannot keep that bound
     return df.select(id_col, url_col).mapInPandas(_run, out_schema)
 
 

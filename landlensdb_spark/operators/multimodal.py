@@ -54,7 +54,14 @@ def map_batches(
 
     The ``keep`` columns (default: all) come back as an Arrow ``select`` of
     the input batch, never converted to pandas, so a nullable long rides
-    through exactly. Only ``keep`` and ``cols`` cross the boundary."""
+    through exactly. Only ``keep`` and ``cols`` cross the boundary.
+
+    Row-index rule: a kernel whose output row count differs from its
+    batch's (an explode, a filter, a local top-k) returns one extra array
+    FIRST, the input row of each output row (e.g. ``np.repeat(np.arange(n),
+    counts)``), and the ``keep`` columns come back as ``take(index)``. One
+    array more than ``out`` has columns is what marks this case, so 1:1
+    kernels return nothing extra."""
     from pyspark.sql.pandas.types import to_arrow_type
     from pyspark.sql.types import StructType
 
@@ -69,9 +76,12 @@ def map_batches(
 
         for b in batches:
             res = kernel(*(b.column(c) for c in cols)) if len(b) else [[]] * len(types)
+            kept = b.select(keep)
+            if len(res) == len(types) + 1:
+                kept = kept.take(pa.array(res[0], type=pa.int64()))
+                res = res[1:]
             yield pa.RecordBatch.from_arrays(
-                b.select(keep).columns
-                + [pa.array(r, type=t) for r, t in zip(res, types)],
+                kept.columns + [pa.array(r, type=t) for r, t in zip(res, types)],
                 names=names,
             )
 

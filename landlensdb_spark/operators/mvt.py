@@ -9,7 +9,7 @@ z6-14, "overview" at z0-5), keep point features, optionally filter on the
 
 This module is the Spark-native scan (SURVEY.md §2.1 S4): a table of
 ``(tile_z, tile_x, tile_y, content binary)`` rows goes through ONE
-``mapInPandas`` pass that parses the MVT wire format and explodes point
+Arrow ``map_batches`` pass that parses the MVT wire format and explodes point
 features into rows with real lon/lat. No protobuf library exists in this
 container, so the wire format (protobuf encoding of the MVT 2.1 schema:
 varint / zigzag / length-delimited fields, packed geometry command integers)
@@ -27,12 +27,13 @@ feature rows.
 from __future__ import annotations
 
 import math
-from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from landlensdb_spark.operators.multimodal import map_batches
 
 #: reference layer-per-zoom selection (cloud.py:728-739)
 LAYER_BY_ZOOM = (("image", 14, 14), ("sequence", 6, 14), ("overview", 0, 5))
@@ -329,56 +330,33 @@ def tile_features(
 ) -> DataFrame:
     """Decode every tile blob into point-feature rows with real lon/lat."""
 
-    out_cols = ["tile_z", "tile_x", "tile_y", "layer", "feature_id",
-                "px", "py", "lon", "lat", "props", "tile_layers"]
+    def _decode(zs, xs, ys, blobs):
+        feats, idx = [], []
+        tiles_ = zip(zs.to_pylist(), xs.to_pylist(), ys.to_pylist())
+        for i, ((tz, tx, ty), blob) in enumerate(zip(tiles_, blobs.to_pylist())):
+            try:
+                feats_, names_ = decode_mvt_full(blob)
+            except Exception:
+                # corrupt/truncated tile: warn-and-skip, the reference's
+                # per-tile decode error handling (cloud.py:776-779) — one
+                # bad blob must not fail a 10^12-document job
+                import warnings
 
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            # plain-list iteration: per-tile decode is the cost, iterrows'
-            # Series-per-row construction was constant overhead on top
-            tiles = zip(
-                pdf[z].tolist(), pdf[x].tolist(), pdf[y].tolist(),
-                pdf[content].tolist(),
-            )
-            for tz, tx, ty, blob in tiles:
-                try:
-                    feats_, names_ = decode_mvt_full(blob)
-                except Exception:
-                    # corrupt/truncated tile: warn-and-skip, the reference's
-                    # per-tile decode error handling (cloud.py:776-779) — one
-                    # bad blob must not fail a 10^12-document job
-                    import warnings
-
-                    warnings.warn(f"undecodable MVT tile ({tz},{tx},{ty})")
-                    continue
-                for layer, extent, fid, cx, cy, props in feats_:
-                    rows.append((int(tz), int(tx), int(ty), layer, fid,
-                                 cx, cy, extent, props, names_))
-            if not rows:
-                # typed empty frame: a bare [] column defaults to float64,
-                # which Arrow cannot convert to map<string,string>
-                yield pd.DataFrame(
-                    {c: pd.Series([], dtype=object) for c in out_cols}
-                )
+                warnings.warn(f"undecodable MVT tile ({tz},{tx},{ty})")
                 continue
-            arr = pd.DataFrame(
-                rows,
-                columns=["tile_z", "tile_x", "tile_y", "layer", "feature_id",
-                         "px", "py", "extent", "props", "tile_layers"],
-            )
-            lon, lat = np_tile_lonlat(
-                arr["tile_z"].to_numpy(np.float64),
-                arr["tile_x"].to_numpy(np.float64),
-                arr["tile_y"].to_numpy(np.float64),
-                arr["px"].to_numpy(np.float64),
-                arr["py"].to_numpy(np.float64),
-                arr["extent"].to_numpy(np.float64),
-            )
-            arr["lon"], arr["lat"] = lon, lat
-            yield arr[out_cols]
+            feats += [f + (names_,) for f in feats_]
+            idx += [i] * len(feats_)
+        layer, extent, fid, px, py, props, names = (
+            map(list, zip(*feats)) if feats else ([],) * 7
+        )
+        idx = np.asarray(idx, dtype=np.int64)
+        tz, tx, ty = (a.to_numpy(zero_copy_only=False)[idx] for a in (zs, xs, ys))
+        lon, lat = np_tile_lonlat(
+            *(np.asarray(v, dtype=np.float64) for v in (tz, tx, ty, px, py, extent))
+        )
+        return [idx, tz, tx, ty, layer, fid, px, py, lon, lat, props, names]
 
-    return tiles.mapInPandas(_run, FEATURE_SCHEMA)
+    return map_batches(tiles, [z, x, y, content], _decode, FEATURE_SCHEMA, keep=[])
 
 
 def coverage_features(

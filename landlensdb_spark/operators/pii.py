@@ -12,8 +12,8 @@ oracle runs the byte-identical expressions.
 
 Patterns are deliberately high-precision/limited-recall (emails, NANP-ish
 phone numbers, IPv4) — the shape of the production stage; swapping in a
-larger pattern pack or an NER model (mapInPandas) changes the expressions,
-not the plan.
+larger pattern pack or an NER model (a ``map_batches`` kernel) changes
+the expressions, not the plan.
 """
 
 from __future__ import annotations

@@ -34,12 +34,8 @@ single-task stall.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.types import LongType, StructField, StructType
 
 from landlensdb_spark.geo.geometry import points_in_polygon
 from landlensdb_spark.geo.hex import (
@@ -50,6 +46,7 @@ from landlensdb_spark.geo.hex import (
     np_hex_center_xy,
 )
 from landlensdb_spark.geo.mercator import MAX_LAT, np_inv_merc, np_merc_x, np_merc_y
+from landlensdb_spark.operators.multimodal import map_batches
 
 #: refuse polygons whose bbox cover would enumerate more candidates than
 #: this (raise with guidance instead of materializing a runaway array).
@@ -87,50 +84,40 @@ def hex_polyfill(
     if ring_col not in polys.columns:
         raise ValueError(f"hex_polyfill: no column {ring_col!r} in {polys.columns}")
     keep = [c for c in polys.columns if c != ring_col]
-    out_schema = StructType(
-        [polys.schema[c] for c in keep] + [StructField(cell_col, LongType(), False)]
-    )
 
-    def _fill(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            parts: list[pd.DataFrame] = []
-            for i in range(len(pdf)):
-                ring = np.asarray(list(pdf[ring_col].iloc[i]), dtype=np.float64)
-                if ring.ndim != 2 or ring.shape[1] != 2 or ring.shape[0] < 4:
-                    raise ValueError(
-                        "hex_polyfill: ring must be a closed [[lon,lat],...] "
-                        f"list with >= 4 vertices, got shape {ring.shape}"
-                    )
-                minlon, minlat = ring[:, 0].min(), ring[:, 1].min()
-                maxlon, maxlat = ring[:, 0].max(), ring[:, 1].max()
-                est = _estimate_cover_cells(minlon, minlat, maxlon, maxlat, res)
-                if est > max_cells_per_poly:
-                    raise ValueError(
-                        f"hex_polyfill: polygon bbox would enumerate ~{est:,} "
-                        f"res-{res} candidates (> max_cells_per_poly="
-                        f"{max_cells_per_poly:,}). Coarsen res, split the "
-                        "polygon, or raise the cap deliberately."
-                    )
-                cells = np_hex_bbox_cover(
-                    float(minlon), float(minlat), float(maxlon), float(maxlat), res
-                )
-                cx, cy = np_hex_center_xy(cells, res)
-                lon, lat = np_inv_merc(cx, cy)
-                inside = points_in_polygon(lon, lat, [ring])
-                kept = cells[inside]
-                part = pd.DataFrame(
-                    {c: np.repeat(pdf[c].iloc[i], kept.size) for c in keep}
-                )
-                part[cell_col] = kept
-                parts.append(part)
-            if parts:
-                yield pd.concat(parts, ignore_index=True)
+    def _cover(ring: np.ndarray) -> np.ndarray:
+        if ring.ndim != 2 or ring.shape[1] != 2 or ring.shape[0] < 4:
+            raise ValueError(
+                "hex_polyfill: ring must be a closed [[lon,lat],...] "
+                f"list with >= 4 vertices, got shape {ring.shape}"
+            )
+        minlon, minlat = ring[:, 0].min(), ring[:, 1].min()
+        maxlon, maxlat = ring[:, 0].max(), ring[:, 1].max()
+        est = _estimate_cover_cells(minlon, minlat, maxlon, maxlat, res)
+        if est > max_cells_per_poly:
+            raise ValueError(
+                f"hex_polyfill: polygon bbox would enumerate ~{est:,} "
+                f"res-{res} candidates (> max_cells_per_poly="
+                f"{max_cells_per_poly:,}). Coarsen res, split the "
+                "polygon, or raise the cap deliberately."
+            )
+        cells = np_hex_bbox_cover(
+            float(minlon), float(minlat), float(maxlon), float(maxlat), res
+        )
+        cx, cy = np_hex_center_xy(cells, res)
+        lon, lat = np_inv_merc(cx, cy)
+        return cells[points_in_polygon(lon, lat, [ring])]
+
+    def _fill(rings):
+        covers = [_cover(np.asarray(r, dtype=np.float64)) for r in rings.to_pylist()]
+        idx = np.repeat(np.arange(len(covers)), [c.size for c in covers])
+        return [idx, np.concatenate(covers)]
 
     # polygons are the small side; spread them so per-polygon numpy work
     # parallelizes instead of riding whatever partitioning the source had
     n = polys.rdd.getNumPartitions()
     src = polys if n >= 4 else polys.repartition(8)
-    return src.mapInPandas(_fill, out_schema)
+    return map_batches(src, [ring_col], _fill, f"{cell_col} long not null", keep)
 
 
 def dissolve(df: DataFrame, by: str, cell_col: str = "cell") -> DataFrame:

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from landlensdb_spark.geo.tiles import tile_x, tile_y
+from landlensdb_spark.operators.multimodal import map_batches
 
 #: decode-side allocation guard (shared contract with operators/jpeg.py):
 #: forged IHDR dims in crawled payloads fail loudly instead of OOMing
@@ -240,40 +241,23 @@ def tile_density_raster(
 def raster_to_pixels(tiles: DataFrame, png_col: str = "png") -> DataFrame:
     """Decode density tiles back to (tile_z, tile_x, tile_y, px, py,
     intensity) rows — the raster READ path (and the round-trip check for
-    the writer). mapInPandas: one decode per tile row."""
-    from collections.abc import Iterator
+    the writer). One Arrow batch pass: one decode per tile row, its
+    nonzero pixels found by numpy."""
 
-    schema = "tile_z int, tile_x long, tile_y long, px int, py int, intensity int"
+    def _decode(blobs):
+        imgs = [decode_png_gray(b) for b in blobs.to_pylist()]
+        nz = [np.nonzero(img) for img in imgs]  # vectorized: no per-pixel python
+        idx = np.repeat(np.arange(len(imgs)), [len(xs) for _, xs in nz])
+        pix = [np.stack([xs, ys, img[ys, xs]]) for img, (ys, xs) in zip(imgs, nz)]
+        return [idx, *np.hstack([np.empty((3, 0), np.int64), *pix])]
 
-    cols = ["tile_z", "tile_x", "tile_y", "px", "py", "intensity"]
-
-    def _run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            parts = []
-            for z, x, y, blob in zip(
-                pdf["tile_z"], pdf["tile_x"], pdf["tile_y"], pdf[png_col]
-            ):
-                img = decode_png_gray(bytes(blob))
-                ys, xs = np.nonzero(img)  # vectorized: no per-pixel python
-                parts.append(
-                    pd.DataFrame(
-                        {
-                            "tile_z": np.full(len(xs), z, dtype=np.int32),
-                            "tile_x": np.full(len(xs), x, dtype=np.int64),
-                            "tile_y": np.full(len(xs), y, dtype=np.int64),
-                            "px": xs.astype(np.int32),
-                            "py": ys.astype(np.int32),
-                            "intensity": img[ys, xs].astype(np.int32),
-                        }
-                    )
-                )
-            yield (
-                pd.concat(parts, ignore_index=True)
-                if parts
-                else pd.DataFrame({c: [] for c in cols})
-            )
-
-    return tiles.mapInPandas(_run, schema)
+    return map_batches(
+        tiles,
+        [png_col],
+        _decode,
+        "px int, py int, intensity int",
+        keep=["tile_z", "tile_x", "tile_y"],
+    )
 
 
 def zonal_stats(

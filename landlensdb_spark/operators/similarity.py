@@ -23,12 +23,13 @@ O(batches * probes * k), never n_points * n_probes.
 from __future__ import annotations
 
 import math
-from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from landlensdb_spark.operators.multimodal import map_batches
 
 
 def _seq_dot(a: np.ndarray, b: np.ndarray) -> np.ndarray:
@@ -115,32 +116,29 @@ def cosine_topk(
     pnorm = _norm(pvecs)
     bc = spark.sparkContext.broadcast((pids, pvecs, pnorm, k))
 
-    out_schema = f"{probe_id} long, {point_id} long, score double"
-
-    def _score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def _score(pt_ids, pt_vecs):
         b_pids, b_pvecs, b_pnorm, kk = bc.value
-        m = len(b_pids)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ids = pdf[point_id].to_numpy(dtype=np.int64)
-            vecs = np.array(list(pdf[vec_col]), dtype=np.float64)
-            dots = _seq_gram(vecs, b_pvecs)  # (n, m)
-            norms = _norm(vecs)
-            denom = norms[:, None] * b_pnorm[None, :]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = np.where(denom > 0, dots / denom, 0.0)
-            kloc = min(kk, len(ids))
-            # local top-k per probe (selection on (-score, id) ordering)
-            order = np.lexsort((ids[:, None].repeat(m, 1), -cos), axis=0)[:kloc]
-            rows = {
-                probe_id: np.tile(b_pids, kloc),
-                point_id: ids[order].ravel(),
-                "score": np.take_along_axis(cos, order, axis=0).ravel(),
-            }
-            yield pd.DataFrame(rows)
+        ids = pt_ids.to_numpy(zero_copy_only=False).astype(np.int64)
+        vecs = np.array(pt_vecs.to_pylist(), dtype=np.float64)
+        dots = _seq_gram(vecs, b_pvecs)  # (n, m)
+        norms = _norm(vecs)
+        denom = norms[:, None] * b_pnorm[None, :]
+        with np.errstate(divide="ignore", invalid="ignore"):
+            cos = np.where(denom > 0, dots / denom, 0.0)
+        kloc = min(kk, len(ids))
+        # local top-k per probe (selection on (-score, id) ordering); the
+        # point ids ride along as the batch rows ``order`` picks
+        order = np.lexsort((ids[:, None].repeat(len(b_pids), 1), -cos), axis=0)[:kloc]
+        return [
+            order.ravel(),
+            np.tile(b_pids, kloc),
+            np.take_along_axis(cos, order, axis=0).ravel(),
+        ]
 
-    return _topk(points.mapInPandas(_score, out_schema), k, probe_id, point_id)
+    scored = map_batches(
+        points, [point_id, vec_col], _score, f"{probe_id} long, score double", [point_id]
+    ).select(probe_id, F.col(point_id).cast("long"), "score")
+    return _topk(scored, k, probe_id, point_id)
 
 
 def lsh_bucket(vec_col: str, planes: np.ndarray):

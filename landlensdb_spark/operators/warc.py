@@ -10,17 +10,17 @@ as the MVT and EXIF wire codecs in this repo).
 Scale shape: WARC members are read as whole binary blobs
 (``spark.read.format("binaryFile")`` on .warc segments — Common Crawl
 ships ~1 GB segments, a natural Spark split), and record extraction is one
-``mapInPandas`` pass that explodes each blob into its records. Python cost
-is per RECORD (header parse + slice), payloads are never copied more than
-once, and the stage composes with the html-extraction stage downstream.
+Arrow ``map_batches`` pass that explodes each blob into its records; the
+other columns are taken by row index. Python cost is per RECORD (header
+parse + slice), payloads are never copied more than once, and the stage
+composes with the html-extraction stage downstream.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from landlensdb_spark.operators.multimodal import map_batches
 
 RECORD_SCHEMA = (
     "warc_type string, target_uri string, warc_date string, "
@@ -121,26 +121,15 @@ def parse_warc_bytes(blob: bytes) -> list[dict]:
 def warc_records(df: DataFrame, blob_col: str = "content") -> DataFrame:
     """Explode WARC segment blobs into one row per record (keeps all other
     columns of ``df``, e.g. the segment path from binaryFile)."""
-    keep = [f.name for f in df.schema.fields if f.name != blob_col]
+    keep = [c for c in df.columns if c != blob_col]
     clash = sorted(set(keep) & set(_RECORD_FIELDS))
     if clash:
         raise ValueError(f"input columns collide with WARC record fields: {clash}")
-    out_schema = ", ".join(
-        [f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields if f.name != blob_col]
-        + [RECORD_SCHEMA]
-    )
 
-    def _parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            # itertuples over the column lists: the per-record WARC parse is
-            # the cost, but iterrows' per-row Series construction is pure
-            # constant overhead on top of it
-            keeps = [pdf[c].tolist() for c in keep]
-            for i, blob in enumerate(pdf[blob_col].tolist()):
-                base = {c: vals[i] for c, vals in zip(keep, keeps)}
-                for rec in parse_warc_bytes(bytes(blob)):
-                    rows.append({**base, **rec})
-            yield pd.DataFrame(rows, columns=keep + list(_RECORD_FIELDS))
+    def _parse(blobs):
+        recs = [parse_warc_bytes(b) for b in blobs.to_pylist()]
+        flat = [r for rs in recs for r in rs]
+        idx = [i for i, rs in enumerate(recs) for _ in rs]
+        return [idx] + [[r[f] for r in flat] for f in _RECORD_FIELDS]
 
-    return df.mapInPandas(_parse, out_schema)
+    return map_batches(df, [blob_col], _parse, RECORD_SCHEMA, keep)

@@ -45,7 +45,7 @@ def get_spark(
         )
 
     conf = {
-        # Arrow transfer for every pandas UDF / mapInPandas stage. 60k rows
+        # Arrow transfer for every pandas UDF / Arrow map stage. 60k rows
         # per batch measured ~7% faster than 20k on the fused extract path
         # (fewer IPC round-trips); at ~0.5-2 KB/row of html that is tens of
         # MB per in-flight batch per worker — rows much wider than this

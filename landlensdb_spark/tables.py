@@ -17,13 +17,11 @@ field from :mod:`landlensdb_spark.synth` (SQL-oracle-expressible).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from landlensdb_spark import synth
+from landlensdb_spark.operators.multimodal import map_rows
 
 PAGES_SCHEMA = "url string, warc_ts timestamp, html binary, text string, lang string"
 
@@ -139,24 +137,21 @@ def pages(
     clustered: bool = False,
     num_partitions: int | None = None,
 ) -> DataFrame:
-    """Distributed deterministic pages table (mapInPandas over spark.range).
+    """Distributed deterministic pages table (one Arrow row map over
+    spark.range).
 
     Generation is executor-parallel and a pure function of the row id, so the
     table is identical at any partitioning/parallelism — the property the
     two-cluster-size scaling benchmark relies on.
     """
+
+    def gen(i: int) -> tuple:
+        url, ts, html, text, lang = build_page_row(i, clustered)
+        # Arrow reads an int timestamp as microseconds; ts is epoch seconds
+        return url, ts * 1_000_000, html, text, lang
+
     rng = spark.range(n, numPartitions=num_partitions)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [build_page_row(int(i), clustered) for i in pdf["id"]]
-            out = pd.DataFrame(
-                rows, columns=["url", "warc_ts", "html", "text", "lang"]
-            )
-            out["warc_ts"] = pd.to_datetime(out["warc_ts"], unit="s")
-            yield out
-
-    return rng.mapInPandas(gen, PAGES_SCHEMA)
+    return map_rows(rng, "id", gen, PAGES_SCHEMA, keep=[])
 
 
 # ---------------------------------------------------------------------------
@@ -195,12 +190,4 @@ def photos(spark: SparkSession, n: int, num_partitions: int | None = None) -> Da
     """Distributed deterministic photos table (pure function of the row id,
     same parallelism-independence property as ``pages``)."""
     rng = spark.range(n, numPartitions=num_partitions)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                [build_photo_row(int(i)) for i in pdf["id"]],
-                columns=["photo_id", "image_bytes"],
-            )
-
-    return rng.mapInPandas(gen, PHOTOS_SCHEMA)
+    return map_rows(rng, "id", build_photo_row, PHOTOS_SCHEMA, keep=[])

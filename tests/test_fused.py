@@ -47,7 +47,7 @@ def test_extract_pip_with_text_and_default_keep(spark):
 
 def test_extract_pip_single_python_stage(spark, tmp_path):
     # materialize so the plan under test starts from a parquet scan (the
-    # synthetic pages generator is itself a MapInPandas)
+    # synthetic pages generator is itself a MapInArrow)
     path = str(tmp_path / "pages.parquet")
     tables.pages(spark, 200, num_partitions=2).write.parquet(path)
     pages = spark.read.parquet(path)

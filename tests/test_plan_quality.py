@@ -107,6 +107,47 @@ def test_media_stages_cross_as_arrow(spark):
         assert _n_nodes(plan, "MapInPandas") == 0, plan
 
 
+def _explode_stage(spark, name):
+    from landlensdb_spark.operators.mvt import tile_features
+    from landlensdb_spark.operators.polyfill import hex_polyfill
+    from landlensdb_spark.operators.raster import raster_to_pixels
+    from landlensdb_spark.operators.similarity import cosine_topk
+    from landlensdb_spark.operators.warc import warc_records
+
+    tile = "tile_z int, tile_x long, tile_y long"
+    blob = spark.createDataFrame([(0, 0, 0, b"")], f"{tile}, content binary")
+    if name == "warc_records":
+        return warc_records(blob.select("tile_z", "content"))
+    if name == "tile_features":
+        return tile_features(blob)
+    if name == "raster_to_pixels":
+        return raster_to_pixels(blob, png_col="content")
+    if name == "hex_polyfill":
+        ring = [[0.0, 0.0], [1.0, 0.0], [1.0, 1.0], [0.0, 0.0]]
+        return hex_polyfill(
+            spark.createDataFrame([(1, ring)], "id long, ring array<array<double>>")
+        )
+    if name == "cosine_topk":
+        vecs = spark.createDataFrame(
+            [(1, [1.0, 0.0])], "vec_id long, embedding array<double>"
+        )
+        return cosine_topk(vecs, vecs.withColumnRenamed("vec_id", "probe_id"), k=1)
+    return tables.pages(spark, 10)
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["warc_records", "tile_features", "raster_to_pixels", "hex_polyfill",
+     "cosine_topk", "pages"],
+)
+def test_explode_stages_cross_as_arrow(spark, name):
+    """The 1→N stages (and the pages generator) are one ``map_batches``
+    pass each: kept columns are taken by row index, never via pandas."""
+    plan = _plan(_explode_stage(spark, name))
+    assert _n_nodes(plan, "MapInArrow") == 1, plan
+    assert _n_nodes(plan, "MapInPandas") == 0, plan
+
+
 def test_snap_is_map_only(spark):
     probes = spark.range(100).select(
         F.col("id").alias("key"),

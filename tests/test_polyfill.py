@@ -1,10 +1,12 @@
 """Hex polyfill (operators/polyfill.py): brute-force parity, H3
 center-containment semantics (tiling disjointness, slivers), the
-runaway-enumeration guard, and schema passthrough."""
+runaway-enumeration guard, and schema passthrough — exact for a nullable
+long, through ``map_batches``' row-index rule."""
 from __future__ import annotations
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from landlensdb_spark.geo.geometry import points_in_polygon
 from landlensdb_spark.geo.hex import (
@@ -13,6 +15,7 @@ from landlensdb_spark.geo.hex import (
     np_hex_center_xy,
 )
 from landlensdb_spark.geo.mercator import np_inv_merc
+from landlensdb_spark.operators.multimodal import map_batches
 from landlensdb_spark.operators.polyfill import (
     _estimate_cover_cells,
     hex_polyfill,
@@ -100,6 +103,41 @@ def test_schema_passthrough_and_cell_res(spark):
     rows = df.collect()
     assert all(r["name"] == "x" for r in rows)
     assert all((r["cell"] >> 58) == RES for r in rows)
+
+
+def test_nullable_long_passthrough_is_exact(spark):
+    # 2^53 + 1 has no float64 twin: a pandas explode of a nullable long
+    # that shares its batch with a NULL would return 2^53. Every one of the
+    # 4 partitions (no repartition below 4) holds one of each.
+    big = 2**53 + 1
+    ring = F.array(*[F.array(F.lit(x), F.lit(y)) for x, y in RECT])
+    polys = spark.range(0, 8, 1, 4).select(
+        F.col("id").alias("poly_id"),
+        F.when(F.col("id") % 2 == 0, F.lit(big)).alias("v"),
+        ring.alias("ring"),
+    )
+    rows = hex_polyfill(polys, res=RES).collect()
+    assert len(rows) == 8 * len(_brute(RECT))
+    assert {(r["poly_id"] % 2, r["v"]) for r in rows} == {(0, big), (1, None)}
+
+
+def test_map_batches_row_index_with_no_output_rows(spark):
+    # a kernel may drop every row of a non-empty batch: an empty row index
+    # still gives typed, empty kept columns
+    df = spark.createDataFrame(
+        [(1, "a", b"x"), (2, None, b"y")], "id long, name string, blob binary"
+    )
+    out = map_batches(
+        df,
+        ["blob"],
+        lambda blobs: [np.empty(0, np.int64), [], []],
+        "n long, tags map<string,string>",
+        keep=["id", "name"],
+    )
+    assert out.collect() == []
+    assert out.schema.simpleString() == (
+        "struct<id:bigint,name:string,n:bigint,tags:map<string,string>>"
+    )
 
 
 def test_estimate_guard_refuses_runaway(spark):
