@@ -18,6 +18,12 @@ shape (FIXTURES.md §5):
   (cloud.py:608-610: a 404 is permanent);
 - metrics per stage = row-count aggregation over the same table (the
   reference's per-batch success-rate prints, cloud.py:677-691).
+
+Scale shape: a ``log`` call ships its O(units) rows as one typed Arrow
+table (``session.local_frame``), so the append job scans a
+``LocalRelation`` and starts no Python task; the same rows as a list of
+tuples would be an RDD of pickled rows, unpickled by a Python worker on
+every run.
 """
 
 from __future__ import annotations
@@ -27,6 +33,8 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from landlensdb_spark.session import local_frame
 
 CHECKPOINT_SCHEMA = (
     "run_id string, stage string, unit_id long, partition_id int, "
@@ -47,7 +55,7 @@ class CheckpointTable:
 
     def read(self) -> DataFrame:
         if not os.path.exists(self.path):
-            return self.spark.createDataFrame([], CHECKPOINT_SCHEMA)
+            return local_frame(self.spark, [], CHECKPOINT_SCHEMA)
         return self.spark.read.schema(CHECKPOINT_SCHEMA).parquet(self.path)
 
     def log(self, rows: list[tuple]) -> None:
@@ -55,9 +63,7 @@ class CheckpointTable:
         status) tuples; ts stamped here. One snapshot per call = the
         per-batch commit granularity of the reference."""
         ts = time.time()
-        df = self.spark.createDataFrame(
-            [(*r, ts) for r in rows], CHECKPOINT_SCHEMA
-        )
+        df = local_frame(self.spark, [(*r, ts) for r in rows], CHECKPOINT_SCHEMA)
         df.coalesce(1).write.mode("append").parquet(self.path)
 
     def _completed(self, stage: str) -> DataFrame:

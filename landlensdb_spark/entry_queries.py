@@ -27,6 +27,7 @@ from landlensdb_spark.operators.knn import knn_join
 from landlensdb_spark.operators.pip_join import pip_join
 from landlensdb_spark.operators.snap import snap_to_network
 from landlensdb_spark.operators.tiles import tile_stats
+from landlensdb_spark.session import local_frame
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
@@ -2747,8 +2748,8 @@ def q_zonal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                     synth.PARCEL_Y0 + (gy + 1) * synth.PARCEL_DY,
                 )
             )
-    zones = spark.createDataFrame(
-        rows, "parcel_id long, x0 double, x1 double, y0 double, y1 double"
+    zones = local_frame(
+        spark, rows, "parcel_id long, x0 double, x1 double, y0 double, y1 double"
     ).select(
         "parcel_id",
         gpx(F.col("x0")).alias("gx0"),
@@ -4204,7 +4205,7 @@ def q_geojson_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         for ft in fc["features"]
     ]
-    return spark.createDataFrame(rows, "key long, lon double, lat double")
+    return local_frame(spark, rows, "key long, lon double, lat double")
 
 
 @query("gpkg_roundtrip", f"SELECT * FROM ({_SINK_PTS_SQL})")
@@ -4241,7 +4242,7 @@ def q_gpkg_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         con.close()
     finally:
         os.unlink(path)
-    return spark.createDataFrame(rows, "key long, lon double, lat double")
+    return local_frame(spark, rows, "key long, lon double, lat double")
 
 
 @query(
@@ -4472,10 +4473,9 @@ def q_od_tile_flows(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = ev.select(
         "user_id",
         F.unix_micros(F.col("ts").cast("timestamp")).alias("t"),
-        quadkey(
-            tile_x(synth.lon_col(k), 8), tile_y(synth.lat_col(k), 8), 8
-        ).alias("cell"),
-    )
+        tile_x(synth.lon_col(k), 8).alias("_tx"),
+        tile_y(synth.lat_col(k), 8).alias("_ty"),
+    ).select("user_id", "t", quadkey("_tx", "_ty", 8).alias("cell"))
     return od_matrix(pts, entity="user_id", t="t", cell="cell")
 
 
@@ -5166,7 +5166,8 @@ def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     literals) — any divergence in tokenization, pair counting, tie-breaks
     or the greedy merge order breaks the row hash."""
     merges = _spark_bpe_merges(spark, sf_dir)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(r, l, rr, n) for r, l, rr, n in merges],
         "merge_rank int, lhs string, rhs string, pair_count bigint",
     )

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
 from landlensdb_spark.geo.cells import _RES_SHIFT, np_hilbert_d
+from landlensdb_spark.session import local_frame
 
 #: refuse covers beyond this many cells — a planner artifact should be
 #: small; decompose bigger areas at a coarser level first.
@@ -106,7 +107,7 @@ def sfc_ranges(
     else:
         from landlensdb_spark.geo.tiles import quadkey
 
-        keys = xy.select(quadkey(F.col("x"), F.col("y"), level).alias("k"))
+        keys = xy.select(quadkey("x", "y", level).alias("k"))
     # distinct integers: k - global_row_number(k) is constant exactly on a
     # contiguous run. The global row number is computed TWO-LEVEL (r08,
     # closing the engine's last unpartitioned WindowExec): row_number
@@ -122,7 +123,7 @@ def sfc_ranges(
         offs.append((r["_p"], acc))
         acc += r["count"]
     spark = bounds.sparkSession
-    off_df = spark.createDataFrame(offs or [(0, 0)], "_p long, _off long")
+    off_df = local_frame(spark, offs or [(0, 0)], "_p long, _off long")
     wb = Window.partitionBy("_p").orderBy("k")
     isl = keyed.join(F.broadcast(off_df), "_p").select(
         "k",

@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from landlensdb_spark.session import local_frame
+
 K1 = 1.2
 B = 0.75
 
@@ -102,7 +104,7 @@ def bm25_search(
     totals = dls.agg(
         F.count("*").alias("n"), F.avg("dl").alias("avgdl")
     )
-    q = spark.createDataFrame([(t.lower(),) for t in query_terms], "term string")
+    q = local_frame(spark, [(t.lower(),) for t in query_terms], "term string")
     # restrict term_stats to the query's terms BEFORE any broadcast: raw
     # `stats` is one row per distinct corpus term — billions on a real web
     # corpus — so broadcasting it would OOM long before 100 TB. `qstats` is

@@ -30,6 +30,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from landlensdb_spark.operators.multimodal import map_batches
+from landlensdb_spark.session import local_frame
 
 
 def _seq_dot(a: np.ndarray, b: np.ndarray) -> np.ndarray:
@@ -260,7 +261,7 @@ def embedding_near_dup_exact(
         for c2 in range(c1, len(centroids))
         if keep[c1, c2]
     ]
-    cp = spark.createDataFrame(cell_pairs, "c1 int, c2 int")
+    cp = local_frame(spark, cell_pairs, "c1 int, c2 int")
 
     a = v.select(
         F.col(point_id).alias("id_a"), F.col(vec_col).alias("_va"), F.col("_cent").alias("c1")

@@ -26,7 +26,11 @@ urls), so a re-run after a crash:
 Scale shape: buckets are hash ranges, so the work split is deterministic and
 uniform; a fresh attempt costs one counting scan over the pending pages plus
 one write job, with no re-read of the output; the checkpoint table stays
-tiny (O(buckets)) and is read on the driver as a set of unit ids.
+tiny (O(buckets)) and is read on the driver as a set of unit ids. The
+lineage rows go to the checkpoint as a driver-local Arrow table, so the
+log job starts no Python task; the quadkey and the per-bucket ``observe``
+metrics are built as SQL text, one JVM call each rather than one per
+expression node.
 """
 
 from __future__ import annotations
@@ -109,7 +113,7 @@ def run_geo_pipeline(
         rows_out = Observation()
         observed = tiled.repartition("_bucket").observe(
             rows_out,
-            *[F.count_if(F.col("_bucket") == u).alias(f"b{u}") for u in todo],
+            *[F.expr(f"count_if(_bucket = {u})").alias(f"b{u}") for u in todo],
         )
         # dynamic partition overwrite: only the bucket directories in
         # THIS write are replaced, so a bucket retried after a partial

@@ -17,7 +17,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
@@ -87,3 +87,25 @@ def get_spark(
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_frame(spark: SparkSession, rows, ddl: str) -> DataFrame:
+    """Driver-local ``rows`` (tuples in ``ddl`` column order) as a DataFrame.
+
+    The rows go over as one typed Arrow table, so the plan is a
+    ``LocalRelation``: running it starts no Python task. A list passed to
+    ``createDataFrame`` becomes an RDD of pickled rows instead, and every
+    job over it starts a Python worker to unpickle them.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    schema = StructType.fromDDL(ddl)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows, strict=True)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow, strict=True)],
+        schema=arrow,
+    )
+    return spark.createDataFrame(table, schema)

@@ -26,6 +26,8 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from landlensdb_spark.session import local_frame
+
 # -- uniform world field (lat in [-85, 85), lon in [-180, 180)) -------------
 LAT_MUL = 2654435761
 LAT_MOD = 170_000_000
@@ -165,7 +167,7 @@ def parcel_polygons(spark: SparkSession) -> DataFrame:
             y1 = PARCEL_Y0 + (gy + 1) * PARCEL_DY
             ring = [[x0, y0], [x1, y0], [x1, y1], [x0, y1], [x0, y0]]
             rows.append((gx * PARCEL_NY + gy, ring))
-    return spark.createDataFrame(rows, "parcel_id long, ring array<array<double>>")
+    return local_frame(spark, rows, "parcel_id long, ring array<array<double>>")
 
 
 def parcel_bin_sql(lon: str, lat: str) -> str:
@@ -219,8 +221,8 @@ def admin_polygons(spark: SparkSession) -> DataFrame:
             y1 = GRID_Y0 + (gy + 1) * GRID_DY
             ring = [[x0, y0], [x1, y0], [x1, y1], [x0, y1], [x0, y0]]
             rows.append((gx * GRID_NY + gy, f"admin_{gx}_{gy}", ring))
-    return spark.createDataFrame(
-        rows, "admin_id long, name string, ring array<array<double>>"
+    return local_frame(
+        spark, rows, "admin_id long, name string, ring array<array<double>>"
     )
 
 
@@ -240,8 +242,8 @@ def road_network(spark: SparkSession) -> DataFrame:
         lon = P_LON_BASE + road_lon_micro(j) / 1_000_000.0
         coords = [[lon, ROAD_LAT_MIN], [lon, ROAD_LAT_MAX]]
         rows.append((j, coords, "residential"))
-    return spark.createDataFrame(
-        rows, "line_id long, coords array<array<double>>, highway string"
+    return local_frame(
+        spark, rows, "line_id long, coords array<array<double>>, highway string"
     )
 
 
@@ -294,6 +296,6 @@ def mvt_tiles(spark: SparkSession) -> DataFrame:
                 encode_mvt({"image": {"extent": 4096, "features": feats}}),
             )
         )
-    return spark.createDataFrame(
-        rows, "tile_z int, tile_x long, tile_y long, content binary"
+    return local_frame(
+        spark, rows, "tile_z int, tile_x long, tile_y long, content binary"
     )

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from landlensdb_spark.functions import nautical_offset_hours, tz_name_for
 from landlensdb_spark.operators.pip_join import pip_join
+from landlensdb_spark.session import local_frame
 
 #: (tz_id, iana_name, standard_offset_minutes, west, south, east, north) —
 #: deliberately disjoint rectangles (coarse; standard time only).
@@ -54,8 +55,8 @@ def tz_table(spark: SparkSession) -> DataFrame:
     for tz_id, name, off, w, s, e, n in TZ_ZONES:
         ring = [[w, s], [e, s], [e, n], [w, n], [w, s]]
         rows.append((tz_id, name, off, ring))
-    return spark.createDataFrame(
-        rows, "tz_id long, tz_name string, offset_min long, ring array<array<double>>"
+    return local_frame(
+        spark, rows, "tz_id long, tz_name string, offset_min long, ring array<array<double>>"
     )
 
 

@@ -9,6 +9,13 @@ The one ``.mapInPandas(`` left is ``fetch.fetch_batched``, on purpose:
 its public ``batch_size`` bounds the fetched content held per yielded
 frame, and ``map_batches`` yields one output batch per input batch, so it
 cannot keep that bound.
+
+Driver-local rows enter the other way too. ``.createDataFrame(`` is pinned
+to ``session.local_frame``, which ships rows as one typed Arrow table (a
+``LocalRelation``), and to ``pip_join``'s cover, which is already a pandas
+frame and so also goes over as Arrow. A list of tuples handed straight to
+``createDataFrame`` would become an RDD of pickled rows whose every job
+starts a Python task; a new call site fails this test.
 """
 
 from __future__ import annotations
@@ -20,6 +27,10 @@ import pytest
 PACKAGE = Path(__file__).resolve().parent.parent / "landlensdb_spark"
 
 PINNED = {
+    ".createDataFrame(": {
+        "operators/pip_join.py": 1,
+        "session.py": 1,
+    },
     ".mapInPandas(": {
         "operators/fetch.py": 1,
     },

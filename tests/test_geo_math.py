@@ -6,6 +6,7 @@ from __future__ import annotations
 import math
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from landlensdb_spark.geo import cells, mercator, tiles
@@ -46,6 +47,22 @@ def test_spark_tile_matches_numpy(spark):
     assert (out["tile_x"].to_numpy() == x).all()
     assert (out["tile_y"].to_numpy() == y).all()
     assert (out["quadkey"].to_numpy() == qk).all()
+
+
+@pytest.mark.parametrize("zoom", [0, 1, 14, 29])
+def test_with_tile_quadkey_at_grid_edges(spark, zoom):
+    """x, y in {0, n-1}: the corner tiles, whose quadkeys set no bit or
+    every bit below the zoom prefix."""
+    n = 2**zoom
+    df = spark.createDataFrame(
+        [(lon, lat) for lon in (-180.0, 180.0) for lat in (89.0, -89.0)],
+        "lon double, lat double",
+    )
+    out = tiles.with_tile(df, zoom=zoom).toPandas()
+    x, y = out["tile_x"].to_numpy(), out["tile_y"].to_numpy()
+    assert sorted(zip(x, y)) == [(0, 0), (0, n - 1), (n - 1, 0), (n - 1, n - 1)]
+    assert (out["tile_z"] == zoom).all()
+    assert (out["quadkey"].to_numpy() == tiles.np_quadkey(x, y, zoom)).all()
 
 
 def test_tile_bounds_roundtrip(spark):

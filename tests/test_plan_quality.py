@@ -309,7 +309,8 @@ def test_bm25_broadcast_side_is_query_bounded(spark):
     assert subs, tree
     for sub in subs:
         if "Generate explode" in sub:  # derived from the corpus vocabulary
-            assert re.search(r"ExistingRDD\[term#\d+\]", sub), (
+            # the query terms are a driver-local Arrow table (LocalRelation)
+            assert re.search(r"LocalTableScan \[term#\d+\]", sub), (
                 "vocabulary-derived broadcast without query-terms restriction:\n"
                 + sub
             )
