@@ -9,12 +9,14 @@ between the Spark columns and the DuckDB SQL (landlensdb_spark/synth.py).
 
 from __future__ import annotations
 
+import os
 import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, "/root/repo")
+# run this checkout's package, wherever the checkout lives
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
 def entry(spark: SparkSession) -> DataFrame:

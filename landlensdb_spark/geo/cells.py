@@ -143,6 +143,8 @@ def np_hilbert_cell(lon: np.ndarray, lat: np.ndarray, level: int = HILBERT_LEVEL
 
 def hilbert_cell_udf(level: int = HILBERT_LEVEL):
     """pandas UDF wrapper for :func:`np_hilbert_cell` (Arrow-batched)."""
+    # not ranges.hilbert_d_udf over Catalyst tile_x/tile_y: tile_y differs
+    # from np_tile_xy on exact tile-edge latitudes (2844 of 28672 at z13)
 
     @F.pandas_udf(LongType())
     def _enc(lon: pd.Series, lat: pd.Series) -> pd.Series:

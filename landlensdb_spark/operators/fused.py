@@ -40,19 +40,14 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from landlensdb_spark.broadcast_dim import broadcast_dim, worker_state
 from landlensdb_spark.geo.cells import np_cell_encode
 from landlensdb_spark.operators.pip_join import (
     _collect_polygons,
-    pack_refine_state,
+    _cover_frame,
+    polygon_state,
     refine_points,
 )
-
-#: driver-side memo of broadcast (rings, cover, res) bundles per polygon
-#: table (strong ref kept so id() keys cannot be recycled).
-_prep_cache: dict[tuple, tuple] = {}
-
-#: executor-side memo of unpacked cover frames + packed ring tensors.
-_worker_cache: dict[tuple, tuple] = {}
 
 
 def extract_pip(
@@ -73,33 +68,7 @@ def extract_pip(
     inside k overlapping polygons yields k rows (same contract as
     ``pip_join(extract_geotags(pages), polygons)``).
     """
-    import uuid
-
-    spark = pages.sparkSession
-    ck = (id(polygons), polygon_id, rings_col)
-    hit = _prep_cache.get(ck)
-    if hit is None:
-        rings_by_id, cover_rows, res_set = _collect_polygons(
-            polygons, polygon_id, rings_col
-        )
-        cover_np = np.array(
-            [(c, p, f) for _, c, p, f in cover_rows], dtype=np.int64
-        )
-        bc = spark.sparkContext.broadcast(
-            (rings_by_id, cover_np, sorted(res_set))
-        )
-        # unique per-prep token for the worker cache: the id()-based memo key
-        # can be recycled after eviction + GC, which would make long-lived
-        # python workers serve a STALE polygon table for a new broadcast
-        token = uuid.uuid4().hex
-        if len(_prep_cache) >= 8:
-            # release the evicted entry's executor broadcast blocks — dropping
-            # the Broadcast ref alone leaks them for the life of the app
-            _evicted = _prep_cache.pop(next(iter(_prep_cache)))
-            _evicted[1].destroy()
-        _prep_cache[ck] = (polygons, bc, token)
-    else:
-        bc, token = hit[1], hit[2]
+    bc, token = broadcast_dim(polygons, _collect_polygons, polygon_id, rings_col)
 
     if keep is not None:
         # loud-failure twin of extract.extract_geotags' keep= validation: a
@@ -119,27 +88,6 @@ def extract_pip(
         + (["text_extracted string"] if with_text else [])
         + [f"{polygon_id} bigint"]
     )
-    key = token
-
-    def _get_state():
-        if key not in _worker_cache:
-            rings_by_id, cover_np, res_sorted = bc.value
-            cover_pdf = pd.DataFrame(
-                {
-                    "_cell": cover_np[:, 0],
-                    "_pid": cover_np[:, 1],
-                    "_full": cover_np[:, 2].astype(bool),
-                }
-            )
-            if len(_worker_cache) >= 8:
-                _worker_cache.pop(next(iter(_worker_cache)))
-            _worker_cache[key] = (
-                cover_pdf,
-                res_sorted,
-                pack_refine_state(rings_by_id),
-            )
-        return _worker_cache[key]
-
     # ship ONLY the needed columns through the Arrow boundary: the python
     # stage reads `html` + the kept columns, but mapInArrow serializes
     # every input column — on the bench pages table the unused `text`
@@ -153,7 +101,9 @@ def extract_pip(
 
         from landlensdb_spark.extract import extract_geotag_pa
 
-        cover_pdf, res_sorted, state = _get_state()
+        _, cover, res_sorted = bc.value
+        cover_pdf = _cover_frame(cover, "_pid")
+        state = worker_state(token, bc, polygon_state)
         for b in batches:
             col = b.column(b.schema.get_field_index(html))
             s = col.cast(pa.string()) if pa.types.is_binary(col.type) else col

@@ -29,16 +29,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType
 
+from landlensdb_spark.broadcast_dim import broadcast_dim, worker_state
 from landlensdb_spark.geo.cells import cell_encode
 from landlensdb_spark.geo.geometry import points_in_polygon
 
 #: max cover cells per polygon before coarsening its cover resolution.
 MAX_COVER_CELLS = 64
-
-#: memoized build-side prep keyed by the polygon DataFrame object: repeated
-#: joins against the same (immutable) polygon table skip the driver collect.
-#: Values keep a strong ref to the DataFrame so its id() cannot be recycled.
-_PREP_CACHE: dict[tuple[int, str, str], tuple] = {}
 
 
 def _compact_cover_np(
@@ -97,9 +93,11 @@ def _collect_polygons(polygons: DataFrame, id_col: str, rings_col: str):
     """Driver-side prep of the build side (reference does the same:
     simplify/dedupe/index the network before the join, road_network.py:83-129).
 
-    Returns (rings_by_id, cover_rows, res_set): polygon coordinate arrays
-    keyed by id, the (res, cell, id) cover triples, and the distinct cover
-    resolutions in use.
+    Returns (rings_by_id, cover, res_sorted): polygon coordinate arrays
+    keyed by id, the cover as one ``(n, 3)`` int64 array of
+    ``(cell, id, full)`` rows, and the sorted distinct cover resolutions.
+    It is the broadcast payload :func:`pip_join` and
+    :func:`~landlensdb_spark.operators.fused.extract_pip` share.
 
     Covers are COMPACTED per polygon (:func:`_compact_cover_np`) before
     shipping: complete same-flag sibling blocks in the cover collapse, so
@@ -108,7 +106,7 @@ def _collect_polygons(polygons: DataFrame, id_col: str, rings_col: str):
     alignment-dependent; a cover with no aligned same-flag 2x2 block
     legitimately compacts to itself). The point side keeps the identical
     one-explode/equi-join shape — ``cell_encode`` at a coarser res IS the
-    probe's ancestor cell, so the exploded array over ``res_set`` (which
+    probe's ancestor cell, so the exploded array over ``res_sorted`` (which
     now spans the compacted covers' mixed resolutions, at most 3 extra
     coarser levels) is exactly the ancestor-chain join the compact cover
     needs. At 100 TB the broadcast/build side is what breaks first
@@ -171,8 +169,7 @@ def _collect_polygons(polygons: DataFrame, id_col: str, rings_col: str):
             )
         edge_boxes[pid] = np.vstack(boxes)
 
-    cover_rows: list[tuple[int, int, int, bool]] = []
-    res_set: set[int] = set()
+    covers: list[np.ndarray] = []
     for res in set(int(r) for r in np.unique(res_arr)):
         sel = np.where(res_arr == res)[0]
         x0, y1 = np_tile_xy(bb[sel, 0], bb[sel, 1], res)
@@ -209,12 +206,12 @@ def _collect_polygons(polygons: DataFrame, id_col: str, rings_col: str):
             else:
                 full = np.zeros(cells.shape[0], dtype=bool)
             ccells, cfull = _compact_cover_np(cells, full)
-            res_set.update(int(r) for r in np.unique(ccells >> _RES_SHIFT))
-            cover_rows.extend(
-                (int(c) >> _RES_SHIFT, int(c), pid, bool(f))
-                for c, f in zip(ccells, cfull)
+            covers.append(
+                np.column_stack([ccells, np.full(len(ccells), pid), cfull])
             )
-    return rings_by_id, cover_rows, res_set
+    cover = np.concatenate(covers)
+    res_sorted = [int(r) for r in np.unique(cover[:, 0] >> _RES_SHIFT)]
+    return rings_by_id, cover, res_sorted
 
 
 def pack_refine_state(rings_by_id: dict) -> dict:
@@ -253,6 +250,20 @@ def pack_refine_state(rings_by_id: dict) -> dict:
     else:
         state["len_table"] = None
     return state
+
+
+def _cover_frame(cover: np.ndarray, pid_col: str) -> pd.DataFrame:
+    """An ``(n, 3)`` cover array as a (``_cell``, ``pid_col``, ``_full``) frame."""
+    return pd.DataFrame(
+        {"_cell": cover[:, 0], pid_col: cover[:, 1], "_full": cover[:, 2].astype(bool)}
+    )
+
+
+def polygon_state(payload) -> dict:
+    """Worker-side unpack of a :func:`_collect_polygons` broadcast: the
+    :func:`pack_refine_state` bundle of its rings. The one build for that
+    payload, shared by :func:`pip_join` and the fused extract_pip."""
+    return pack_refine_state(payload[0])
 
 
 def refine_points(
@@ -303,39 +314,20 @@ def pip_join(
     bottom edges inside, right/top outside for rectilinear polygons).
     """
     spark = points.sparkSession
-    key = (id(polygons), polygon_id, rings_col)
-    if key in _PREP_CACHE:
-        _, rings_by_id, cover_rows, res_set, bc = _PREP_CACHE[key]
-    else:
-        rings_by_id, cover_rows, res_set = _collect_polygons(
-            polygons, polygon_id, rings_col
-        )
-        bc = spark.sparkContext.broadcast(rings_by_id)
-        if len(_PREP_CACHE) > 32:
-            _PREP_CACHE.clear()
-        _PREP_CACHE[key] = (polygons, rings_by_id, cover_rows, res_set, bc)
+    bc, token = broadcast_dim(polygons, _collect_polygons, polygon_id, rings_col)
+    _, cover, res_sorted = bc.value
 
     # cell ids carry their res in the top bits, so covers at mixed adaptive
     # resolutions coexist in ONE join column; ship via Arrow (fast path).
-    cover_pdf = pd.DataFrame(
-        [(c, p, f) for _, c, p, f in cover_rows],
-        columns=["_cell", polygon_id, "_full"],
-    ).astype({"_cell": "int64", polygon_id: "int64", "_full": "bool"})
-    cover_df = spark.createDataFrame(cover_pdf)
+    cover_df = spark.createDataFrame(_cover_frame(cover, polygon_id))
     if broadcast_cover:
         cover_df = F.broadcast(cover_df)
-
-    # executor-side state: single-ring polygons packed into per-ring-length
-    # tensors so one batch refines in a handful of vectorized calls; only
-    # multi-ring (holed) polygons take the per-polygon path.
-    _state: dict = {}
 
     @F.pandas_udf(BooleanType())
     def _contains(
         lon_s: pd.Series, lat_s: pd.Series, pid_s: pd.Series, full_s: pd.Series
     ) -> pd.Series:
-        if not _state:
-            _state.update(pack_refine_state(bc.value))
+        state = worker_state(token, bc, polygon_state)
         full = full_s.to_numpy(dtype=bool)
         if full.all():
             return pd.Series(full)
@@ -345,13 +337,13 @@ def pip_join(
         px = lon_s.iloc[keep].to_numpy(dtype=np.float64)
         py = lat_s.iloc[keep].to_numpy(dtype=np.float64)
         pids = pid_s.iloc[keep].to_numpy()
-        out_all[keep] = refine_points(_state, px, py, pids)
+        out_all[keep] = refine_points(state, px, py, pids)
         return pd.Series(out_all)
 
     # ONE pass over the point side: explode the point's cell id at each
     # distinct cover resolution (pure column math — 2-3 cheap expressions),
     # then a single broadcast equi-join on the cell long.
-    cell_array = F.array(*[cell_encode(lon, lat, r) for r in sorted(res_set)])
+    cell_array = F.array(*[cell_encode(lon, lat, r) for r in res_sorted])
     pts = points.withColumn("_cell", F.explode(cell_array))
     candidates = pts.join(cover_df, "_cell", "inner").drop("_cell")
 

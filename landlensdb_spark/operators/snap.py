@@ -35,20 +35,13 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from landlensdb_spark.broadcast_dim import broadcast_dim, worker_state
 from landlensdb_spark.geo.geometry import bearing, point_segment_t
 from landlensdb_spark.geo.mercator import R, np_inv_merc, np_merc_x, np_merc_y
 from landlensdb_spark.geo.sphere import align_heading_col
 from landlensdb_spark.operators.multimodal import map_batches
 
 WORLD = 2.0 * math.pi * R  # mercator world width in meters
-
-#: driver-side memo of prepared+broadcast networks, keyed on the network
-#: DataFrame identity + snap params (strong ref kept; bounded at 8 entries).
-_net_cache: dict[tuple, tuple] = {}
-
-#: executor-side memo of unpacked segment arrays + bucket tables, keyed on the
-#: driver token. Lives in the (reused) python worker process across tasks.
-_worker_cache: dict[tuple, tuple] = {}
 
 
 def _flatten_network(rows) -> dict[str, np.ndarray]:
@@ -120,6 +113,29 @@ def _bucket_segments(
     return cell_key[order], seg_idx[order]
 
 
+def _network_prep(
+    network: DataFrame,
+    line_id_col: str,
+    coords_col: str,
+    tolerance_m: float,
+    round_merc: int | None,
+) -> tuple:
+    """Driver-side broadcast payload: flat segments + snap params."""
+    net = _flatten_network(network.select(line_id_col, coords_col).collect())
+    return net, _grid_res_for_tolerance(tolerance_m), tolerance_m, round_merc
+
+
+def _network_index(payload) -> tuple:
+    """Worker-side unpack: segments (rounded under ``round_merc``) and their
+    sorted bucket table."""
+    net, res, tol, rm = payload
+    seg = {k: np.asarray(v) for k, v in net.items()}
+    if rm is not None:
+        for k in ("x0", "y0", "x1", "y1"):
+            seg[k] = np.round(seg[k], rm)
+    return (seg, *_bucket_segments(seg, res, tol), res, tol, rm)
+
+
 def snap_to_network(
     points: DataFrame,
     network: DataFrame,
@@ -142,59 +158,17 @@ def snap_to_network(
     ``round_merc``: optionally round projected coords to N decimals before
     distance math (cross-engine float-parity mode used by the oracle checks).
     """
-    spark = points.sparkSession
-    res = _grid_res_for_tolerance(tolerance_m)
-    # memoized driver-side prep: collect + flatten + broadcast once per
-    # (network, tolerance) — repeated snaps against the same network (the
-    # common production shape: one road network, many probe batches) pay the
-    # index build once, like the reference's persistent R-tree (snap.py:19-31).
-    # The cache holds a strong ref to the network DataFrame so the id() key
-    # cannot be recycled while its entry lives.
-    import uuid
-
-    ck = (id(network), line_id_col, coords_col, tolerance_m, round_merc)
-    hit = _net_cache.get(ck)
-    if hit is None:
-        net_rows = [
-            (r[0], r[1]) for r in network.select(line_id_col, coords_col).collect()
-        ]
-        net = _flatten_network(net_rows)
-        bc = spark.sparkContext.broadcast((net, res, tolerance_m, round_merc))
-        # worker-cache token: unique PER PREP, never id()-derived — after this
-        # dict evicts an entry, CPython may recycle the DataFrame id, and an
-        # id-based token would make long-lived python workers serve the OLD
-        # network's index for the new broadcast
-        token = uuid.uuid4().hex
-        if len(_net_cache) >= 8:
-            # destroy the evicted broadcast: executors otherwise keep its
-            # blocks forever (the Broadcast ref dies, the blocks don't)
-            _evicted = _net_cache.pop(next(iter(_net_cache)))
-            _evicted[1].destroy()
-        _net_cache[ck] = (network, bc, token)
-    else:
-        bc, token = hit[1], hit[2]
-
-    # executor-local cache: bucket table built once per python worker. Keyed
-    # on the driver-generated per-prep token (NOT id(bc): each task unpickles
-    # a fresh Broadcast proxy, so id() would miss every task; and NOT the
-    # id(network)-based memo key, which can be recycled after eviction). The
-    # token stays stable across repeated snaps thanks to the memo above.
-    key = token
-
-    def _get_index():
-        if key not in _worker_cache:
-            net_, res_, tol_, rm = bc.value
-            seg = {kk: np.asarray(v) for kk, v in net_.items()}
-            if rm is not None:
-                for kk in ("x0", "y0", "x1", "y1"):
-                    seg[kk] = np.round(seg[kk], rm)
-            if len(_worker_cache) >= 8:
-                _worker_cache.pop(next(iter(_worker_cache)))
-            _worker_cache[key] = (seg, *_bucket_segments(seg, res_, tol_), res_, tol_, rm)
-        return _worker_cache[key]
+    # collect + flatten + broadcast once per (network, snap params): repeated
+    # snaps against one road network pay the index build once, like the
+    # reference's persistent R-tree (snap.py:19-31)
+    bc, token = broadcast_dim(
+        network, _network_prep, line_id_col, coords_col, tolerance_m, round_merc
+    )
 
     def _snap(lon_a, lat_a) -> list[np.ndarray]:
-        seg, cell_key, seg_idx, res_, tol_, rm = _get_index()
+        seg, cell_key, seg_idx, res_, tol_, rm = worker_state(
+            token, bc, _network_index
+        )
         n = len(lon_a)
         px = np_merc_x(lon_a.to_numpy(zero_copy_only=False).astype(np.float64))
         py = np_merc_y(lat_a.to_numpy(zero_copy_only=False).astype(np.float64))

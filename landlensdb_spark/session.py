@@ -73,8 +73,8 @@ def get_spark(
     # every-task importlib.invalidate_caches() zip-TOC re-parse (63-80ms/
     # task here) and the full-heap gc.collect() between reused tasks (see
     # pydaemon docstring). Enabled only when the package is importable by
-    # the worker python (same env as the driver on local; shipped/installed
-    # on a real cluster) so a missing module can never kill worker startup.
+    # the driver; the workers find it through the PYTHONPATH set below
+    # (local) or an install shipped with the job (a real cluster).
     if not os.environ.get("SPARK_GRAFT_NO_DAEMON_SHIM"):
         try:
             import landlensdb_spark.pydaemon  # noqa: F401
@@ -86,7 +86,15 @@ def get_spark(
         conf.update(extra_conf)
     for k, v in conf.items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    # workers do not see the driver's sys.path: put the directory this
+    # package was loaded from first on theirs, ahead of any PYTHONPATH the
+    # deployment gave them (spark.executorEnv.PYTHONPATH lands in here)
+    env = spark.sparkContext.environment
+    here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    rest = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p and p != here]
+    env["PYTHONPATH"] = os.pathsep.join([here, *rest])
+    return spark
 
 
 def local_frame(spark: SparkSession, rows, ddl: str) -> DataFrame:

@@ -245,6 +245,8 @@ def streaming_geo_tiles(
     ingest mode (each input file processed once across restarts, the
     reference's resumable-ingest semantics, cloud.py:483-496). Stream==batch
     parity is pytest-locked.
+    The polygon broadcast is destroyed, and the running query fails, after
+    8 newer dimension preps in this driver (broadcast_dim.BOUND).
     """
     from landlensdb_spark.operators.fused import extract_pip
     from landlensdb_spark.operators.tiles import assign_tiles

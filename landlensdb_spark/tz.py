@@ -23,6 +23,8 @@ module provides:
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -48,9 +50,12 @@ TZ_ZONES: list[tuple[int, str, int, float, float, float, float]] = [
 ]
 
 
+@functools.cache
 def tz_table(spark: SparkSession) -> DataFrame:
     """Zone fixture as generic PIP polygons: (tz_id, tz_name, offset_min,
-    ring) — closed [[lon,lat],...] rings like every other polygon table."""
+    ring) — closed [[lon,lat],...] rings like every other polygon table.
+    One frame per session, so every :func:`with_timezone` shares one
+    broadcast instead of evicting earlier frames' (broadcast_dim.BOUND)."""
     rows = []
     for tz_id, name, off, w, s, e, n in TZ_ZONES:
         ring = [[w, s], [e, s], [e, n], [w, n], [w, s]]

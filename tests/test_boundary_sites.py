@@ -10,6 +10,10 @@ its public ``batch_size`` bounds the fetched content held per yielded
 frame, and ``map_batches`` yields one output batch per input batch, so it
 cannot keep that bound.
 
+Scalar ``pandas_udf`` and grouped ``applyInPandas`` sites are pinned the
+same way: each is an Arrow Python stage with its own worker per task, so a
+new one should be a decision, not a drift.
+
 Driver-local rows enter the other way too. ``.createDataFrame(`` is pinned
 to ``session.local_frame``, which ships rows as one typed Arrow table (a
 ``LocalRelation``), and to ``pip_join``'s cover, which is already a pandas
@@ -38,6 +42,24 @@ PINNED = {
         "extract.py": 1,
         "operators/fused.py": 1,
         "operators/multimodal.py": 1,
+    },
+    "pandas_udf(": {
+        "geo/cells.py": 1,
+        "geo/s2.py": 1,
+        "geo/wkb.py": 2,
+        "operators/bpe.py": 1,
+        "operators/dedup.py": 1,
+        "operators/mvt.py": 1,
+        "operators/pip_join.py": 1,
+        "operators/ranges.py": 1,
+        "operators/raster.py": 1,
+        "operators/similarity.py": 3,
+        "operators/textstats.py": 1,
+    },
+    ".applyInPandas(": {
+        "entry_queries.py": 1,
+        "geo/cells.py": 3,
+        "operators/hull.py": 2,
     },
 }
 

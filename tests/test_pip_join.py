@@ -122,6 +122,7 @@ def test_pip_compacted_cover_shrinks_and_stays_exact(spark):
     """A polygon whose bbox cover is a large aligned grid: the broadcast
     cover table must shrink under compaction while pip_join results stay
     exactly the brute-force ray-cast's."""
+    from landlensdb_spark.geo.cells import _RES_SHIFT
     from landlensdb_spark.operators.pip_join import _collect_polygons
 
     # square covering res-6 cells 32..37 per axis (6x6 bbox cover, 5.625
@@ -135,14 +136,14 @@ def test_pip_compacted_cover_shrinks_and_stays_exact(spark):
     polys = spark.createDataFrame(
         [(0, [sq])], "admin_id long, ring array<array<array<double>>>"
     )
-    _, cover_rows, res_set = _collect_polygons(polys, "admin_id", "ring")
-    assert len(res_set) > 1, "compaction should produce mixed resolutions"
+    _, cover, res_sorted = _collect_polygons(polys, "admin_id", "ring")
+    assert len(res_sorted) > 1, "compaction should produce mixed resolutions"
     # footprint bookkeeping: expanding every compacted cell back to the
     # finest res recovers the original solid-rectangle cell count, and the
     # compacted table is strictly smaller than that rectangle
-    finest = max(int(r) for r in res_set)
-    uncompacted = sum(4 ** (finest - r) for r, *_ in cover_rows)
-    assert len(cover_rows) < uncompacted
+    finest = res_sorted[-1]
+    uncompacted = int((4 ** (finest - (cover[:, 0] >> _RES_SHIFT))).sum())
+    assert len(cover) < uncompacted
     rng = np.random.default_rng(11)
     px = rng.uniform(-1, 24, 2500)
     py = rng.uniform(-1, 24, 2500)
