@@ -23,8 +23,9 @@ def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0.
 
     Pipeline: synthesize pages from the documents keys -> extract geotags
-    from html (Arrow UDF) -> PIP join vs admin polygons (cell equi-join +
-    ray-cast refine) -> z14 tile assignment (column math) -> rollup.
+    from html (Arrow map) -> PIP join vs admin polygons (cell-cover
+    candidates + ray-cast refine) -> z14 tile assignment (column math) ->
+    rollup.
     """
     from pyspark.sql import functions as F
 

@@ -3,7 +3,7 @@
 The web-scale analog of the reference's EXIF loader
 (/root/reference/landlensdb/handlers/image.py:294-415): where the reference
 walks a directory and calls PIL per image, we scan the pages table and run
-one ``mapInArrow`` pass per partition — RE2 regex over the whole Arrow
+one Arrow map pass per partition — RE2 regex over the whole Arrow
 column (``pyarrow.compute``), no per-row Python.
 
 Extraction semantics re-expressed from the reference:
@@ -24,6 +24,8 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
+
+from landlensdb_spark.operators.multimodal import map_batches
 
 _TEXT_RE = r'<p data-text="1">(.*?)</p>'
 _META_LAT_RE = r'<meta property="place:location:latitude" content="([^"]+)"'
@@ -76,7 +78,7 @@ def extract_geotag_pa(s, with_text: bool = True) -> tuple:
 
     Returns ``(lat, lon, text)`` — lat/lon as float64 numpy arrays (NaN for
     untagged rows), ``text`` an Arrow string array (None when
-    ``with_text=False``). Shared by the ``mapInArrow`` operators
+    ``with_text=False``). Shared by the Arrow map operators
     (:func:`extract_geotags`, ``operators.fused.extract_pip``), which hand
     the Spark-delivered Arrow column straight here — no pandas
     materialization of the (dominant) html payload on the input side.
@@ -142,71 +144,44 @@ def extract_geotags(
     """Attach ``lat``/``lon``/``text_extracted`` columns extracted from ``html``.
 
     ``drop_untagged=True`` filters rows with no geotag (the reference skips
-    GPS-less images, image.py:334-338). Implemented as ONE ``mapInArrow``
-    pass: the untagged-row filter runs inside the same Arrow batch, and the
-    map acts as a plan barrier so Catalyst cannot push a filter beneath the
+    GPS-less images, image.py:334-338); with ``drop_untagged=False`` an
+    untagged coordinate is NULL. Implemented as ONE
+    :func:`~landlensdb_spark.operators.multimodal.map_batches` pass: the
+    untagged-row filter runs inside the same Arrow batch, and the map acts
+    as a plan barrier so Catalyst cannot push a filter beneath the
     projection and re-evaluate the (expensive) extraction twice — the
     double-ArrowEvalPython plan the naive withColumn+filter formulation
-    produces. mapInArrow (not mapInPandas) so the html payload is never
-    materialized as per-row Python bytes objects: the Spark-delivered
-    Arrow binary column feeds the RE2 kernel directly and the output is
-    an Arrow ``take`` of the pass-through columns (measured r08: the
-    pandas round-trip alone cost ~0.16s/600k rows on 8 cores). ``drop_html=True`` drops the heavy binary column on output so
+    produces. The Spark-delivered Arrow binary column feeds the RE2 kernel
+    directly (never per-row Python bytes objects) and the pass-through
+    columns come back as an Arrow ``take`` (measured r08: a pandas
+    round-trip alone cost ~0.16s/600k rows on 8 cores).
+    ``drop_html=True`` drops the heavy binary column on output so
     downstream shuffles never carry it. ``with_text=False`` omits
     ``text_extracted`` — geo-only pipelines skip one full-column regex pass
-    AND the (dominant) Python->JVM string transfer; mapInArrow is a plan
+    AND the (dominant) Python->JVM string transfer; the map is a plan
     barrier, so Catalyst cannot column-prune through it and the caller must
     ask for the narrow output explicitly.
 
-    ``keep`` restricts the pass-through columns: mapInArrow serializes
-    every INPUT column across the Arrow boundary, so narrow pipelines
-    (e.g. url-only tiling) should name just what they need — the heavy
-    ``text`` column otherwise rides the transfer both ways for nothing.
+    ``keep`` restricts the pass-through columns (default: every input
+    column but a dropped ``html``, in schema order); they come back in the
+    order given, ahead of ``lat``/``lon``. Only ``keep`` and ``html`` cross
+    the Arrow boundary, so narrow pipelines (e.g. url-only tiling) should
+    name just what they need — the heavy ``text`` column otherwise rides
+    the transfer both ways for nothing.
     """
-    from collections.abc import Iterator
+    if keep is None:
+        keep = [c for c in df.columns if not (drop_html and c == html)]
 
-    if keep is not None:
-        unknown = sorted(set(keep) - {f.name for f in df.schema.fields})
-        if unknown:  # loud: a typo must not silently narrow the output
-            raise ValueError(f"keep= names not in the input schema: {unknown}")
-    fields = [
-        f
-        for f in df.schema.fields
-        if (keep is None and not (drop_html and f.name == html))
-        or (keep is not None and f.name in keep)
-    ]
-    out_schema = ", ".join(
-        [f"{f.name} {f.dataType.simpleString()}" for f in fields]
-        + ["lat double", "lon double"]
-        + (["text_extracted string"] if with_text else [])
-    )
-    keep_names = [f.name for f in fields]
-    if keep is not None:  # prune the Arrow transfer, not just the output
-        df = df.select(*keep_names, html) if html not in keep_names else (
-            df.select(*keep_names)
-        )
-
-    def _extract(batches):
+    def _kernel(col):
         import pyarrow as pa
 
-        for b in batches:
-            col = b.column(b.schema.get_field_index(html))
-            s = col.cast(pa.string()) if pa.types.is_binary(col.type) else col
-            lat, lon, text = extract_geotag_pa(s, with_text=with_text)
-            tb = pa.Table.from_batches([b]).select(keep_names)
-            # from_pandas=True: NaN -> null, matching the pandas-path
-            # semantics this operator always had for untagged rows
-            lat_pa = pa.array(lat, type=pa.float64(), from_pandas=True)
-            lon_pa = pa.array(lon, type=pa.float64(), from_pandas=True)
-            if drop_untagged:
-                sel = pa.array(np.flatnonzero(~(np.isnan(lat) | np.isnan(lon))))
-                tb = tb.take(sel)
-                lat_pa, lon_pa = lat_pa.take(sel), lon_pa.take(sel)
-                if with_text:
-                    text = text.take(sel)
-            tb = tb.append_column("lat", lat_pa).append_column("lon", lon_pa)
-            if with_text:
-                tb = tb.append_column("text_extracted", text)
-            yield from tb.combine_chunks().to_batches()
+        s = col.cast(pa.string()) if pa.types.is_binary(col.type) else col
+        lat, lon, text = extract_geotag_pa(s, with_text=with_text)
+        texts = [text] if with_text else []
+        if not drop_untagged:
+            return [np.ma.masked_array(v, np.isnan(v)) for v in (lat, lon)] + texts
+        sel = np.flatnonzero(~(np.isnan(lat) | np.isnan(lon)))
+        return [sel, lat[sel], lon[sel], *(t.take(pa.array(sel)) for t in texts)]
 
-    return df.mapInArrow(_extract, out_schema)
+    out = "lat double, lon double" + (", text_extracted string" if with_text else "")
+    return map_batches(df, [html], _kernel, out, keep=keep)

@@ -12,8 +12,8 @@ Two encodings, same external contract as H3/S2 (neither native lib is in the
 sandbox; the *interface* is cell-based per SURVEY.md §7 so a real h3/s2 build
 can swap in):
 
-- ``cell_encode(lon, lat, res)`` — "H3 slot": equirect... no — Web-Mercator
-  slippy grid at zoom=res, packed ``(res << 58) | (x << 29) | y``. Pure Spark
+- ``cell_encode(lon, lat, res)`` — "H3 slot": the Web-Mercator slippy
+  grid at zoom=res, packed ``(res << 58) | (x << 29) | y``. Pure Spark
   column math (no UDF): stays inside whole-stage codegen. ``CELL_RES = 15``
   (~2.4 km at equator) approximates H3 res-7..9 cell sizes; override per op.
 - ``hilbert_cell(lon, lat, level)`` — "S2 slot": Hilbert-curve ordering of the
@@ -93,7 +93,11 @@ def k_ring(cell: Column | str, k: int, res: int = CELL_RES) -> Column:
 
 
 def np_cell_encode(lon: np.ndarray, lat: np.ndarray, res: int = CELL_RES) -> np.ndarray:
-    """numpy twin of :func:`cell_encode` (identical packing)."""
+    """numpy twin of :func:`cell_encode`: the same packing, but not the
+    same float path. Catalyst ``tile_y`` and :func:`np_tile_xy` can put an
+    exact tile-edge latitude one row apart (1136 of the 8191 inner row
+    edges at z13 on x86-64), so PIP covers and PIP probes both use this
+    form."""
     x, y = np_tile_xy(lon, lat, res)
     return (np.int64(res) << _RES_SHIFT) | (x.astype(np.int64) << _X_SHIFT) | y.astype(np.int64)
 

@@ -21,7 +21,8 @@ Contract per modality:
 - ``feature``: binary -> array<float> (embedding extraction)
 
 Batch shape: one ``mapInArrow`` pass per stage through :func:`map_rows`
-(the row-function form of :func:`map_batches`).
+(the row-function form of :func:`map_batches`, the package's one
+``mapInArrow`` site).
 Each Arrow batch of N binaries is decoded row by row (codec walks are
 per-record branchy logic); the pass-through columns stay Arrow arrays and
 are never converted to pandas. Memory per task = batch_rows x
@@ -54,7 +55,9 @@ def map_batches(
 
     The ``keep`` columns (default: all) come back as an Arrow ``select`` of
     the input batch, never converted to pandas, so a nullable long rides
-    through exactly. Only ``keep`` and ``cols`` cross the boundary.
+    through exactly. Only ``keep`` and ``cols`` cross the boundary. A
+    ``keep`` name missing from ``df`` raises ``ValueError`` here, not a
+    ``KeyError`` inside the pass.
 
     Row-index rule: a kernel whose output row count differs from its
     batch's (an explode, a filter, a local top-k) returns one extra array
@@ -67,6 +70,9 @@ def map_batches(
 
     fields = {f.name: f for f in df.schema.fields}
     keep = list(fields) if keep is None else list(keep)
+    unknown = sorted(set(keep) - set(fields))
+    if unknown:
+        raise ValueError(f"keep= names not in the input schema: {unknown}")
     new = StructType.fromDDL(out).fields
     types = [to_arrow_type(f.dataType) for f in new]
     names = keep + [f.name for f in new]

@@ -1,37 +1,43 @@
-"""Two-phase point-in-polygon join: cell equi-join -> exact ray-cast refine.
+"""Point-in-polygon join: cell-cover candidates -> exact ray-cast refine.
 
-The reference's spatial join is an R-tree index nested loop on one machine
-(/root/reference/landlensdb/process/snap.py:203-214). The Spark-native shape
-(SURVEY.md §2.3 J1/J7) is:
+The reference's spatial join is an R-tree candidate lookup then an exact
+test on one machine (landlensdb/process/snap.py:203-214).
+Here the polygon side is prepped once on the driver and broadcast
+(:mod:`landlensdb_spark.broadcast_dim`): each polygon is covered with
+spatial cells (adaptive resolution, bounded cells/polygon, compacted), and
+each cover cell is flagged interior or boundary.
 
-1. **Coarse phase** — polygons are covered with spatial cells (adaptive
-   resolution, bounded cells/polygon); points get a cell id via pure column
-   math (:func:`landlensdb_spark.geo.cells.cell_encode`, no UDF). The join is
-   a plain equi-join on the cell long against the broadcast cover table —
-   hash-relation build on executors, zero shuffle of the (huge) point side.
-2. **Exact phase** — candidate (point, polygon) pairs are refined with a
-   vectorized numpy ray-cast inside one Arrow-batched pandas UDF; polygon
-   coordinate arrays ride a Spark broadcast variable, grouped per polygon
-   inside each batch so the kernel is N-points x M-edges vectorized.
+:func:`pip_pairs` is the one kernel, shared with the fused
+:func:`~landlensdb_spark.operators.fused.extract_pip`:
 
-Scale notes (100 TB point side): the point table is touched exactly once,
-filter/projection push down beneath the UDF, and the only wide operation is
-the broadcast join. A polygon side too big to broadcast degrades gracefully:
-pass ``broadcast_cover=False`` and the same plan becomes a shuffled hash join
-on the cell key (AQE skew-split handles dense-city cells).
+1. **Candidates** — each point's cell id at every cover resolution
+   (:func:`~landlensdb_spark.geo.cells.np_cell_encode`, the same encoder
+   the cover is built with), hash-merged against the cover frame.
+2. **Refine** — interior-cell candidates are inside as they stand; only
+   boundary-cell candidates pay the vectorized numpy ray-cast
+   (:func:`refine_points`, grouped by ring length so a batch refines in a
+   few N-points x M-edges calls).
+
+:func:`pip_join` runs it as one :func:`~landlensdb_spark.operators.
+multimodal.map_batches` pass over the point side, with the row-index rule
+for the 1->k output. Scale shape: the point table is scanned once and never
+shuffled, and the broadcast is O(polygon rings + covers). Every point
+column crosses the Arrow boundary once, whole rows with no candidate rows,
+and the map is a plan barrier Catalyst cannot prune through, so a caller
+with a wide point frame should select the columns it needs first.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import BooleanType
 
 from landlensdb_spark.broadcast_dim import broadcast_dim, worker_state
-from landlensdb_spark.geo.cells import cell_encode
+from landlensdb_spark.geo.cells import np_cell_encode
 from landlensdb_spark.geo.geometry import points_in_polygon
+from landlensdb_spark.operators.multimodal import map_batches
 
 #: max cover cells per polygon before coarsening its cover resolution.
 MAX_COVER_CELLS = 64
@@ -97,19 +103,19 @@ def _collect_polygons(polygons: DataFrame, id_col: str, rings_col: str):
     keyed by id, the cover as one ``(n, 3)`` int64 array of
     ``(cell, id, full)`` rows, and the sorted distinct cover resolutions.
     It is the broadcast payload :func:`pip_join` and
-    :func:`~landlensdb_spark.operators.fused.extract_pip` share.
+    :func:`~landlensdb_spark.operators.fused.extract_pip` share; each worker
+    unpacks it once with :func:`polygon_state`.
 
     Covers are COMPACTED per polygon (:func:`_compact_cover_np`) before
     shipping: complete same-flag sibling blocks in the cover collapse, so
     the broadcast cover table shrinks — up to 4x when the interior is
     block-aligned, ~10-25% on typical unaligned bbox covers (merging is
     alignment-dependent; a cover with no aligned same-flag 2x2 block
-    legitimately compacts to itself). The point side keeps the identical
-    one-explode/equi-join shape — ``cell_encode`` at a coarser res IS the
-    probe's ancestor cell, so the exploded array over ``res_sorted`` (which
-    now spans the compacted covers' mixed resolutions, at most 3 extra
-    coarser levels) is exactly the ancestor-chain join the compact cover
-    needs. At 100 TB the broadcast/build side is what breaks first
+    legitimately compacts to itself). A point's cell at a coarser res IS
+    its ancestor cell, so :func:`pip_pairs`' probe at every ``res_sorted``
+    level (which spans the compacted covers' mixed resolutions, at most 3
+    extra coarser levels) is exactly the ancestor-chain lookup the compact
+    cover needs. At 100 TB the broadcast/build side is what breaks first
     (millions of polygons x 64 cells); trading a couple of extra cheap
     hash probes per point for a smaller build table is the right
     direction, and the bench shows no point-side regression.
@@ -221,8 +227,7 @@ def pack_refine_state(rings_by_id: dict) -> dict:
     tensors so a whole batch refines in a handful of vectorized calls;
     multi-ring (holed) polygons keep the per-polygon path. Dense pid ->
     (length, row) numpy lookup tables replace per-row dict probes when ids
-    are small ints (the common case). Shared by :func:`pip_join`'s refine
-    UDF and the fused single-stage pipeline (operators/fused.py).
+    are small ints (the common case). Built into :func:`polygon_state`.
     """
     classes: dict[int, list[tuple[int, np.ndarray]]] = {}
     multi: dict[int, list[np.ndarray]] = {}
@@ -252,18 +257,45 @@ def pack_refine_state(rings_by_id: dict) -> dict:
     return state
 
 
-def _cover_frame(cover: np.ndarray, pid_col: str) -> pd.DataFrame:
-    """An ``(n, 3)`` cover array as a (``_cell``, ``pid_col``, ``_full``) frame."""
-    return pd.DataFrame(
-        {"_cell": cover[:, 0], pid_col: cover[:, 1], "_full": cover[:, 2].astype(bool)}
-    )
-
-
 def polygon_state(payload) -> dict:
-    """Worker-side unpack of a :func:`_collect_polygons` broadcast: the
-    :func:`pack_refine_state` bundle of its rings. The one build for that
-    payload, shared by :func:`pip_join` and the fused extract_pip."""
-    return pack_refine_state(payload[0])
+    """Worker-side unpack of a :func:`_collect_polygons` broadcast, built
+    once per worker: the :func:`pack_refine_state` bundle of its rings plus
+    the cover as a (``_cell``, ``_pid``, ``_full``) frame and the sorted
+    cover resolutions. The one build :func:`pip_pairs` reads."""
+    rings_by_id, cover, res_sorted = payload
+    state = pack_refine_state(rings_by_id)
+    state["cover"] = pd.DataFrame(
+        {"_cell": cover[:, 0], "_pid": cover[:, 1], "_full": cover[:, 2].astype(bool)}
+    )
+    state["res_sorted"] = res_sorted
+    return state
+
+
+def pip_pairs(
+    state: dict, lon: np.ndarray, lat: np.ndarray
+) -> tuple[np.ndarray, np.ndarray]:
+    """Every (point index, polygon id) pair with the point inside the
+    polygon, against a :func:`polygon_state` bundle. The points must not be
+    NaN.
+
+    Candidates: each point's cell at every cover resolution (a cell id
+    carries its resolution, so mixed compacted covers share one key),
+    hash-merged against the cover. Interior-cell candidates are inside as
+    they stand; only boundary-cell candidates pay :func:`refine_points`.
+    """
+    res_sorted = state["res_sorted"]
+    cells = np.concatenate([np_cell_encode(lon, lat, r) for r in res_sorted])
+    idx = np.tile(np.arange(len(lon), dtype=np.int64), len(res_sorted))
+    cand = pd.DataFrame({"_cell": cells, "_i": idx}).merge(
+        state["cover"], on="_cell", how="inner"
+    )
+    ii = cand["_i"].to_numpy()
+    pids = cand["_pid"].to_numpy()
+    inside = cand["_full"].to_numpy().copy()
+    b = np.flatnonzero(~inside)
+    if len(b):
+        inside[b] = refine_points(state, lon[ii[b]], lat[ii[b]], pids[b])
+    return ii[inside], pids[inside]
 
 
 def refine_points(
@@ -304,54 +336,30 @@ def pip_join(
     polygon_id: str = "admin_id",
     rings_col: str = "ring",
     keep_polygon_cols: list[str] | None = None,
-    broadcast_cover: bool = True,
 ) -> DataFrame:
     """Inner-join ``points`` to the polygon containing them.
 
     Returns the point rows + the polygon id column (+ ``keep_polygon_cols``).
     A point inside k overlapping polygons yields k rows (standard spatial
-    inner join). Boundary semantics are the ray-cast half-open rule (left/
-    bottom edges inside, right/top outside for rectilinear polygons).
+    inner join); a point with a NULL or NaN coordinate yields none. Boundary
+    semantics are the ray-cast half-open rule (left/bottom edges inside,
+    right/top outside for rectilinear polygons). Every ``points`` column
+    rides the one Arrow pass, so narrow a wide frame before the join.
     """
-    spark = points.sparkSession
     bc, token = broadcast_dim(polygons, _collect_polygons, polygon_id, rings_col)
-    _, cover, res_sorted = bc.value
 
-    # cell ids carry their res in the top bits, so covers at mixed adaptive
-    # resolutions coexist in ONE join column; ship via Arrow (fast path).
-    cover_df = spark.createDataFrame(_cover_frame(cover, polygon_id))
-    if broadcast_cover:
-        cover_df = F.broadcast(cover_df)
+    def _kernel(lon_a, lat_a):
+        import pyarrow as pa
 
-    @F.pandas_udf(BooleanType())
-    def _contains(
-        lon_s: pd.Series, lat_s: pd.Series, pid_s: pd.Series, full_s: pd.Series
-    ) -> pd.Series:
         state = worker_state(token, bc, polygon_state)
-        full = full_s.to_numpy(dtype=bool)
-        if full.all():
-            return pd.Series(full)
-        # only boundary-cell rows pay the exact ray-cast
-        keep = np.where(~full)[0]
-        out_all = full.copy()
-        px = lon_s.iloc[keep].to_numpy(dtype=np.float64)
-        py = lat_s.iloc[keep].to_numpy(dtype=np.float64)
-        pids = pid_s.iloc[keep].to_numpy()
-        out_all[keep] = refine_points(state, px, py, pids)
-        return pd.Series(out_all)
+        x = lon_a.cast(pa.float64()).to_numpy(zero_copy_only=False)
+        y = lat_a.cast(pa.float64()).to_numpy(zero_copy_only=False)
+        ok = np.flatnonzero(~(np.isnan(x) | np.isnan(y)))
+        ii, pids = pip_pairs(state, x[ok], y[ok])
+        return [ok[ii], pids]
 
-    # ONE pass over the point side: explode the point's cell id at each
-    # distinct cover resolution (pure column math — 2-3 cheap expressions),
-    # then a single broadcast equi-join on the cell long.
-    cell_array = F.array(*[cell_encode(lon, lat, r) for r in res_sorted])
-    pts = points.withColumn("_cell", F.explode(cell_array))
-    candidates = pts.join(cover_df, "_cell", "inner").drop("_cell")
-
-    refined = candidates.filter(
-        _contains(F.col(lon), F.col(lat), F.col(polygon_id), F.col("_full"))
-    ).drop("_full")
-
+    joined = map_batches(points, [lon, lat], _kernel, f"{polygon_id} bigint")
     if keep_polygon_cols:
         extra = polygons.select(polygon_id, *keep_polygon_cols)
-        refined = refined.join(F.broadcast(extra), polygon_id, "left")
-    return refined
+        joined = joined.join(F.broadcast(extra), polygon_id, "left")
+    return joined

@@ -92,7 +92,8 @@ def bm25_search(
     computed exactly; score is rounded to 6dp and ranked with a doc-id
     tie-break so the ranking is engine-exact.
 
-    ``top=k`` ranks via distributed top-k (TakeOrderedAndProject);
+    ``top=k`` ranks via distributed top-k (TakeOrderedAndProject), then
+    one sorted array of the <= k rows left;
     ``top=None`` ranks the FULL result with a two-level rank (range
     shuffle + partitioned window + broadcast offsets) — no unpartitioned
     WindowExec on either path, so both scale to unbounded result sets.
@@ -134,15 +135,22 @@ def bm25_search(
         .groupBy(id_col)
         .agg(F.round(F.sum(F.col("_idf") * F.col("_tfn")), 6).alias("score"))
     )
+    order = [F.col("score").desc(), F.col(id_col).asc()]
     if top is not None:
         # distributed top-k: orderBy+limit compiles to TakeOrderedAndProject
-        # (per-partition heads merged on the driver) — the global window
-        # then ranks only `top` rows.
-        w = Window.orderBy(F.col("score").desc(), F.col(id_col).asc())
-        pruned = scored.orderBy(
-            F.col("score").desc(), F.col(id_col).asc()
-        ).limit(top)
-        return pruned.withColumn("rank", F.row_number().over(w))
+        # (per-partition heads merged on the driver). The <= top rows left
+        # rank as one array sorted by (-score, id), so no window is planned.
+        key = F.struct(
+            (-F.col("score")).alias("_k"), F.col(id_col), F.col("score")
+        )
+        ranked = scored.orderBy(*order).limit(top).agg(
+            F.sort_array(F.collect_list(key)).alias("_r")
+        )
+        return ranked.select(F.posexplode("_r")).select(
+            F.col("col")[id_col].alias(id_col),
+            F.col("col.score").alias("score"),
+            (F.col("pos") + 1).alias("rank"),
+        )
     # top=None: a bare global window would rank the whole scored set in ONE
     # task (WindowExec with no partition spec — a single-machine sort at
     # corpus scale). Two-level rank instead (round-5 verdict #4):
@@ -168,7 +176,6 @@ def bm25_search(
     # the blocks once the result DataFrame is GC'd. Do not remove the
     # persist in favor of relying on spark.sql.exchange.reuse — reuse is an
     # optimizer heuristic, not a guarantee (round-6 ADVICE).
-    order = [F.col("score").desc(), F.col(id_col).asc()]
     nparts = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
     parts = (
         scored.repartitionByRange(nparts, *order)

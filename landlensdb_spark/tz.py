@@ -98,12 +98,13 @@ def with_timezone(
 ) -> DataFrame:
     """Attach ``tz_name`` / ``offset_min`` / ``local_iso`` to every row.
 
-    Zone hits come from the generic PIP join (broadcast cover, zero point
-    shuffle); rows outside every zone polygon get the nautical fallback
-    (``Etc/GMT±N`` from round(lon/15), the reference's behavior when
-    timezonefinder returns None). ``key_cols`` must uniquely identify rows
-    (the fallback is a left_anti join on them). The fixture rectangles are
-    disjoint, so a row matches at most one zone.
+    Zone hits come from the generic PIP join (one Arrow map over the
+    rows, broadcast zone polygons, zero point shuffle); rows outside every
+    zone polygon get the nautical fallback (``Etc/GMT±N`` from
+    round(lon/15), the reference's behavior when timezonefinder returns
+    None). ``key_cols`` must uniquely identify rows (the fallback is a
+    left_anti join on them). The fixture rectangles are disjoint, so a row
+    matches at most one zone.
     """
     spark = df.sparkSession
     z = zones if zones is not None else tz_table(spark)

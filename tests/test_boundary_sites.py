@@ -1,9 +1,9 @@
 """The package crosses into Python at a pinned set of map sites.
 
-Row, batch and explode kernels cross through ``multimodal.map_batches``
-(one ``mapInArrow``); the other ``mapInArrow`` passes are the fused
-extraction stages. Sites are pinned per file, so a new one fails this
-test instead of slipping in.
+Row, batch, explode and filter kernels cross through
+``multimodal.map_batches``, the one ``mapInArrow``: the extraction
+stages and the point-in-polygon join run on it too. Sites are pinned per
+file, so a new one fails this test instead of slipping in.
 
 The one ``.mapInPandas(`` left is ``fetch.fetch_batched``, on purpose:
 its public ``batch_size`` bounds the fetched content held per yielded
@@ -16,8 +16,7 @@ new one should be a decision, not a drift.
 
 Driver-local rows enter the other way too. ``.createDataFrame(`` is pinned
 to ``session.local_frame``, which ships rows as one typed Arrow table (a
-``LocalRelation``), and to ``pip_join``'s cover, which is already a pandas
-frame and so also goes over as Arrow. A list of tuples handed straight to
+``LocalRelation``). A list of tuples handed straight to
 ``createDataFrame`` would become an RDD of pickled rows whose every job
 starts a Python task; a new call site fails this test.
 """
@@ -32,15 +31,12 @@ PACKAGE = Path(__file__).resolve().parent.parent / "landlensdb_spark"
 
 PINNED = {
     ".createDataFrame(": {
-        "operators/pip_join.py": 1,
         "session.py": 1,
     },
     ".mapInPandas(": {
         "operators/fetch.py": 1,
     },
     ".mapInArrow(": {
-        "extract.py": 1,
-        "operators/fused.py": 1,
         "operators/multimodal.py": 1,
     },
     "pandas_udf(": {
@@ -50,7 +46,6 @@ PINNED = {
         "operators/bpe.py": 1,
         "operators/dedup.py": 1,
         "operators/mvt.py": 1,
-        "operators/pip_join.py": 1,
         "operators/ranges.py": 1,
         "operators/raster.py": 1,
         "operators/similarity.py": 3,

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pytest
 
 from landlensdb_spark import tables
 from landlensdb_spark.extract import extract_geotag_pdf, extract_geotags
@@ -176,3 +177,5 @@ def test_jvm_extraction_drop_untagged_and_no_text_schema(spark):
     )
     narrow = extract_geotags(df, with_text=False, keep=["name"])
     assert narrow.columns == ["name", "lat", "lon"]
+    with pytest.raises(ValueError, match="nmae"):
+        extract_geotags(df, keep=["nmae"])

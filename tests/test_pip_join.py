@@ -154,3 +154,85 @@ def test_pip_compacted_cover_shrinks_and_stays_exact(spark):
     out = pip_join(pts, polys, rings_col="ring").select("id").toPandas()
     want = set(np.where(points_in_polygon(px, py, [np.asarray(sq)]))[0])
     assert set(out["id"]) == want
+
+
+def _edge_polygons(spark, n=6, z=13):
+    """Thin rectangles whose south edge lies exactly on a z``z`` tile-edge
+    latitude, preferring the edges where Catalyst ``tile_y`` puts the edge
+    one row south of ``np_tile_xy`` (the cover's encoder)."""
+    from landlensdb_spark.geo.tiles import np_tile_north, np_tile_xy, tile_y
+
+    ys = np.arange(1, 2**z)
+    edges = np_tile_north(ys, z)
+    probe = spark.createDataFrame(
+        [(int(y), float(v)) for y, v in zip(ys, edges)], "y long, lat double"
+    )
+    cat = np.array(
+        [r[0] for r in probe.orderBy("y").select(tile_y("lat", z)).collect()]
+    )
+    south_of_cover = cat > np_tile_xy(np.zeros_like(edges), edges, z)[1]
+    prefer = south_of_cover & (np.abs(edges) < 60)
+    picked = edges[np.argsort(~prefer, kind="stable")[:n]]
+    rings = {
+        i: [[10.0, s], [10.02, s], [10.02, s + 0.02], [10.0, s + 0.02], [10.0, s]]
+        for i, s in enumerate(map(float, picked))
+    }
+    polys = spark.createDataFrame(
+        [(i, [r]) for i, r in rings.items()],
+        "admin_id long, ring array<array<array<double>>>",
+    )
+    return polys, picked, rings
+
+
+def _brute(px, py, rings):
+    return {
+        (k, pid)
+        for pid, r in rings.items()
+        for k in np.flatnonzero(points_in_polygon(px, py, [np.asarray(r)]))
+    }
+
+
+def test_pip_tile_edge_points_agree_across_operators(spark):
+    """A point exactly on a polygon's south edge, where that edge is a tile
+    edge, is probed with the cover's own encoder: pip_join and extract_pip
+    both match the brute-force ray-cast (south edges are inside)."""
+    from landlensdb_spark.extract import extract_geotags
+    from landlensdb_spark.operators.fused import extract_pip
+
+    polys, south, rings = _edge_polygons(spark)
+    # on the south edge, just below it, inside, and on the north edge
+    py = np.concatenate(
+        [south, np.nextafter(south, -np.inf), south + 0.01, south + 0.02]
+    )
+    px = np.full(len(py), 10.01)
+    pts = spark.createDataFrame(
+        [(k, float(a), float(b)) for k, (a, b) in enumerate(zip(px, py))],
+        "id long, lon double, lat double",
+    )
+    got = {tuple(r) for r in pip_join(pts, polys).select("id", "admin_id").collect()}
+    assert got == _brute(px, py, rings)
+    assert {k for k, _ in got} >= set(range(len(south)))  # every south-edge point
+
+    # extraction rounds coordinates to 6 dp: compare on what it extracts
+    meta = (
+        '<meta property="place:location:latitude" content="{!r}"/>'
+        '<meta property="place:location:longitude" content="{!r}"/>'
+    )
+    pages = spark.createDataFrame(
+        [(k, meta.format(float(b), float(a)).encode()) for k, (a, b) in enumerate(zip(px, py))],
+        "id long, html binary",
+    )
+    fused = {tuple(r) for r in extract_pip(pages, polys).select("id", "admin_id").collect()}
+    composed = pip_join(extract_geotags(pages, with_text=False), polys)
+    assert fused == {tuple(r) for r in composed.select("id", "admin_id").collect()}
+    assert fused == _brute(px, np.round(py, 6), rings)
+
+
+def test_pip_join_drops_null_and_nan_points(spark):
+    polys = synth.admin_polygons(spark)
+    lon, lat = float(synth.np_lon(0)), float(synth.np_lat(0))
+    pts = spark.createDataFrame(
+        [(0, lon, lat), (1, lon, None), (2, float("nan"), lat)],
+        "id long, lon double, lat double",
+    )
+    assert [r["id"] for r in pip_join(pts, polys).collect()] == [0]

@@ -66,14 +66,20 @@ def test_extraction_plan_has_single_python_stage(spark, pages_parquet):
     assert n_python_stages == 1, plan
 
 
-def test_pip_join_broadcasts_cover_and_never_shuffles_points(spark, pages_parquet):
-    pages = spark.read.parquet(pages_parquet)
-    geo = extract_geotags(pages).select("url", "lon", "lat")
-    joined = pip_join(geo, synth.admin_polygons(spark))
+def test_pip_join_is_one_map_and_never_shuffles_points(spark):
+    """The candidate lookup and the refine are one Arrow map over the
+    point side; the only exchange is the broadcast of the polygon columns
+    kept beside it."""
+    pts = spark.range(2000).select(
+        F.col("id"),
+        synth.lon_col(F.col("id")).alias("lon"),
+        synth.lat_col(F.col("id")).alias("lat"),
+    )
+    joined = pip_join(pts, synth.admin_polygons(spark), keep_polygon_cols=["name"])
     plan = _plan(joined)
+    assert _n_nodes(plan, "MapInArrow") == 1, plan
+    assert _n_nodes(plan, "ArrowEvalPython") == 0, plan
     assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
-    # the only exchange allowed is the broadcast of the tiny cover table
     for line in plan.splitlines():
         if "Exchange" in line and "Broadcast" not in line:
             raise AssertionError(f"unexpected shuffle of the point side: {line}")

@@ -138,6 +138,9 @@ def test_map_batches_row_index_with_no_output_rows(spark):
     assert out.schema.simpleString() == (
         "struct<id:bigint,name:string,n:bigint,tags:map<string,string>>"
     )
+    # a keep name missing from the input fails at plan time, by name
+    with pytest.raises(ValueError, match="nmae"):
+        map_batches(df, ["blob"], lambda blobs: [blobs], "b binary", keep=["nmae"])
 
 
 def test_estimate_guard_refuses_runaway(spark):
