@@ -279,41 +279,6 @@ def q_knn_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("probe_key", "point_key", F.col("rank").cast("long").alias("rank"))
 
 
-@query(
-    "knn_hex",
-    f"""
-    WITH nbr AS ({_probe_sql(2000)}),
-    prb AS ({_probe_sql(200, 13, 7)}),
-    mn AS (SELECT key, {synth.merc_x_sql('lon')} AS x, {synth.merc_y_sql('lat')} AS y FROM nbr),
-    mp AS (SELECT key, {synth.merc_x_sql('lon')} AS x, {synth.merc_y_sql('lat')} AS y FROM prb),
-    pairs AS (
-      SELECT p.key AS probe_key, n.key AS point_key,
-             (p.x-n.x)*(p.x-n.x) + (p.y-n.y)*(p.y-n.y) AS dist2
-      FROM mp p CROSS JOIN mn n
-    )
-    SELECT probe_key, point_key, rank FROM (
-      SELECT probe_key, point_key,
-             row_number() OVER (PARTITION BY probe_key ORDER BY dist2, point_key) AS rank
-      FROM pairs
-    ) WHERE rank <= 5
-    """,
-)
-def q_knn_hex(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """knn_join on the HEXAGONAL grid (round-6 verdict #6): identical
-    input, k, and brute-force oracle as knn_points, but candidate
-    generation walks isotropic hex rings (3r(r+1)+1 cells vs the square
-    box's (2r+1)^2) with the tighter hex-metric certificate
-    (operators/knn.py::_HexGrid). The hard signal proves grid="hex"
-    returns the exact same top-k as the brute force."""
-    nbr = _probe_points(spark, sf_dir, 2000).withColumnRenamed("key", "point_key")
-    prb = _probe_points(spark, sf_dir, 200, 13, 7).withColumnRenamed("key", "probe_key")
-    out = knn_join(
-        prb, nbr, k=5, probe_id="probe_key", point_id="point_key", res=14,
-        grid="hex",
-    )
-    return out.select("probe_key", "point_key", F.col("rank").cast("long").alias("rank"))
-
-
 # ---------------------------------------------------------------------------
 # Extraction (F1-F4, S1) — end-to-end html -> geotag vs closed-form oracle
 # ---------------------------------------------------------------------------

@@ -13,9 +13,9 @@ certifies nearly every probe, and certifies inside the candidate join:
 1. ``res`` comes from an HLL density probe over the point side (one job,
    memoized per table) unless the caller passes it; both sides then get a
    cell id on the square Morton grid
-   (:func:`landlensdb_spark.geo.cells.cell_encode`) or the hex index.
+   (:func:`landlensdb_spark.geo.cells.cell_encode`).
 2. **Candidate join at ring 1**: every probe explodes the constant box
-   ``r2 = grid.r2_int(1)`` tagged with each cell's ring index,
+   ``r2 = _r2_int(1)`` tagged with each cell's ring index,
    broadcast-joins points on the cell long, and drops candidates beyond
    the certified distance bound before the exchange.
 3. **Certificate in the same window**: one sort feeds both
@@ -23,8 +23,7 @@ certifies nearly every probe, and certifies inside the candidate join:
    (the reference's sort + group-first argmin, snap.py:218-221, generalized
    from 1 to k; deterministic tie-break by neighbor id) and a
    whole-partition count of candidates within ring 1. A probe with >= k of
-   them is provably exact (certificate geometry on ``_SquareGrid`` /
-   ``_HexGrid``).
+   them is provably exact (certificate geometry on :func:`_r2_int`).
 4. The certified top-k is checkpointed eagerly and the driver asks whether
    any probe is left; normally none is and that is the result.
 5. **Escalation**: uncertified probes get one more certify-in-join pass at
@@ -52,15 +51,6 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from landlensdb_spark.geo.cells import _RES_SHIFT, _X_SHIFT, cell_encode, cell_x, cell_y
-from landlensdb_spark.geo.hex import (
-    _BIAS as _HEX_BIAS,
-    _FIELD as _HEX_FIELD,
-    _Q_SHIFT as _HEX_Q_SHIFT,
-    SQRT3,
-    hex_encode,
-    hex_q,
-    hex_r,
-)
 from landlensdb_spark.geo.mercator import R
 
 WORLD = 2.0 * math.pi * R
@@ -95,91 +85,22 @@ def _cell_shift(cell: Column, dx: Column, dy: Column, res: int) -> Column:
     )
 
 
-class _SquareGrid:
-    """Chebyshev-box expansion on the Morton grid (the original path).
+def _r2_int(r1: int) -> int:
+    """Chebyshev box radius that provably holds the exact top-k of a probe
+    whose box ``r1`` holds >= k points.
 
     Certificate geometry (cell side s): a candidate in box r1 is within
     sqrt(2)*(r1+1)*s of the probe; any point at cell offset c is at least
     (c-1)*s away, so box r2 = ceil(sqrt(2)*(r1+1)) provably contains the
     exact top-k. Box r scans (2r+1)^2 cells."""
-
-    def __init__(self, res: int):
-        self.res = res
-
-    def encode(self, lon: str, lat: str) -> Column:
-        return cell_encode(lon, lat, self.res)
-
-    def shift(self, cell: Column, da: Column, db: Column) -> Column:
-        return _cell_shift(cell, da, db, self.res)
-
-    def ring(self, da: Column, db: Column) -> Column:
-        return F.greatest(F.abs(da), F.abs(db))
-
-    def db_lo(self, rad: Column, da: Column) -> Column:
-        return -rad
-
-    def db_hi(self, rad: Column, da: Column) -> Column:
-        return rad
-
-    def r2_int(self, r1: int) -> int:
-        return math.ceil(math.sqrt(2.0) * (r1 + 1))
-
-    def bound_m(self, r1: int) -> float:
-        """Upper bound (meters) on the k-th neighbor distance of a probe
-        whose box ``r1`` holds >= k points: every such point is within
-        sqrt(2)*(r1+1) cell sides (the certificate geometry above)."""
-        return math.sqrt(2.0) * (r1 + 1) * (WORLD / (1 << self.res))
+    return math.ceil(math.sqrt(2.0) * (r1 + 1))
 
 
-class _HexGrid:
-    """Isotropic hex-ring expansion on the hexagonal index (geo/hex.py).
-
-    Ring r scans 3r(r+1)+1 cells vs the square box's (2r+1)^2 for the same
-    reach, and the hex metric bounds the re-rank radius tighter.
-    Certificate geometry (edge e): adjacent hex centers are sqrt(3)*e
-    apart, so a candidate at grid distance <= r1 is within
-    sqrt(3)*e*r1 + 2e of the probe (each endpoint within the circumradius
-    e of its own center); centers at grid distance g are >= 1.5*e*g apart
-    (the tight bound proven in operators/hex_join.py), so any point outside
-    ring r2 is >= 1.5*e*(r2+1) - 2e away. Ring
-    r2 = ceil((sqrt(3)*r1 + 4)/1.5 - 1) therefore provably contains the
-    exact top-k: at r1 = 1 that is a 37-cell scan vs the square's 49 at
-    the same resolution (~25% fewer cells, ~35% fewer candidate rows after
-    the hex cell's 0.866x area is counted)."""
-
-    def __init__(self, res: int):
-        self.res = res
-
-    def encode(self, lon: str, lat: str) -> Column:
-        return hex_encode(lon, lat, self.res)
-
-    def shift(self, cell: Column, dq: Column, dr: Column) -> Column:
-        nq = hex_q(cell) + dq + F.lit(_HEX_BIAS)
-        nr = hex_r(cell) + dr + F.lit(_HEX_BIAS)
-        return F.when(
-            (nq >= 0) & (nq < _HEX_FIELD) & (nr >= 0) & (nr < _HEX_FIELD),
-            cell + dq.cast("long") * F.lit(1 << _HEX_Q_SHIFT) + dr.cast("long"),
-        )
-
-    def ring(self, dq: Column, dr: Column) -> Column:
-        return ((F.abs(dq) + F.abs(dr) + F.abs(dq + dr)) / F.lit(2)).cast("int")
-
-    # axial-coordinate bounds of |hex distance| <= rad: dr in
-    # [max(-rad, -dq-rad), min(rad, -dq+rad)] — exactly the 3r(r+1)+1 cells
-    def db_lo(self, rad: Column, dq: Column) -> Column:
-        return F.greatest(-rad, -dq - rad)
-
-    def db_hi(self, rad: Column, dq: Column) -> Column:
-        return F.least(rad, -dq + rad)
-
-    def r2_int(self, r1: int) -> int:
-        return math.ceil((SQRT3 * r1 + 4.0) / 1.5 - 1.0)
-
-    def bound_m(self, r1: int) -> float:
-        """k-th-distance bound for a probe whose ring ``r1`` holds >= k
-        points: sqrt(3)*e*r1 + 2e (certificate geometry above)."""
-        e = WORLD / ((1 << self.res) * SQRT3)
-        return SQRT3 * e * r1 + 2.0 * e
+def _bound_m(r1: int, res: int) -> float:
+    """Upper bound (meters) on the k-th neighbor distance of a probe whose
+    box ``r1`` holds >= k points: every such point is within sqrt(2)*(r1+1)
+    cell sides (the certificate geometry of :func:`_r2_int`)."""
+    return math.sqrt(2.0) * (r1 + 1) * (WORLD / (1 << res))
 
 
 def _auto_res_info(points: DataFrame, lon: str, lat: str, k: int) -> tuple[int, bool]:
@@ -236,6 +157,11 @@ def _auto_res_info(points: DataFrame, lon: str, lat: str, k: int) -> tuple[int, 
     # with ~0.5M) — nine extra shift-derived HLL sketches in the same pass
     # are far cheaper than 4x the candidate join.
     xy = points.select(tile_x(lon, base).alias("_x"), tile_y(lat, base).alias("_y"))
+    # this aggregate is wider than spark.sql.debug.maxToStringFields (25):
+    # each rsd-0.15 sketch buffers 7 words, 134 buffer attributes in all,
+    # so Spark logs "Truncated the string representation of a plan" when it
+    # renders the plan. The width is the 19 sketches themselves, not a
+    # carried column; a log census allow-lists the line for this reason.
     row = xy.agg(
         F.count(F.lit(1)).alias("_n"),
         *[
@@ -289,42 +215,24 @@ def _dist2() -> Column:
     ) * (F.col("_py") - F.col("_ny"))
 
 
-def _certify_join(pts, prb_sub, grid, r1c, k, maybe_bc, w):
-    """Certify-in-join pass at constant box/ring radius ``r1c``: candidates
-    come from radius ``r2c = grid.r2_int(r1c)``; a probe whose radius
-    ``r1c`` holds >= k points is provably exact (the grid adapter's
-    certificate geometry — see _SquareGrid/_HexGrid docstrings).
+def _certify_join(pts, prb_sub, res, r1c, k, maybe_bc, w):
+    """Certify-in-join pass at constant box radius ``r1c``: candidates
+    come from box ``r2c = _r2_int(r1c)``; a probe whose box ``r1c`` holds
+    >= k points is provably exact (certificate geometry on :func:`_r2_int`).
     Certification reads the ring tag riding the exploded box, sharing the
     candidate join's one shuffle. Returns the certified (_pid, _nid, dist2,
     rank) rows only."""
-    r2c = grid.r2_int(r1c)
+    r2c = _r2_int(r1c)
+    box = F.sequence(F.lit(-r2c), F.lit(r2c))
     probe_cells = (
-        prb_sub.select(
-            "_pid",
-            "_px",
-            "_py",
-            "_pcell",
-            F.explode(F.sequence(F.lit(-r2c), F.lit(r2c))).alias("_dx"),
-        )
+        prb_sub.select("_pid", "_px", "_py", "_pcell", F.explode(box).alias("_dx"))
+        .select("_pid", "_px", "_py", "_pcell", "_dx", F.explode(box).alias("_dy"))
         .select(
             "_pid",
             "_px",
             "_py",
-            "_pcell",
-            "_dx",
-            F.explode(
-                F.sequence(
-                    grid.db_lo(F.lit(r2c), F.col("_dx")),
-                    grid.db_hi(F.lit(r2c), F.col("_dx")),
-                )
-            ).alias("_dy"),
-        )
-        .select(
-            "_pid",
-            "_px",
-            "_py",
-            grid.ring(F.col("_dx"), F.col("_dy")).alias("_ring"),
-            grid.shift(F.col("_pcell"), F.col("_dx"), F.col("_dy")).alias("_jc"),
+            F.greatest(F.abs("_dx"), F.abs("_dy")).alias("_ring"),
+            _cell_shift(F.col("_pcell"), F.col("_dx"), F.col("_dy"), res).alias("_jc"),
         )
         .filter(F.col("_jc").isNotNull())
     )
@@ -334,7 +242,7 @@ def _certify_join(pts, prb_sub, grid, r1c, k, maybe_bc, w):
     # of the unordered sum forcing its own second sort of the candidate set
     wp = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     # certificate pre-filter BEFORE the exchange+sort: a certified probe's
-    # k-th distance is <= grid.bound_m(r1c) (>= k points inside radius r1c,
+    # k-th distance is <= _bound_m(r1c, res) (>= k points inside box r1c,
     # each within the bound), so any candidate beyond it can only ever rank
     # > k — dropping it changes neither the kept rows nor their ranks, and
     # every ring-<=r1c row (the _nclose evidence) is itself within the
@@ -342,7 +250,7 @@ def _certify_join(pts, prb_sub, grid, r1c, k, maybe_bc, w):
     # (~half the candidate rows on a uniform field) out of the shuffle and
     # the window sort (guide §2.3: shuffle fewer bytes). The +1cm slack
     # covers the 1e-3 m mercator rounding of both endpoints.
-    bound2 = (grid.bound_m(r1c) + 0.01) ** 2
+    bound2 = (_bound_m(r1c, res) + 0.01) ** 2
     cand = pts.join(
         maybe_bc(probe_cells), F.col("_ncell") == F.col("_jc"), "inner"
     ).select(
@@ -368,38 +276,33 @@ def _guarded_bruteforce(unresolved, pts, k, w, max_fallback_probes):
     """Exact brute-force pass for probes no ring could certify, with a
     LAZY size guard: the worst case is |unresolved| * N shuffle rows (a
     batch of ocean probes against 10^9 points would detonate), so the
-    probe side is limited to ``max_fallback_probes + 1`` rows and a
-    row_number + assert_true column raises a clear runtime error when the
-    cap is exceeded — no driver-side count action, no aggregation node
-    (the operator's zero-HashAggregate plan shape is preserved).
+    probe side is limited to ``max_fallback_probes + 1`` rows, gathered
+    into one list whose size an assert_true checks — a clear runtime error
+    when the cap is exceeded, no driver-side count action, no histogram
+    aggregation (the list is one keyless collect of at most cap + 1 rows).
     Under the cap the limit is a no-op, so results stay exact."""
     sel = unresolved.select("_pid", "_px", "_py")
     if max_fallback_probes is not None:
-        # one-partition window on purpose: it numbers at most
-        # max_fallback_probes + 1 rows, which the limit has already
-        # gathered into a single partition
-        wg = Window.partitionBy(F.lit(1)).orderBy("_pid")
-        sel = (
-            sel.limit(max_fallback_probes + 1)
-            .withColumn("_rn", F.row_number().over(wg))
-            .withColumn(
-                "_g",
-                F.assert_true(
-                    F.col("_rn") <= F.lit(max_fallback_probes),
-                    F.lit(
-                        "knn_join: more than "
-                        f"{max_fallback_probes} probes fell through to the "
-                        "brute-force fallback (each one cross-joins the "
-                        "ENTIRE point table). The point field is too sparse "
-                        "for the grid: pass a coarser res, or raise "
-                        "max_fallback_probes if the cross product is "
-                        "genuinely intended."
-                    ),
-                ),
-            )
-            .filter(F.col("_g").isNull())  # forces the assert; always true
-            .drop("_rn", "_g")
+        # a row_number over the limited rows would need a window with no
+        # partition spec (WindowExec warns on every run); the list's size
+        # is the same count without one
+        capped = sel.limit(max_fallback_probes + 1).agg(
+            F.collect_list(F.struct("_pid", "_px", "_py")).alias("_r")
         )
+        guard = F.assert_true(
+            F.size("_r") <= F.lit(max_fallback_probes),
+            F.lit(
+                "knn_join: more than "
+                f"{max_fallback_probes} probes fell through to the "
+                "brute-force fallback (each one cross-joins the "
+                "ENTIRE point table). The point field is too sparse "
+                "for the grid: pass a coarser res, or raise "
+                "max_fallback_probes if the cross product is "
+                "genuinely intended."
+            ),
+        )
+        # the filter forces the assert; it is always true
+        sel = capped.filter(guard.isNull()).select(F.inline("_r"))
     return (
         sel.crossJoin(pts.drop("_ncell"))
         .withColumn("dist2", _dist2())
@@ -420,7 +323,6 @@ def knn_join(
     res: int | None = None,
     broadcast_probes: bool = True,
     max_fallback_probes: int | None = 10_000,
-    grid: str = "square",
 ) -> DataFrame:
     """Exact k-nearest ``points`` for every probe row.
 
@@ -429,17 +331,6 @@ def knn_join(
     it from the observed cell occupancy (see ``_auto_res_info``) — pass it
     explicitly only to skip that probe scan.
 
-    ``grid``: ``"square"`` (Chebyshev boxes on the Morton grid) or
-    ``"hex"`` (isotropic rings on the hexagonal index, geo/hex.py) — the
-    hex ring scans 3r(r+1)+1 cells where the square box scans (2r+1)^2
-    for the same certified reach, and the hex metric bounds the re-rank
-    radius tighter (at certify ring 1: 37 cells vs 49, ~35% fewer
-    candidate rows after cell area is counted). Results are exact and
-    identical under either grid; only the candidate-generation geometry
-    changes. The density probe reuses the square-occupancy histogram for
-    both (a res-r hex cell has 0.866x the area of the res-r square cell, so
-    the same res errs slightly fine-side for hex — the direction the
-    probe's tie-break already prefers).
     ``broadcast_probes=False`` for probe sets too big to broadcast
     (e.g. self-kNN); the joins are then PINNED to shuffle_hash — both sides
     shuffle on the cell key and AQE only re-plans partition counts/skew,
@@ -464,23 +355,20 @@ def knn_join(
     The escalation and brute-force passes, when needed, are lazy and run in
     the caller's action.
     """
-    if grid not in ("square", "hex"):
-        raise ValueError(f"grid must be 'square' or 'hex', got {grid!r}")
     if res is None:
         res = _auto_res_info(points, lon, lat, k)[0]
-    g = _HexGrid(res) if grid == "hex" else _SquareGrid(res)
 
     pts = _with_merc(points, lon, lat, "_nx", "_ny").select(
         F.col(point_id).alias("_nid"),
         "_nx",
         "_ny",
-        g.encode(lon, lat).alias("_ncell"),
+        cell_encode(lon, lat, res).alias("_ncell"),
     )
     prb = _with_merc(probes, lon, lat, "_px", "_py").select(
         F.col(probe_id).alias("_pid"),
         "_px",
         "_py",
-        g.encode(lon, lat).alias("_pcell"),
+        cell_encode(lon, lat, res).alias("_pcell"),
     )
     if broadcast_probes:
         maybe_bc = F.broadcast
@@ -507,7 +395,7 @@ def knn_join(
     # every query stage at construct time (measured r08 — the "lazy" variant
     # cost the same 0.6-0.7s here), and an eager one lets the driver ask the
     # cheap question below.
-    topk = _certify_join(pts, prb, g, 1, k, maybe_bc, w).localCheckpoint(eager=True)
+    topk = _certify_join(pts, prb, res, 1, k, maybe_bc, w).localCheckpoint(eager=True)
     unresolved = prb.join(maybe_bc(topk.select("_pid")), "_pid", "left_anti")
     # driver short-circuit: when ring 1 certified EVERY probe (the
     # overwhelmingly common case at a sane res — the density probe targets
@@ -518,7 +406,7 @@ def knn_join(
     # materialization (~0.8s fixed latency at bench shape) and a second
     # full scan of the point side.
     if not unresolved.isEmpty():
-        esc = _certify_join(pts, unresolved, g, 4, k, maybe_bc, w)
+        esc = _certify_join(pts, unresolved, res, 4, k, maybe_bc, w)
         esc = esc.localCheckpoint(eager=False)
         residual = unresolved.join(maybe_bc(esc.select("_pid")), "_pid", "left_anti")
         fallback = _guarded_bruteforce(residual, pts, k, w, max_fallback_probes)

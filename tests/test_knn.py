@@ -264,15 +264,18 @@ def test_knn_ocean_probes_under_cap_stay_exact(spark):
         ]
 
 
-@pytest.mark.parametrize("res", [14, 20])
-def test_knn_hex_grid_matches_brute_force(spark, res):
-    """grid="hex" (round-6 verdict #6): identical exact results via
-    isotropic hex rings. The hex certificate r2 = ceil((sqrt3*r1+4)/1.5 - 1)
-    must stay exact, including probes that fall through to escalation or
-    brute force."""
-    n_pts, n_probes, k = 2000, 120, 5
-    nlon, nlat = _points(n_pts)
-    plon, plat = _points(n_probes, probe=True)
+@pytest.mark.parametrize("res", [14, 24])
+def test_knn_duplicated_locations_exact(spark, res):
+    """300 locations, each carrying 6 points (ids loc, loc+300, ...): equal
+    distances (0 for a probe on a location) must break by point id. res 14
+    is what the density probe picks for the 300 distinct locations; 24 is
+    what it picks for the 6x field, which counts rows, not locations."""
+    n_loc, times, k = 300, 6, 8
+    lon, lat = _points(n_loc)
+    nlon, nlat = np.tile(lon, times), np.tile(lat, times)
+    qlon, qlat = _points(30, probe=True)
+    plon = np.concatenate([lon[::10], qlon])
+    plat = np.concatenate([lat[::10], qlat])
     pts = spark.createDataFrame(
         [(int(i), float(a), float(b)) for i, (a, b) in enumerate(zip(nlon, nlat))],
         "point_id long, lon double, lat double",
@@ -281,46 +284,10 @@ def test_knn_hex_grid_matches_brute_force(spark, res):
         [(int(i), float(a), float(b)) for i, (a, b) in enumerate(zip(plon, plat))],
         "probe_id long, lon double, lat double",
     )
-    got = (
-        knn_join(prb, pts, k=k, res=res, grid="hex")
-        .orderBy("probe_id", "rank")
-        .toPandas()
-    )
+    got = knn_join(prb, pts, k=k, res=res).orderBy("probe_id", "rank").toPandas()
     want = brute_force_knn(plon, plat, nlon, nlat, k)
-    assert len(got) == n_probes * k
-    for pid in range(n_probes):
+    assert len(got) == len(plon) * k
+    for pid in range(len(plon)):
         rows = got[got["probe_id"] == pid]
         assert list(rows["point_id"]) == [j for j, _ in want[pid]], f"probe {pid}"
         assert np.allclose(rows["dist2"].to_numpy(), [d for _, d in want[pid]])
-
-
-def test_knn_hex_seam_probes_stay_exact(spark):
-    """Hex axial coords are linear in UNWRAPPED mercator x — the plane
-    never wraps, so seam probes are exact by construction (the square
-    grid needs an explicit NULL guard for this; hex cells across the seam
-    are simply ~WORLD apart in axial space)."""
-    rng = np.random.default_rng(3)
-    east = 179.999 - rng.uniform(0, 0.02, 40)
-    west = -179.999 + rng.uniform(0, 0.02, 40)
-    lats = rng.uniform(-0.02, 0.02, 80)
-    nlon = np.concatenate([east, west])
-    pts = spark.createDataFrame(
-        [(int(i), float(a), float(b)) for i, (a, b) in enumerate(zip(nlon, lats))],
-        "point_id long, lon double, lat double",
-    )
-    plon = np.array([179.9995, -179.9995, 179.99, -179.99])
-    plat = np.array([0.0, 0.0, 0.01, -0.01])
-    prb = spark.createDataFrame(
-        [(int(i), float(a), float(b)) for i, (a, b) in enumerate(zip(plon, plat))],
-        "probe_id long, lon double, lat double",
-    )
-    got = (
-        knn_join(prb, pts, k=5, res=20, grid="hex")
-        .orderBy("probe_id", "rank")
-        .toPandas()
-    )
-    want = brute_force_knn(plon, plat, nlon, lats, 5)
-    assert len(got) == 20
-    for pid in range(4):
-        got_ids = list(got[got["probe_id"] == pid]["point_id"])
-        assert got_ids == [j for j, _ in want[pid]], f"seam probe {pid}"

@@ -276,6 +276,34 @@ def test_knn_fixed_ring_skips_histogram_stages(spark):
     assert _n_nodes(plan, "HashAggregate") == 0, plan
 
 
+def test_knn_fallback_cap_has_no_unpartitioned_window(spark):
+    """The brute-force cap counts the fallback probes without a Window that
+    has no partition spec (WindowExec runs one of those in a single task
+    and warns on every run) and without a histogram aggregation."""
+    # 10 points scattered world-wide: no ring certifies, the fallback runs
+    i = F.col("id")
+    pts = spark.range(10).select(
+        i.alias("point_id"),
+        synth.lon_col(i * 101).alias("lon"),
+        synth.lat_col(i * 101).alias("lat"),
+    )
+    prb = spark.createDataFrame(
+        [(0, 0.0, 0.0), (1, 100.0, -40.0)], "probe_id long, lon double, lat double"
+    )
+    out = knn_join(prb, pts, k=3, res=14)
+    plan = _plan(out)
+    assert "BroadcastNestedLoopJoin" in plan or "CartesianProduct" in plan, plan
+    todo, windows = [out._jdf.queryExecution().sparkPlan()], []
+    while todo:
+        node = todo.pop()
+        if node.nodeName() == "Window":
+            windows.append(node.partitionSpec().isEmpty())
+        kids = node.children()
+        todo.extend(kids.apply(j) for j in range(kids.size()))
+    assert windows and not any(windows), plan
+    assert _n_nodes(plan, "HashAggregate") == 0, plan
+
+
 def _broadcast_subtrees(tree: str) -> list[str]:
     """Each BroadcastExchange node with its full subtree, cut by the tree
     markers' column position (deeper nodes indent further right)."""
