@@ -1611,10 +1611,10 @@ def _ranges_bounds(spark: SparkSession, lvl: int) -> DataFrame:
 
     x0, x1, y0, y1 = _RANGES_BBOX()
     return spark.range(1).select(
-        tile_x(F.lit(x0), lvl).alias("x0"),
-        tile_x(F.lit(x1), lvl).alias("x1"),
-        tile_y(F.lit(y1), lvl).alias("y0"),
-        tile_y(F.lit(y0), lvl).alias("y1"),
+        tile_x(f"{x0!r}D", lvl).alias("x0"),
+        tile_x(f"{x1!r}D", lvl).alias("x1"),
+        tile_y(f"{y1!r}D", lvl).alias("y0"),
+        tile_y(f"{y0!r}D", lvl).alias("y1"),
     )
 
 
@@ -2074,10 +2074,10 @@ def q_compact_cover(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("lat").alias("minlat"), F.max("lat").alias("maxlat"),
     )
     rng = b.select(
-        tile_x(F.col("minlon"), 14).alias("x0"),
-        tile_x(F.col("maxlon"), 14).alias("x1"),
-        tile_y(F.col("maxlat"), 14).alias("y0"),
-        tile_y(F.col("minlat"), 14).alias("y1"),
+        tile_x("minlon", 14).alias("x0"),
+        tile_x("maxlon", 14).alias("x1"),
+        tile_y("maxlat", 14).alias("y0"),
+        tile_y("minlat", 14).alias("y1"),
     )
     grid = rng.select(
         F.explode(F.sequence("x0", "x1")).alias("_x"), "y0", "y1"
@@ -2683,7 +2683,7 @@ def q_zonal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def gpx(c):
         tx = tile_x(c, 5)
-        fx = (c + F.lit(180.0)) / F.lit(360.0) * F.lit(32.0)
+        fx = (F.col(c) + F.lit(180.0)) / F.lit(360.0) * F.lit(32.0)
         return tx * 16 + F.least(
             F.greatest(F.floor((fx - tx.cast("double")) * F.lit(16.0)), F.lit(0)),
             F.lit(15),
@@ -2717,10 +2717,10 @@ def q_zonal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, rows, "parcel_id long, x0 double, x1 double, y0 double, y1 double"
     ).select(
         "parcel_id",
-        gpx(F.col("x0")).alias("gx0"),
-        gpx(F.col("x1")).alias("gx1"),
-        gpy(F.col("y1")).alias("gy0"),
-        gpy(F.col("y0")).alias("gy1"),
+        gpx("x0").alias("gx0"),
+        gpx("x1").alias("gx1"),
+        gpy("y1").alias("gy0"),
+        gpy("y0").alias("gy1"),
     )
     return zonal_stats(pix, zones, 16, zone_id="parcel_id").select(
         "parcel_id",
@@ -4438,9 +4438,10 @@ def q_od_tile_flows(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = ev.select(
         "user_id",
         F.unix_micros(F.col("ts").cast("timestamp")).alias("t"),
-        tile_x(synth.lon_col(k), 8).alias("_tx"),
-        tile_y(synth.lat_col(k), 8).alias("_ty"),
-    ).select("user_id", "t", quadkey("_tx", "_ty", 8).alias("cell"))
+        synth.lon_col(k).alias("lon"),
+        synth.lat_col(k).alias("lat"),
+    ).select("user_id", "t", tile_x("lon", 8).alias("_tx"), tile_y("lat", 8).alias("_ty"))
+    pts = pts.select("user_id", "t", quadkey("_tx", "_ty", 8).alias("cell"))
     return od_matrix(pts, entity="user_id", t="t", cell="cell")
 
 
@@ -4980,11 +4981,11 @@ def q_salted_tile_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     o = tables.load(spark, sf_dir, "orders")
     k = F.col("o_orderkey")
-    pts = o.select(
-        k.alias("key"),
-        tile_x(synth.lon_col(k), 14).alias("tile_x"),
-        tile_y(synth.lat_col(k), 14).alias("tile_y"),
-    ).withColumn("tile", F.struct("tile_x", "tile_y"))
+    pts = (
+        o.select(k.alias("key"), synth.lon_col(k).alias("lon"), synth.lat_col(k).alias("lat"))
+        .select("key", tile_x("lon", 14).alias("tile_x"), tile_y("lat", 14).alias("tile_y"))
+        .withColumn("tile", F.struct("tile_x", "tile_y"))
+    )
     out = salted_count(pts, "tile", "key", n_salts=16)
     return out.select(
         F.col("tile.tile_x").alias("tile_x"),

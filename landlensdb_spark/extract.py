@@ -39,7 +39,7 @@ def _dms_to_decimal(g: pd.DataFrame, neg_ref: str) -> pd.Series:
     d = pd.to_numeric(g[0], errors="coerce")
     m = pd.to_numeric(g[1], errors="coerce")
     num = pd.to_numeric(g[2], errors="coerce")
-    den = pd.to_numeric(g[3], errors="coerce")
+    den = pd.to_numeric(g[3], errors="coerce").replace(0, np.nan)  # n/0 is NaN
     dec = d + m / 60.0 + (num / den) / 3600.0
     sign = pd.Series(
         np.where(g[4].fillna("").eq(neg_ref), -1.0, 1.0), index=g.index
@@ -65,8 +65,8 @@ def extract_geotag_pdf(html: pd.Series) -> pd.DataFrame:
     has_dms = dms_lat[0].notna()
     if has_dms.any():
         dms_lon = s.str.extract(_DMS_LON_RE)
-        lat = lat.where(~has_dms, _dms_to_decimal(dms_lat, "S"))
-        lon = lon.where(~has_dms, _dms_to_decimal(dms_lon, "W"))
+        lat = _dms_to_decimal(dms_lat, "S").fillna(lat)
+        lon = _dms_to_decimal(dms_lon, "W").fillna(lon)
 
     return pd.DataFrame(
         {"lat": lat.astype("float64"), "lon": lon.astype("float64"), "text": text}
@@ -122,9 +122,9 @@ def extract_geotag_pa(s, with_text: bool = True) -> tuple:
         d, m = _num(sa, "d"), _num(sa, "m")
         num, den = _num(sa, "n"), _num(sa, "q")
         ref = f(sa, "r").to_numpy(zero_copy_only=False)
-        # a 0/0 seconds fraction is NaN: the per-coordinate fallback below
-        with np.errstate(invalid="ignore"):
-            dec = d + m / 60.0 + (num / den) / 3600.0
+        # a seconds fraction over 0 (0/0 or n/0) is NaN, never inf: the
+        # per-coordinate fallback below
+        dec = d + m / 60.0 + (num / np.where(den == 0, np.nan, den)) / 3600.0
         return np.round(np.where(ref == neg_ref, -dec, dec), 6)
 
     dms_lat, dms_lon = _dms(dlat, "S"), _dms(dlon, "W")

@@ -14,7 +14,9 @@ can swap in):
 
 - ``cell_encode(lon, lat, res)`` — "H3 slot": the Web-Mercator slippy
   grid at zoom=res, packed ``(res << 58) | (x << 29) | y``. Pure Spark
-  column math (no UDF): stays inside whole-stage codegen. ``CELL_RES = 15``
+  column math (no UDF): stays inside whole-stage codegen. It and the
+  other cell-id helpers are SQL text in one ``F.expr`` (see geo.tiles):
+  their arguments are column names or SQL text. ``CELL_RES = 15``
   (~2.4 km at equator) approximates H3 res-7..9 cell sizes; override per op.
 - ``hilbert_cell(lon, lat, level)`` — "S2 slot": Hilbert-curve ordering of the
   same grid at ``level`` (default 13), giving S2-style 1-D locality so tables
@@ -33,7 +35,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
-from landlensdb_spark.geo.tiles import np_tile_xy, tile_x, tile_y
+from landlensdb_spark.geo.tiles import _tile_x_sql, _tile_y_sql, np_tile_xy
 
 #: default cell resolution (slippy zoom) for join keys — ~2.4 km at equator.
 CELL_RES = 15
@@ -44,52 +46,54 @@ _RES_SHIFT = 58
 _X_SHIFT = 29
 
 
-def cell_encode(lon: Column | str, lat: Column | str, res: int = CELL_RES) -> Column:
-    """Point -> sortable long cell id. Pure column math (codegen, no UDF)."""
+def _cell_sql(lon: str, lat: str, res: int) -> str:
     if res >= (1 << 6) or res > 28:
         raise ValueError(f"res must be <= 28, got {res}")
-    x = tile_x(lon, res)
-    y = tile_y(lat, res)
     return (
-        F.lit(res).cast("long") * F.lit(1 << _RES_SHIFT)
-        + F.shiftleft(x, _X_SHIFT)
-        + y
-    ).cast("long")
+        f"cast(cast({res} as bigint) * {1 << _RES_SHIFT}"
+        f" + shiftleft({_tile_x_sql(lon, res)}, {_X_SHIFT})"
+        f" + {_tile_y_sql(lat, res)} as bigint)"
+    )
 
 
-def cell_x(cell: Column | str) -> Column:
-    cell = F.col(cell) if isinstance(cell, str) else cell
-    return F.shiftright(cell, _X_SHIFT) % F.lit(1 << _X_SHIFT)
+def _cell_x_sql(cell: str) -> str:
+    return f"shiftright({cell}, {_X_SHIFT}) % {1 << _X_SHIFT}"
 
 
-def cell_y(cell: Column | str) -> Column:
-    cell = F.col(cell) if isinstance(cell, str) else cell
-    return cell % F.lit(1 << _X_SHIFT)
+def _cell_y_sql(cell: str) -> str:
+    return f"({cell}) % {1 << _X_SHIFT}"
 
 
-def k_ring(cell: Column | str, k: int, res: int = CELL_RES) -> Column:
+def cell_encode(lon: str, lat: str, res: int = CELL_RES) -> Column:
+    """Point -> sortable long cell id. Pure column math (codegen, no UDF)."""
+    return F.expr(_cell_sql(lon, lat, res))
+
+
+def cell_x(cell: str) -> Column:
+    return F.expr(_cell_x_sql(cell))
+
+
+def cell_y(cell: str) -> Column:
+    return F.expr(_cell_y_sql(cell))
+
+
+def k_ring(cell: str, k: int, res: int = CELL_RES) -> Column:
     """Array of the (2k+1)^2 cells within Chebyshev distance k.
 
     Column-math expansion of the reference's nearest-index probe: x wraps at
     the antimeridian, y clamps at the poles (out-of-range y offsets are
     dropped via array_compact-style filtering).
     """
-    cell = F.col(cell) if isinstance(cell, str) else cell
     n = 1 << res
-    x, y = cell_x(cell), cell_y(cell)
-    base = F.lit(res).cast("long") * F.lit(1 << _RES_SHIFT)
-    neighbors = []
-    for dx in range(-k, k + 1):
-        for dy in range(-k, k + 1):
-            nx = (x + F.lit(dx) + F.lit(n)) % F.lit(n)
-            ny = y + F.lit(dy)
-            neighbors.append(
-                F.when(
-                    (ny >= 0) & (ny < n),
-                    base + F.shiftleft(nx, _X_SHIFT) + ny,
-                )
-            )
-    return F.array_compact(F.array(*neighbors))
+    x, y = _cell_x_sql(cell), _cell_y_sql(cell)
+    neighbors = [
+        f"CASE WHEN {y} + {dy} >= 0 AND {y} + {dy} < {n}"
+        f" THEN cast({res} as bigint) * {1 << _RES_SHIFT}"
+        f" + shiftleft(({x} + {dx} + {n}) % {n}, {_X_SHIFT}) + {y} + {dy} END"
+        for dx in range(-k, k + 1)
+        for dy in range(-k, k + 1)
+    ]
+    return F.expr(f"array_compact(array({', '.join(neighbors)}))")
 
 
 def np_cell_encode(lon: np.ndarray, lat: np.ndarray, res: int = CELL_RES) -> np.ndarray:
@@ -188,35 +192,25 @@ def np_bbox_cover(
 # ---------------------------------------------------------------------------
 
 
-def cell_parent(cell: Column | str, steps: int = 1) -> Column:
+def cell_parent(cell: str, steps: int = 1) -> Column:
     """Ancestor cell ``steps`` resolutions coarser. Pure column math."""
-    cell = F.col(cell) if isinstance(cell, str) else cell
-    res = F.shiftright(cell, _RES_SHIFT)
-    x = F.shiftright(cell_x(cell), steps)
-    y = F.shiftright(cell_y(cell), steps)
-    return (
-        (res - F.lit(steps)) * F.lit(1 << _RES_SHIFT)
-        + F.shiftleft(x, _X_SHIFT)
-        + y
-    ).cast("long")
+    return F.expr(
+        f"cast((shiftright({cell}, {_RES_SHIFT}) - {steps}) * {1 << _RES_SHIFT}"
+        f" + shiftleft(shiftright({_cell_x_sql(cell)}, {steps}), {_X_SHIFT})"
+        f" + shiftright({_cell_y_sql(cell)}, {steps}) as bigint)"
+    )
 
 
-def cell_children(cell: Column | str) -> Column:
+def cell_children(cell: str) -> Column:
     """Array of the 4 direct children (one resolution finer)."""
-    cell = F.col(cell) if isinstance(cell, str) else cell
-    res = F.shiftright(cell, _RES_SHIFT)
-    x, y = cell_x(cell), cell_y(cell)
-    base = (res + 1) * F.lit(1 << _RES_SHIFT)
-    out = []
-    for dx in (0, 1):
-        for dy in (0, 1):
-            out.append(
-                base
-                + F.shiftleft(F.shiftleft(x, 1) + F.lit(dx), _X_SHIFT)
-                + F.shiftleft(y, 1)
-                + F.lit(dy)
-            )
-    return F.array(*out)
+    base = f"(shiftright({cell}, {_RES_SHIFT}) + 1) * {1 << _RES_SHIFT}"
+    x, y = f"shiftleft({_cell_x_sql(cell)}, 1)", f"shiftleft({_cell_y_sql(cell)}, 1)"
+    kids = [
+        f"{base} + shiftleft({x} + {dx}, {_X_SHIFT}) + {y} + {dy}"
+        for dx in (0, 1)
+        for dy in (0, 1)
+    ]
+    return F.expr(f"array({', '.join(kids)})")
 
 
 def uncompact_cells(
@@ -228,7 +222,7 @@ def uncompact_cells(
     distributed, no driver loop. Cells already at ``res`` pass through;
     cells FINER than ``res`` raise (use cell_parent to coarsen first)."""
     d = F.lit(res) - F.shiftright(F.col(cell), _RES_SHIFT)
-    x, y = cell_x(F.col(cell)), cell_y(F.col(cell))
+    x, y = cell_x(cell), cell_y(cell)
     out = (
         df.withColumn(
             "_uc_guard",
@@ -349,8 +343,8 @@ def compact_cells(
     keyed = (
         src.withColumn("_res", F.shiftright(F.col(cell), _RES_SHIFT))
         .withColumn("_d", (F.col("_res") - F.lit(pr)).cast("int"))
-        .withColumn("_px", cell_x(F.col(cell)))
-        .withColumn("_py", cell_y(F.col(cell)))
+        .withColumn("_px", cell_x(cell))
+        .withColumn("_py", cell_y(cell))
         .withColumn(
             gcol,
             F.when(

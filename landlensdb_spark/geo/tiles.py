@@ -12,6 +12,10 @@ and the inverse ``_tile_to_bbox`` (cloud.py:889-911):
     lat  = degrees(atan(sinh(pi * (1 - 2 * y / n))))
 
 Everything here is JVM-side column math inside whole-stage codegen — no UDF.
+``tile_x``, ``tile_y``, ``tile_bounds`` and ``quadkey`` are SQL text
+(``F.expr``, parsed once on the JVM, not one py4j call per Column node);
+their arguments are column names or SQL text. Double constants carry the
+``D`` suffix: a bare ``180.0`` parses as DECIMAL.
 The quadkey (bit-interleave of x,y) gives a single sortable long per tile so
 tile tables can be range-partitioned / sorted for locality.
 """
@@ -28,38 +32,37 @@ from pyspark.sql import functions as F
 ZOOM_LEVEL = 14
 
 
-def _c(col: Column | str) -> Column:
-    return F.col(col) if isinstance(col, str) else col
+def _tile_x_sql(lon: str, zoom: int) -> str:
+    n = 2**zoom
+    raw = f"floor((({lon}) + 180.0D) / 360.0D * {float(n)!r}D)"
+    return f"cast(least(greatest({raw}, 0), {n - 1}) as bigint)"
 
 
-def tile_x(lon: Column | str, zoom: int = ZOOM_LEVEL) -> Column:
+def _tile_y_sql(lat: str, zoom: int) -> str:
+    n = 2**zoom
+    raw = f"floor((1.0D - asinh(tan(radians({lat}))) / {math.pi!r}D) / 2.0D * {float(n)!r}D)"
+    return f"cast(least(greatest({raw}, 0), {n - 1}) as bigint)"
+
+
+def tile_x(lon: str, zoom: int = ZOOM_LEVEL) -> Column:
     """Slippy tile x — exact reference formula (cloud.py:869), clamped to [0, n-1]."""
-    n = 2 ** zoom
-    raw = F.floor((_c(lon) + F.lit(180.0)) / F.lit(360.0) * F.lit(float(n)))
-    return F.least(F.greatest(raw, F.lit(0)), F.lit(n - 1)).cast("long")
+    return F.expr(_tile_x_sql(lon, zoom))
 
 
-def tile_y(lat: Column | str, zoom: int = ZOOM_LEVEL) -> Column:
+def tile_y(lat: str, zoom: int = ZOOM_LEVEL) -> Column:
     """Slippy tile y — exact reference formula (cloud.py:870-873), clamped."""
-    n = 2 ** zoom
-    lat_r = F.radians(_c(lat))
-    raw = F.floor(
-        (F.lit(1.0) - F.asinh(F.tan(lat_r)) / F.lit(math.pi)) / F.lit(2.0) * F.lit(float(n))
-    )
-    return F.least(F.greatest(raw, F.lit(0)), F.lit(n - 1)).cast("long")
+    return F.expr(_tile_y_sql(lat, zoom))
 
 
-def tile_bounds(x: Column | str, y: Column | str, zoom: int = ZOOM_LEVEL) -> list[Column]:
+def tile_bounds(x: str, y: str, zoom: int = ZOOM_LEVEL) -> list[Column]:
     """Inverse: tile -> (west, south, east, north) degrees (cloud.py:889-911)."""
-    n = float(2 ** zoom)
-    x, y = _c(x).cast("double"), _c(y).cast("double")
-    west = x / F.lit(n) * F.lit(360.0) - F.lit(180.0)
-    east = (x + F.lit(1.0)) / F.lit(n) * F.lit(360.0) - F.lit(180.0)
-    north = F.degrees(F.atan(F.sinh(F.lit(math.pi) * (F.lit(1.0) - F.lit(2.0) * y / F.lit(n)))))
-    south = F.degrees(
-        F.atan(F.sinh(F.lit(math.pi) * (F.lit(1.0) - F.lit(2.0) * (y + F.lit(1.0)) / F.lit(n))))
+    n = f"{float(2**zoom)!r}D"
+    x, y = f"cast({x} as double)", f"cast({y} as double)"
+    lon = lambda v: F.expr(f"{v} / {n} * 360.0D - 180.0D")  # noqa: E731
+    lat = lambda v: F.expr(  # noqa: E731
+        f"degrees(atan(sinh({math.pi!r}D * (1.0D - 2.0D * {v} / {n}))))"
     )
-    return [west, south, east, north]
+    return [lon(x), lat(f"({y} + 1.0D)"), lon(f"({x} + 1.0D)"), lat(y)]
 
 
 def quadkey(x: str, y: str, zoom: int = ZOOM_LEVEL) -> Column:

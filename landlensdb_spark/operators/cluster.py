@@ -43,8 +43,8 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from landlensdb_spark.geo.cells import cell_encode
-from landlensdb_spark.operators.knn import WORLD, _cell_shift, _with_merc
+from landlensdb_spark.geo.cells import _cell_sql
+from landlensdb_spark.operators.knn import WORLD, _cell_shift, _merc_sql
 
 
 def neighbor_pairs(
@@ -57,16 +57,15 @@ def neighbor_pairs(
     """(id_a, id_b, dist2) for every unordered pair within ``eps_m``
     planar meters (id_a < id_b)."""
     res = int(math.floor(math.log2(WORLD / eps_m)))  # cell side >= eps
-    pts = _with_merc(points, lon, lat, "_x", "_y").select(
-        F.col(point_id).alias("_id"),
-        "_x",
-        "_y",
-        cell_encode(lon, lat, res).alias("_cell"),
+    pts = points.selectExpr(
+        f"{point_id} AS _id",
+        *_merc_sql(lon, lat, "_x", "_y"),
+        f"{_cell_sql(lon, lat, res)} AS _cell",
     )
     left = (
         pts.withColumn("_dx", F.explode(F.sequence(F.lit(-1), F.lit(1))))
         .withColumn("_dy", F.explode(F.sequence(F.lit(-1), F.lit(1))))
-        .withColumn("_jc", _cell_shift(F.col("_cell"), F.col("_dx"), F.col("_dy"), res))
+        .withColumn("_jc", F.expr(_cell_shift("_cell", "_dx", "_dy", res)))
         .filter(F.col("_jc").isNotNull())
         .select(
             F.col("_id").alias("id_a"),

@@ -10,9 +10,10 @@ dominates at small-probe scale and *inverts* scaling: more cores = more tiny
 tasks per round. This version picks the grid so that a constant ring
 certifies nearly every probe, and certifies inside the candidate join:
 
-1. ``res`` comes from an HLL density probe over the point side (one job,
-   memoized per table) unless the caller passes it; both sides then get a
-   cell id on the square Morton grid
+1. ``res`` comes from an HLL density probe over the point side (one
+   single-stage job: the count and the sketches are observed on a noop
+   write; memoized per table) unless the caller passes it; both sides then
+   get a cell id on the square Morton grid
    (:func:`landlensdb_spark.geo.cells.cell_encode`).
 2. **Candidate join at ring 1**: every probe explodes the constant box
    ``r2 = _r2_int(1)`` tagged with each cell's ring index,
@@ -47,24 +48,33 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from landlensdb_spark.geo.cells import _RES_SHIFT, _X_SHIFT, cell_encode, cell_x, cell_y
+from landlensdb_spark.geo.cells import _RES_SHIFT, _X_SHIFT, _cell_sql, _cell_x_sql, _cell_y_sql
 from landlensdb_spark.geo.mercator import R
+from landlensdb_spark.geo.tiles import _tile_x_sql, _tile_y_sql
 
 WORLD = 2.0 * math.pi * R
 
+# every projection, filter and window below is SQL text: one selectExpr or
+# F.expr parses on the JVM what would otherwise be one py4j round trip per
+# Column node (double constants carry the D suffix: a bare 2.0 is DECIMAL)
 
-def _with_merc(df: DataFrame, lon: str, lat: str, px: str, py: str) -> DataFrame:
-    mx = F.round(F.radians(F.col(lon)) * F.lit(R), 3)
-    my = F.round(
-        F.lit(R) * F.log(F.tan(F.lit(math.pi / 4.0) + F.radians(F.col(lat)) / 2)), 3
-    )
-    return df.withColumn(px, mx).withColumn(py, my)
+#: the top-k order: distance, then neighbor id (deterministic tie-break)
+_W = "PARTITION BY _pid ORDER BY dist2 ASC, _nid ASC"
+_DIST2 = "(_px - _nx) * (_px - _nx) + (_py - _ny) * (_py - _ny)"
 
 
-def _cell_shift(cell: Column, dx: Column, dy: Column, res: int) -> Column:
+def _merc_sql(lon: str, lat: str, px: str, py: str) -> list[str]:
+    """EPSG:3857 meters of ``lon``/``lat``, rounded to 1e-3 m, as ``px``/``py``."""
+    return [
+        f"round(radians({lon}) * {R!r}D, 3) AS {px}",
+        f"round({R!r}D * ln(tan({math.pi / 4.0!r}D + radians({lat}) / 2)), 3) AS {py}",
+    ]
+
+
+def _cell_shift(cell: str, dx: str, dy: str, res: int) -> str:
     """Neighbor cell id at offset (dx, dy); out-of-range x OR y -> NULL.
 
     x deliberately does NOT wrap at the antimeridian: distances here are
@@ -76,12 +86,12 @@ def _cell_shift(cell: Column, dx: Column, dy: Column, res: int) -> Column:
     seam boxes simply see fewer cells, and probes that cannot certify fall
     through to the exact brute-force pass."""
     n = 1 << res
-    nx = cell_x(cell) + dx
-    ny = cell_y(cell) + dy
-    base = F.lit(res).cast("long") * F.lit(1 << _RES_SHIFT)
-    return F.when(
-        (nx >= 0) & (nx < n) & (ny >= 0) & (ny < n),
-        base + F.shiftleft(nx, _X_SHIFT) + ny,
+    nx = f"({_cell_x_sql(cell)} + {dx})"
+    ny = f"({_cell_y_sql(cell)} + {dy})"
+    return (
+        f"CASE WHEN {nx} >= 0 AND {nx} < {n} AND {ny} >= 0 AND {ny} < {n}"
+        f" THEN cast({res} as bigint) * {1 << _RES_SHIFT}"
+        f" + shiftleft({nx}, {_X_SHIFT}) + {ny} END"
     )
 
 
@@ -120,8 +130,6 @@ def _auto_res_info(points: DataFrame, lon: str, lat: str, k: int) -> tuple[int, 
     sits on. A too-coarse pick is the real failure mode (res 16 there =
     ~1300 pts/cell = ~60M window rows), so ties err fine-side.
     """
-    from landlensdb_spark.geo.tiles import tile_x, tile_y
-
     # memoized per (point-plan, data snapshot, columns, k): repeated kNN
     # calls against the same point table (the production shape — one index,
     # many probe batches) pay the density probe once, like snap's
@@ -156,23 +164,29 @@ def _auto_res_info(points: DataFrame, lon: str, lat: str, k: int) -> tuple[int, 
     # 2.0M candidates where res 19 at ~5 pts/cell certifies identically
     # with ~0.5M) — nine extra shift-derived HLL sketches in the same pass
     # are far cheaper than 4x the candidate join.
-    xy = points.select(tile_x(lon, base).alias("_x"), tile_y(lat, base).alias("_y"))
-    # this aggregate is wider than spark.sql.debug.maxToStringFields (25):
-    # each rsd-0.15 sketch buffers 7 words, 134 buffer attributes in all,
-    # so Spark logs "Truncated the string representation of a plan" when it
-    # renders the plan. The width is the 19 sketches themselves, not a
-    # carried column; a log census allow-lists the line for this reason.
-    row = xy.agg(
-        F.count(F.lit(1)).alias("_n"),
+    xy = points.selectExpr(
+        f"{_tile_x_sql(lon, base)} AS _x", f"{_tile_y_sql(lat, base)} AS _y"
+    )
+    # the count and the sketches ride an observe on a noop write: one
+    # single-stage job, where agg(...).first() ran a map job and a result
+    # job under AQE. The sketches' 134 buffer attributes (7 words per
+    # rsd-0.15 sketch) now live in the observation's accumulator, not in a
+    # HashAggregate's rendered output: the CollectMetrics node lists its 20
+    # metrics, under spark.sql.debug.maxToStringFields (25), so Spark no
+    # longer logs "Truncated the string representation of a plan" here.
+    obs = Observation()
+    xy.observe(
+        obs,
+        F.expr("count(1) AS _n"),
         *[
-            F.approx_count_distinct(
-                F.shiftleft(F.shiftright(F.col("_x"), base - r), 29)
-                + F.shiftright(F.col("_y"), base - r),
-                0.15,
-            ).alias(f"_c{r}")
+            F.expr(
+                f"approx_count_distinct(shiftleft(shiftright(_x, {base - r}), 29)"
+                f" + shiftright(_y, {base - r}), 0.15D) AS _c{r}"
+            )
             for r in cands
         ],
-    ).first()
+    ).write.format("noop").mode("overwrite").save()
+    row = obs.get
     n = row["_n"]
     if not n:
         return (12, False)
@@ -209,13 +223,7 @@ def clear_res_cache() -> None:
     _RES_CACHE.clear()
 
 
-def _dist2() -> Column:
-    return (F.col("_px") - F.col("_nx")) * (F.col("_px") - F.col("_nx")) + (
-        F.col("_py") - F.col("_ny")
-    ) * (F.col("_py") - F.col("_ny"))
-
-
-def _certify_join(pts, prb_sub, res, r1c, k, maybe_bc, w):
+def _certify_join(pts, prb_sub, res, r1c, k, maybe_bc):
     """Certify-in-join pass at constant box radius ``r1c``: candidates
     come from box ``r2c = _r2_int(r1c)``; a probe whose box ``r1c`` holds
     >= k points is provably exact (certificate geometry on :func:`_r2_int`).
@@ -223,24 +231,19 @@ def _certify_join(pts, prb_sub, res, r1c, k, maybe_bc, w):
     candidate join's one shuffle. Returns the certified (_pid, _nid, dist2,
     rank) rows only."""
     r2c = _r2_int(r1c)
-    box = F.sequence(F.lit(-r2c), F.lit(r2c))
+    box = f"explode(sequence({-r2c}, {r2c}))"
     probe_cells = (
-        prb_sub.select("_pid", "_px", "_py", "_pcell", F.explode(box).alias("_dx"))
-        .select("_pid", "_px", "_py", "_pcell", "_dx", F.explode(box).alias("_dy"))
-        .select(
+        prb_sub.selectExpr("_pid", "_px", "_py", "_pcell", f"{box} AS _dx")
+        .selectExpr("_pid", "_px", "_py", "_pcell", "_dx", f"{box} AS _dy")
+        .selectExpr(
             "_pid",
             "_px",
             "_py",
-            F.greatest(F.abs("_dx"), F.abs("_dy")).alias("_ring"),
-            _cell_shift(F.col("_pcell"), F.col("_dx"), F.col("_dy"), res).alias("_jc"),
+            "greatest(abs(_dx), abs(_dy)) AS _ring",
+            f"{_cell_shift('_pcell', '_dx', '_dy', res)} AS _jc",
         )
-        .filter(F.col("_jc").isNotNull())
+        .filter("_jc IS NOT NULL")
     )
-    # the within-r1c count is order-independent, so it can ride the SAME
-    # (partition, order) spec as the top-k row_number with an explicit
-    # whole-partition frame — one Sort feeds both Window operators instead
-    # of the unordered sum forcing its own second sort of the candidate set
-    wp = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     # certificate pre-filter BEFORE the exchange+sort: a certified probe's
     # k-th distance is <= _bound_m(r1c, res) (>= k points inside box r1c,
     # each within the bound), so any candidate beyond it can only ever rank
@@ -251,28 +254,28 @@ def _certify_join(pts, prb_sub, res, r1c, k, maybe_bc, w):
     # the window sort (guide §2.3: shuffle fewer bytes). The +1cm slack
     # covers the 1e-3 m mercator rounding of both endpoints.
     bound2 = (_bound_m(r1c, res) + 0.01) ** 2
-    cand = pts.join(
-        maybe_bc(probe_cells), F.col("_ncell") == F.col("_jc"), "inner"
-    ).select(
-        "_pid",
-        "_nid",
-        "_ring",
-        _dist2().alias("dist2"),
-    ).filter(
-        F.col("dist2") <= F.lit(bound2)
-    ).select(
-        "_pid",
-        "_nid",
-        "dist2",
-        F.sum(F.when(F.col("_ring") <= r1c, 1).otherwise(0)).over(wp).alias("_nclose"),
-        F.row_number().over(w).alias("rank"),
-    )
-    return cand.filter((F.col("_nclose") >= k) & (F.col("rank") <= k)).select(
-        "_pid", "_nid", "dist2", "rank"
+    # the within-r1c count is order-independent, so it can ride the SAME
+    # (partition, order) spec as the top-k row_number with an explicit
+    # whole-partition frame — one Sort feeds both Window operators instead
+    # of the unordered sum forcing its own second sort of the candidate set
+    return (
+        pts.join(maybe_bc(probe_cells), F.expr("_ncell = _jc"), "inner")
+        .selectExpr("_pid", "_nid", "_ring", f"{_DIST2} AS dist2")
+        .filter(f"dist2 <= {bound2!r}D")
+        .selectExpr(
+            "_pid",
+            "_nid",
+            "dist2",
+            f"sum(CASE WHEN _ring <= {r1c} THEN 1 ELSE 0 END) OVER ({_W}"
+            " ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS _nclose",
+            f"row_number() OVER ({_W}) AS rank",
+        )
+        .filter(f"_nclose >= {k} AND rank <= {k}")
+        .select("_pid", "_nid", "dist2", "rank")
     )
 
 
-def _guarded_bruteforce(unresolved, pts, k, w, max_fallback_probes):
+def _guarded_bruteforce(unresolved, pts, k, max_fallback_probes):
     """Exact brute-force pass for probes no ring could certify, with a
     LAZY size guard: the worst case is |unresolved| * N shuffle rows (a
     batch of ocean probes against 10^9 points would detonate), so the
@@ -287,28 +290,22 @@ def _guarded_bruteforce(unresolved, pts, k, w, max_fallback_probes):
         # partition spec (WindowExec warns on every run); the list's size
         # is the same count without one
         capped = sel.limit(max_fallback_probes + 1).agg(
-            F.collect_list(F.struct("_pid", "_px", "_py")).alias("_r")
+            F.expr("collect_list(struct(_pid, _px, _py)) AS _r")
         )
-        guard = F.assert_true(
-            F.size("_r") <= F.lit(max_fallback_probes),
-            F.lit(
-                "knn_join: more than "
-                f"{max_fallback_probes} probes fell through to the "
-                "brute-force fallback (each one cross-joins the "
-                "ENTIRE point table). The point field is too sparse "
-                "for the grid: pass a coarser res, or raise "
-                "max_fallback_probes if the cross product is "
-                "genuinely intended."
-            ),
+        guard = (
+            f"assert_true(size(_r) <= {max_fallback_probes}, 'knn_join: more than "
+            f"{max_fallback_probes} probes fell through to the brute-force "
+            "fallback (each one cross-joins the ENTIRE point table). The point "
+            "field is too sparse for the grid: pass a coarser res, or raise "
+            "max_fallback_probes if the cross product is genuinely intended.')"
         )
         # the filter forces the assert; it is always true
-        sel = capped.filter(guard.isNull()).select(F.inline("_r"))
+        sel = capped.filter(f"{guard} IS NULL").selectExpr("inline(_r)")
     return (
         sel.crossJoin(pts.drop("_ncell"))
-        .withColumn("dist2", _dist2())
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("_pid", "_nid", "dist2", "rank")
+        .selectExpr("_pid", "_nid", f"{_DIST2} AS dist2")
+        .selectExpr("*", f"row_number() OVER ({_W}) AS rank")
+        .filter(f"rank <= {k}")
     )
 
 
@@ -346,29 +343,32 @@ def knn_join(
 
     Spark work done here, before the caller's action:
 
-    - the density-probe job, unless ``res`` is given or memoized for this
+    - the density probe, one single-stage job (a noop write observing the
+      count and the sketches), unless ``res`` is given or memoized for this
       point table;
     - the certified top-k of the ring-1 pass, materialized by an eager
       ``localCheckpoint`` (the candidate join, its exchange and window);
     - one ``isEmpty()`` job asking whether any probe is left uncertified.
 
     The escalation and brute-force passes, when needed, are lazy and run in
-    the caller's action.
+    the caller's action. With ``broadcast_probes=False``, a fresh density
+    probe and every probe certified at ring 1, that is 8 jobs. Every
+    projection is SQL text, so building the plan costs a few hundred py4j
+    round trips; ``lon``, ``lat``, ``point_id`` and ``probe_id`` are column
+    names.
     """
     if res is None:
         res = _auto_res_info(points, lon, lat, k)[0]
 
-    pts = _with_merc(points, lon, lat, "_nx", "_ny").select(
-        F.col(point_id).alias("_nid"),
-        "_nx",
-        "_ny",
-        cell_encode(lon, lat, res).alias("_ncell"),
+    pts = points.selectExpr(
+        f"{point_id} AS _nid",
+        *_merc_sql(lon, lat, "_nx", "_ny"),
+        f"{_cell_sql(lon, lat, res)} AS _ncell",
     )
-    prb = _with_merc(probes, lon, lat, "_px", "_py").select(
-        F.col(probe_id).alias("_pid"),
-        "_px",
-        "_py",
-        cell_encode(lon, lat, res).alias("_pcell"),
+    prb = probes.selectExpr(
+        f"{probe_id} AS _pid",
+        *_merc_sql(lon, lat, "_px", "_py"),
+        f"{_cell_sql(lon, lat, res)} AS _pcell",
     )
     if broadcast_probes:
         maybe_bc = F.broadcast
@@ -385,7 +385,6 @@ def knn_join(
         # semantics without sorting either side.
         def maybe_bc(df: DataFrame) -> DataFrame:
             return df.hint("shuffle_hash")
-    w = Window.partitionBy("_pid").orderBy(F.col("dist2").asc(), F.col("_nid").asc())
 
     # topk feeds BOTH the result union and the unresolved anti-join's
     # broadcast build; without a materialization point the candidate join +
@@ -395,7 +394,7 @@ def knn_join(
     # every query stage at construct time (measured r08 — the "lazy" variant
     # cost the same 0.6-0.7s here), and an eager one lets the driver ask the
     # cheap question below.
-    topk = _certify_join(pts, prb, res, 1, k, maybe_bc, w).localCheckpoint(eager=True)
+    topk = _certify_join(pts, prb, res, 1, k, maybe_bc).localCheckpoint(eager=True)
     unresolved = prb.join(maybe_bc(topk.select("_pid")), "_pid", "left_anti")
     # driver short-circuit: when ring 1 certified EVERY probe (the
     # overwhelmingly common case at a sane res — the density probe targets
@@ -406,14 +405,11 @@ def knn_join(
     # materialization (~0.8s fixed latency at bench shape) and a second
     # full scan of the point side.
     if not unresolved.isEmpty():
-        esc = _certify_join(pts, unresolved, res, 4, k, maybe_bc, w)
+        esc = _certify_join(pts, unresolved, res, 4, k, maybe_bc)
         esc = esc.localCheckpoint(eager=False)
         residual = unresolved.join(maybe_bc(esc.select("_pid")), "_pid", "left_anti")
-        fallback = _guarded_bruteforce(residual, pts, k, w, max_fallback_probes)
+        fallback = _guarded_bruteforce(residual, pts, k, max_fallback_probes)
         topk = topk.unionByName(esc).unionByName(fallback)
-    return topk.select(
-        F.col("_pid").alias(probe_id),
-        F.col("_nid").alias(point_id),
-        "dist2",
-        "rank",
+    return topk.selectExpr(
+        f"_pid AS `{probe_id}`", f"_nid AS `{point_id}`", "dist2", "rank"
     )

@@ -7,7 +7,6 @@ from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from test_pipeline_ops import _jobs_run
 
 from landlensdb_spark import broadcast_dim as bd
 from landlensdb_spark import synth, tables, tz
@@ -42,15 +41,14 @@ def test_eviction_destroys_the_broadcast(spark):
     assert pip_join(pts, _square(spark, 0)).count() == 1
 
 
-def test_pip_join_then_extract_pip_collects_polygons_once(spark):
-    sc = spark.sparkContext
+def test_pip_join_then_extract_pip_collects_polygons_once(spark, jobs_run):
     rows = synth.admin_polygons(spark).select("admin_id", "ring").collect()
     polys = spark.createDataFrame(rows, _DDL)
     pages = tables.pages(spark, 200)
     pts = _points(spark)
-    _, n = _jobs_run(sc, "pip_first", lambda: pip_join(pts, polys))
+    _, n = jobs_run("pip_first", lambda: pip_join(pts, polys))
     assert n >= 1, "the polygon collect should run as a job"
-    fused, n = _jobs_run(sc, "fused_second", lambda: extract_pip(pages, polys))
+    fused, n = jobs_run("fused_second", lambda: extract_pip(pages, polys))
     assert n == 0, f"extract_pip re-collected the polygons ({n} jobs)"
     assert fused.count() > 0
 

@@ -123,6 +123,10 @@ _EDGE_ROWS = [
     ("dms_nan_falls_to_meta", _page(_DMS.format(la="0,0,0/0", lar="N",
                                                 lo="1,2,3/4", lor="W")
                                     + _META.format(lat="7.5", lon="8.5"))),
+    # n/0 rational: NaN like 0/0, never inf
+    ("dms_zero_den_falls_to_meta", _page(_DMS.format(la="10,5,3/0", lar="N",
+                                                     lo="1,2,3/4", lor="W")
+                                         + _META.format(lat="7.5", lon="8.5"))),
     # 'nan' content: NaN -> untagged (numpy-kernel NaN-space rule)
     ("meta_nan_string", _page(_META.format(lat="nan", lon="5"))),
     # only one coordinate present -> untagged
@@ -164,6 +168,15 @@ def test_jvm_extraction_matches_arrow_kernel_on_edges(spark):
         assert g[2] == exp[2], (name, g[2], exp[2])
         for v in g[:2]:
             assert v is None or not math.isnan(v), (name, "NaN leaked as value")
+    # a zero seconds denominator falls back to the meta latitude
+    assert got["dms_nan_falls_to_meta"][0] == 7.5
+    assert got["dms_zero_den_falls_to_meta"][0] == 7.5
+
+    # the pandas oracle follows the same per-coordinate rule
+    oracle = extract_geotag_pdf(pd.Series([h for _, h in _EDGE_ROWS]))
+    lat, lon, _ = extract_geotag_pa(arr)
+    np.testing.assert_array_equal(oracle["lat"].to_numpy(), lat)
+    np.testing.assert_array_equal(oracle["lon"].to_numpy(), lon)
 
 
 def test_jvm_extraction_drop_untagged_and_no_text_schema(spark):
@@ -173,7 +186,8 @@ def test_jvm_extraction_drop_untagged_and_no_text_schema(spark):
     kept = extract_geotags(df).select("name").collect()
     assert sorted(r["name"] for r in kept) == sorted(
         ["meta_plain", "dms_plain", "dms_south", "both_dms_wins",
-         "dms_nan_falls_to_meta", "empty_text", "no_text"]
+         "dms_nan_falls_to_meta", "dms_zero_den_falls_to_meta", "empty_text",
+         "no_text"]
     )
     narrow = extract_geotags(df, with_text=False, keep=["name"])
     assert narrow.columns == ["name", "lat", "lon"]

@@ -83,6 +83,78 @@ def test_tile_bounds_roundtrip(spark):
         assert ref_tile_xy(cx, cy, 14) == (r["x"], r["y"])
 
 
+# The Column-built formulas the SQL-text helpers replaced, kept here as the
+# reference: every helper must resolve to the same Catalyst expression, so a
+# decimal literal (a bare 180.0 in SQL text) or a lost cast shows up.
+def _old_tile_x(lon, zoom):
+    n = 2**zoom
+    raw = F.floor((F.col(lon) + F.lit(180.0)) / F.lit(360.0) * F.lit(float(n)))
+    return F.least(F.greatest(raw, F.lit(0)), F.lit(n - 1)).cast("long")
+
+
+def _old_tile_y(lat, zoom):
+    n = 2**zoom
+    lat_r = F.radians(F.col(lat))
+    raw = F.floor(
+        (F.lit(1.0) - F.asinh(F.tan(lat_r)) / F.lit(math.pi)) / F.lit(2.0) * F.lit(float(n))
+    )
+    return F.least(F.greatest(raw, F.lit(0)), F.lit(n - 1)).cast("long")
+
+
+def _old_cell_encode(lon, lat, res):
+    return (
+        F.lit(res).cast("long") * F.lit(1 << 58)
+        + F.shiftleft(_old_tile_x(lon, res), 29)
+        + _old_tile_y(lat, res)
+    ).cast("long")
+
+
+def _old_tile_bounds(x, y, zoom):
+    n = float(2**zoom)
+    x, y = F.col(x).cast("double"), F.col(y).cast("double")
+    west = x / F.lit(n) * F.lit(360.0) - F.lit(180.0)
+    east = (x + F.lit(1.0)) / F.lit(n) * F.lit(360.0) - F.lit(180.0)
+    north = F.degrees(F.atan(F.sinh(F.lit(math.pi) * (F.lit(1.0) - F.lit(2.0) * y / F.lit(n)))))
+    south = F.degrees(
+        F.atan(F.sinh(F.lit(math.pi) * (F.lit(1.0) - F.lit(2.0) * (y + F.lit(1.0)) / F.lit(n))))
+    )
+    return [west, south, east, north]
+
+
+def _old_cell_x(cell):
+    return F.shiftright(F.col(cell), 29) % F.lit(1 << 29)
+
+
+def _old_cell_y(cell):
+    return F.col(cell) % F.lit(1 << 29)
+
+
+def test_sql_text_helpers_resolve_to_the_column_formulas(spark):
+    df = spark.createDataFrame([(1.0, 2.0, 3)], "lon double, lat double, cell long")
+    pairs = [(cells.cell_x("cell"), _old_cell_x("cell")),
+             (cells.cell_y("cell"), _old_cell_y("cell"))]
+    for z in range(29):
+        pairs += [
+            (tiles.tile_x("lon", z), _old_tile_x("lon", z)),
+            (tiles.tile_y("lat", z), _old_tile_y("lat", z)),
+            (cells.cell_encode("lon", "lat", z), _old_cell_encode("lon", "lat", z)),
+        ]
+        pairs += zip(tiles.tile_bounds("cell", "cell", z), _old_tile_bounds("cell", "cell", z))
+    cols = [c.alias(f"c{i}") for pair in pairs for i, c in [(0, pair[0]), (1, pair[1])]]
+    got = df.select(*cols)._jdf.queryExecution().analyzed().projectList()
+    for i in range(0, len(cols), 2):
+        new, old = got.apply(i).child(), got.apply(i + 1).child()
+        assert new.semanticEquals(old), (new.sql(), old.sql())
+
+    # values at every inner z13/z14 tile-edge latitude, where the float path
+    # decides the row (see np_cell_encode)
+    for z in (13, 14):
+        edges = tiles.np_tile_north(np.arange(1, 2**z), z)
+        e = spark.createDataFrame([(float(v),) for v in edges], "lat double")
+        bad = e.filter(tiles.tile_y("lat", z) != _old_tile_y("lat", z)).count()
+        assert bad == 0, f"z{z}: {bad} edge latitudes differ"
+
+
 def test_cell_encode_spark_vs_numpy(spark):
     lon, lat = _sample_lonlat(300, seed=11)
     df = spark.createDataFrame(
@@ -116,7 +188,8 @@ def test_k_ring(spark):
 def test_k_ring_antimeridian_wrap(spark):
     df = spark.createDataFrame([(-179.999, 10.0)], "lon double, lat double")
     out = (
-        df.select(F.explode(cells.k_ring(cells.cell_encode("lon", "lat", 10), 1, 10)).alias("n"))
+        df.select(cells.cell_encode("lon", "lat", 10).alias("c"))
+        .select(F.explode(cells.k_ring("c", 1, 10)).alias("n"))
         .toPandas()
     )
     assert len(out) == 9  # x wraps, nothing dropped

@@ -2,11 +2,13 @@
 
 from __future__ import annotations
 
+import threading
+
 import numpy as np
 import pytest
 
 from landlensdb_spark import synth
-from landlensdb_spark.operators.knn import _auto_res_info, knn_join
+from landlensdb_spark.operators.knn import _auto_res_info, clear_res_cache, knn_join
 
 
 def _points(n, probe=False):
@@ -291,3 +293,68 @@ def test_knn_duplicated_locations_exact(spark, res):
         rows = got[got["probe_id"] == pid]
         assert list(rows["point_id"]) == [j for j, _ in want[pid]], f"probe {pid}"
         assert np.allclose(rows["dist2"].to_numpy(), [d for _, d in want[pid]])
+
+
+def test_knn_construction_cost(spark, jobs_run, monkeypatch):
+    """Pins what knn_join(..., broadcast_probes=False) costs before the
+    caller's action: the density probe is ONE single-stage job (an observe
+    on a noop write; agg(...).first() ran a map job and a result job), the
+    construction runs 8 jobs in all (measured), and the driver crosses py4j
+    a few hundred times, not once per Column node (261 measured; 3,336
+    when every projection was built from F.* Column calls)."""
+    nlon, nlat = _points(1500)
+    plon, plat = _points(80, probe=True)
+    pts = spark.createDataFrame(
+        [(int(i), float(a), float(b)) for i, (a, b) in enumerate(zip(nlon, nlat))],
+        "point_id long, lon double, lat double",
+    )
+    prb = spark.createDataFrame(
+        [(int(i), float(a), float(b)) for i, (a, b) in enumerate(zip(plon, plat))],
+        "probe_id long, lon double, lat double",
+    )
+    clear_res_cache()
+    _, n = jobs_run("knn_density_probe", lambda: _auto_res_info(pts, "lon", "lat", 4))
+    assert n == 1, f"the density probe ran {n} jobs"
+
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    calls = []
+
+    def counting(command, *args, **kwargs):
+        calls.append(command)
+        return send(command, *args, **kwargs)
+
+    clear_res_cache()
+    monkeypatch.setattr(client, "send_command", counting)
+    out, n = jobs_run(
+        "knn_construct", lambda: knn_join(prb, pts, k=4, broadcast_probes=False)
+    )
+    monkeypatch.undo()
+    # "m" commands are py4j memory traffic (proxy deletes), not construction
+    trips = sum(1 for c in calls if not c.startswith("m\n"))
+    assert n <= 8, f"knn_join construction ran {n} jobs"
+    assert trips <= 400, f"knn_join construction made {trips} py4j round trips"
+    assert out.count() == 80 * 4
+
+
+@pytest.mark.parametrize("empty", ["local_relation", "limit_0", "filter_false"])
+def test_auto_res_on_empty_points(spark, empty):
+    """No points: the observed metric still arrives (the optimizer keeps the
+    observation over an empty relation) and the probe answers (12, False)
+    instead of waiting for a metric that never comes."""
+    ddl = "point_id long, lon double, lat double"
+    full = spark.createDataFrame([(0, 1.0, 2.0)], ddl)
+    pts = {
+        "local_relation": lambda: spark.createDataFrame([], ddl),
+        "limit_0": lambda: full.limit(0),
+        "filter_false": lambda: full.filter("false"),
+    }[empty]()
+    clear_res_cache()
+    got = []
+    t = threading.Thread(
+        target=lambda: got.append(_auto_res_info(pts, "lon", "lat", 5)), daemon=True
+    )
+    t.start()
+    t.join(120)
+    assert not t.is_alive(), "the density probe is still waiting for its metric"
+    assert got == [(12, False)]

@@ -199,16 +199,7 @@ def test_pack_token_shards_contiguous(spark):
     assert shard_ids[0] == 0 and len(set(shard_ids)) > 1
 
 
-def _jobs_run(sc, group, fn):
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setJobGroup(None, None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_corpus_prep_and_token_shards_job_counts(spark, sf_dir):
+def test_corpus_prep_and_token_shards_job_counts(spark, sf_dir, jobs_run):
     """Driver round trips are the fixed cost of small corpus runs: the
     construction runs the eager checkpoint (carrying the key quantiles, plus
     the dedup window's shuffle stage as its own AQE job) and one totals
@@ -216,14 +207,13 @@ def test_corpus_prep_and_token_shards_job_counts(spark, sf_dir):
     from landlensdb_spark import tables
     from landlensdb_spark.entry_queries import QUERIES, corpus_prep_over
 
-    sc = spark.sparkContext
     docs = tables.load(spark, sf_dir, "documents")
-    out, n = _jobs_run(sc, "corpus_prep_construct", lambda: corpus_prep_over(docs))
+    out, n = jobs_run("corpus_prep_construct", lambda: corpus_prep_over(docs))
     assert n <= 4, f"corpus_prep_over construction ran {n} jobs"
-    _, n = _jobs_run(sc, "corpus_prep_count", out.count)
+    _, n = jobs_run("corpus_prep_count", out.count)
     assert n <= 2, f"count() over corpus_prep_over ran {n} jobs"
-    _, n = _jobs_run(
-        sc, "token_shards_construct", lambda: QUERIES["token_shards"](spark, sf_dir)
+    _, n = jobs_run(
+        "token_shards_construct", lambda: QUERIES["token_shards"](spark, sf_dir)
     )
     assert n <= 4, f"token_shards construction ran {n} jobs"
 
